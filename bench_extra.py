@@ -77,7 +77,7 @@ def cmd_plans(sf_dir: str, outdir: str, suffix: str) -> None:
     synth = _synth_pages(_sf_from_dir(sf_dir))
     pages = spark.read.parquet(os.path.join(synth, "pages.parquet"))
     claims = spark.read.parquet(os.path.join(synth, "claims.parquet"))
-    plan = extraction_plan(pages, claims, max(cpus * 2, 16), 8, n_parts=cpus * 2)
+    plan = extraction_plan(pages, claims, max(cpus * 2, 16), 8, n_parts=cpus)
     path = os.path.join(outdir, f"extraction_pipeline_{suffix}.txt")
     with open(path, "w") as f:
         f.write(explain_str(plan))

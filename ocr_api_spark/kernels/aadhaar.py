@@ -26,9 +26,6 @@ from ocr_api_spark.kernels.common import (
     split_lines,
 )
 
-# r8: precompiled hot-path patterns (module-level, once per worker)
-_RX0 = re.compile(r"[^0-9 /-]+")
-
 _NUM_SEP = re.compile(r"[^0-9 /-]+")
 _DIGITS_SPACE = re.compile(r"[^0-9 ]+")
 
@@ -80,13 +77,13 @@ def digilocker_aadhaar(text: str) -> dict:
 
         if "date of birth" == clean_line.lower().strip():
             if not extracted_data["ocr_dob"]:
-                dob = _RX0.sub("", lines[i + 1]).strip()
+                dob = _NUM_SEP.sub("", lines[i + 1]).strip()
                 if dob:
                     extracted_data["ocr_dob"] = dob
-                elif _RX0.sub("", lines[i - 1]).strip():
-                    extracted_data["ocr_dob"] = _RX0.sub("", lines[i - 1]).strip()
-                elif _RX0.sub("", lines[i + 2]).strip():
-                    extracted_data["ocr_dob"] = _RX0.sub("", lines[i + 2]).strip()
+                elif _NUM_SEP.sub("", lines[i - 1]).strip():
+                    extracted_data["ocr_dob"] = _NUM_SEP.sub("", lines[i - 1]).strip()
+                elif _NUM_SEP.sub("", lines[i + 2]).strip():
+                    extracted_data["ocr_dob"] = _NUM_SEP.sub("", lines[i + 2]).strip()
 
         # The reference's c/o | s/o | d/o elif chain: identical bodies, each
         # gated on the address still being empty (app.py:694-750).

@@ -215,8 +215,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, n: int, id_col: str = "doc
     the real dedup flow (41.3 vs 9.9 s at sf1.0), because each
     broadcast exchange re-evaluates the operator's input subtree, and
     the real input (docs ⋈ LSH-candidate ids) is expensive to
-    recompute.  first(n_a/n_b) is deterministic: every row of a pair
-    group carries that doc's one size.  Output rows/values are
+    recompute.  min(n_a/n_b) equals that doc's one size (every row of a
+    pair group carries it under unique ids) and stays deterministic if
+    the unique-id precondition is ever violated.  Output rows/values are
     bit-identical to the pre-r8 operator."""
     sh = df.select(F.col(id_col), _shingle_array(text_col, n).alias("__sh")).select(
         id_col,
@@ -231,8 +232,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, n: int, id_col: str = "doc
         .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .agg(
             F.count("*").cast("bigint").alias("overlap"),
-            F.first("a.n_sh").alias("n_a"),
-            F.first("b.n_sh").alias("n_b"),
+            F.min("a.n_sh").alias("n_a"),
+            F.min("b.n_sh").alias("n_b"),
         )
         .withColumn(
             "jaccard",

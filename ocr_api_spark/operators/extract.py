@@ -318,25 +318,6 @@ def match_batch(
     return pd.DataFrame(out, columns=["percentages", "average_match_percentage"])
 
 
-@pandas_udf(MATCH_SCHEMA)
-def match_udf(
-    doc_types: pd.Series,
-    extracted: pd.Series,
-    names: pd.Series,
-    father_names: pd.Series,
-    dobs: pd.Series,
-    pans: pd.Series,
-    adharnos: pd.Series,
-    addresses: pd.Series,
-    ifscs: pd.Series,
-    micrs: pd.Series,
-    accounts: pd.Series,
-) -> pd.DataFrame:
-    return match_batch(
-        doc_types, extracted, names, father_names, dobs, pans, adharnos, addresses, ifscs, micrs, accounts
-    )
-
-
 FULL_SCHEMA = StructType(list(EXTRACT_SCHEMA.fields) + [StructField("match", MATCH_SCHEMA, True)])
 
 
@@ -357,9 +338,9 @@ def fused_extract_udf(
 ) -> pd.DataFrame:
     """Single-crossing stage: boilerplate (when text is empty) + field
     extraction + match fold in ONE Arrow round trip.  The separate
-    ``boilerplate_udf``/``extract_udf``/``match_udf`` remain for
-    composability; the pipeline uses this to avoid shipping page-sized
-    payloads across the JVM↔Python boundary three times."""
+    ``boilerplate_udf``/``extract_udf`` remain for composability; the
+    pipeline uses this to avoid shipping page-sized payloads across the
+    JVM↔Python boundary more than once."""
 
     def resolve(text, html):
         if text:

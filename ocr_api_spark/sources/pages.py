@@ -32,6 +32,24 @@ N_HOSTS = 50
 # synthetic corpora are never reused across versions
 GEN_VERSION = 2
 DOC_FAMILIES = list(GENERATORS.keys())
+# the claims table's columns, in file order (all strings); fixed here so
+# a corpus without document rows still writes the full schema
+CLAIMS_COLUMNS = [
+    "url",
+    "doc_type",
+    "name",
+    "father_name",
+    "dob",
+    "pan",
+    "adharno",
+    "address",
+    "ifsc",
+    "micr",
+    "account_number",
+    "company",
+    "sources",
+    "req_id",
+]
 
 
 def _host(rng: random.Random) -> int:
@@ -93,7 +111,7 @@ def generate_pages(n_rows: int, seed: int = 42, web_fraction: float = 0.4, heavy
                 }
             )
     pages_df = pd.DataFrame(pages)
-    claims_df = pd.DataFrame(claims)
+    claims_df = pd.DataFrame(claims, columns=CLAIMS_COLUMNS)
     golden_df = pd.DataFrame(golden)
     return pages_df, claims_df, golden_df
 
@@ -104,6 +122,8 @@ def write_pages(
     """Write pages/claims/golden parquet under ``out_dir``; returns paths."""
     import os
 
+    import pyarrow as pa
+
     os.makedirs(out_dir, exist_ok=True)
     pages_df, claims_df, golden_df = generate_pages(n_rows, seed, web_fraction, heavy_pages)
     paths = {
@@ -113,6 +133,8 @@ def write_pages(
     }
     # Spark cannot read pandas' default TIMESTAMP(NANOS) parquet type
     pages_df.to_parquet(paths["pages"], index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
-    claims_df.to_parquet(paths["claims"], index=False)
+    # an empty object column would be typed null (Spark reads int32)
+    claims_schema = pa.schema([(c, pa.string()) for c in CLAIMS_COLUMNS])
+    claims_df.to_parquet(paths["claims"], index=False, schema=claims_schema)
     golden_df.to_parquet(paths["golden"], index=False)
     return paths

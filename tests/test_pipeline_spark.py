@@ -330,3 +330,81 @@ def test_torn_lineage_tmp_file_is_invisible(session, synth, tmp_path):
     assert not any(
         f.endswith(".tmp") for f in pipeline._data_files(str(lineage))
     )
+
+
+def test_lineage_read_matches_spark_reader(session, tmp_path):
+    """read_completed_buckets reads lineage with pyarrow on the driver; it
+    must return exactly the bucket set Spark's reader sees, sorted, over
+    several files with repeated buckets, Spark-written files beside
+    them (``_SUCCESS`` and ``.crc`` siblings) and an in-flight temp."""
+    from ocr_api_spark.plans import pipeline
+
+    lineage = tmp_path / "out" / "lineage"
+    pipeline._append_table(str(lineage), {"bucket": [5, 1, 9]})
+    pipeline._append_table(str(lineage), {"bucket": [1, 12]})
+    session.createDataFrame([(9,), (3,)], "bucket int").write.mode("append").parquet(str(lineage))
+    (lineage / ".part-deadbeef.parquet.tmp").write_bytes(b"PAR1 torn garbage")
+    assert any(f.name.startswith("_") for f in lineage.iterdir())
+
+    spark_read = session.read.parquet(str(lineage)).select("bucket").distinct().collect()
+    got = pipeline.read_completed_buckets(session, str(tmp_path / "out"))
+    assert got == sorted(r["bucket"] for r in spark_read) == [1, 3, 5, 9, 12]
+
+
+def test_lineage_read_failures(session, tmp_path):
+    """No lineage table, or one holding only an in-flight temp, means no
+    commits; a damaged committed file must raise, never read as 'first
+    run' (that would re-extract every bucket and duplicate the output)."""
+    import pyarrow as pa
+
+    from ocr_api_spark.plans import pipeline
+
+    out = tmp_path / "out"
+    assert pipeline.read_completed_buckets(session, str(out)) == []
+    lineage = out / "lineage"
+    lineage.mkdir(parents=True)
+    (lineage / ".part-0.parquet.tmp").write_bytes(b"PAR1 torn garbage")
+    assert pipeline.read_completed_buckets(session, str(out)) == []
+
+    pipeline._append_table(str(lineage), {"bucket": [2, 4]})
+    (lineage / "part-corrupt.parquet").write_bytes(b"PAR1 not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        pipeline.read_completed_buckets(session, str(out))
+
+
+def test_udf_stage_runs_one_task_per_core(session, synth, tmp_path):
+    """run_extraction's UDF/write stage defaults to defaultParallelism
+    tasks: every Python task pays a fixed worker setup whatever its row
+    count, so the default is one task per core, not two."""
+    from ocr_api_spark.plans.pipeline import run_extraction
+
+    sc = session.sparkContext
+    sc.setJobGroup("one-task-per-core", "run_extraction task count")
+    try:
+        run_extraction(session, synth["pages"], synth["claims"], str(tmp_path / "out"), n_buckets=16, n_salts=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup("one-task-per-core") for s in tracker.getJobInfo(j).stageIds]
+    write_stage = tracker.getStageInfo(max(stages))  # the last stage run is the write
+    assert write_stage.numTasks == sc.defaultParallelism
+
+
+def test_web_only_corpus_runs(session, tmp_path):
+    """A corpus with no document rows writes a claims table with the full
+    schema and no rows; run_extraction joins it like any other."""
+    import pyarrow.parquet as pq
+
+    from ocr_api_spark.plans.pipeline import run_extraction
+    from ocr_api_spark.sources.pages import CLAIMS_COLUMNS
+
+    paths = write_pages(str(tmp_path / "web"), n_rows=40, seed=7, web_fraction=1.0)
+    claims = pq.read_table(paths["claims"])
+    assert claims.num_rows == 0 and claims.column_names == CLAIMS_COLUMNS
+
+    out = str(tmp_path / "out")
+    stats = run_extraction(session, paths["pages"], paths["claims"], out, n_buckets=4, n_salts=2)
+    assert stats["rows"] == 40
+    got = session.read.parquet(out + "/extracted").select("url", "extracted_text").toPandas()
+    golden = pq.read_table(paths["golden"]).to_pandas()
+    assert dict(zip(got["url"], got["extracted_text"])) == dict(zip(golden["url"], golden["extracted_text"]))
