@@ -72,8 +72,6 @@ BLOCK_TAGS = frozenset(
     }
 )
 
-_WS = re.compile(r"\s+")
-
 # r8 fast-path tag scanner: tag name, then an attribute region this
 # regex can PROVE the stdlib attribute loop would consume in full —
 # bare attributes and single/double-quoted values with no embedded
@@ -117,19 +115,22 @@ class _BlockParser(HTMLParser):
         self._is_headline = False
 
     def _flush(self) -> None:
-        raw = "".join(self._text_parts)
-        text = _WS.sub(" ", raw).strip()
+        # str.split() cuts at exactly the code points regex \s matches
+        # (str.isspace; tests sweep all of Unicode), so " ".join(words)
+        # is re.sub(r"\s+", " ", raw).strip() of the block's raw text
+        words = "".join(self._text_parts).split()
         self._text_parts = []
         link_chars = self._link_chars
         self._link_chars = 0
         is_headline = self._is_headline
         self._is_headline = False
-        if not text:
+        if not words:
             return
+        text = " ".join(words)
         self.blocks.append(
             Block(
                 text=text,
-                num_words=len(text.split(" ")),
+                num_words=len(words),
                 link_chars=link_chars,
                 total_chars=len(text),
                 headline=is_headline,
@@ -200,7 +201,7 @@ class _BlockParser(HTMLParser):
             return
         self._text_parts.append(data)
         if self._anchor_depth:
-            self._link_chars += len(_WS.sub(" ", data).strip())
+            self._link_chars += len(" ".join(data.split()))
 
     def close(self):
         super().close()

@@ -12,7 +12,6 @@ from ocr_api_spark.kernels.common import (
     alpha_space,
     correct_pan_number,
     normalize_dob_format,
-    sanitize_b,
     search_date,
     split_lines,
 )
@@ -40,95 +39,95 @@ def _try_pan_number(clean_line: str) -> str | None:
     return None
 
 
-def extract_pan_data(text: str) -> dict:
-    """New-layout PAN extractor (app.py:567-620): NAME/FATHER label
-    anchoring, first-match DOB, relaxed PAN with repair."""
-    extracted_data = _empty()
+def _scan(text: str) -> tuple[list, list, list, list]:
+    """The per-line reads both layouts share, computed once per text:
+    ``split_lines(text)``, then per line ``sanitize_b(line).upper()``,
+    ``_try_pan_number(sanitize_b(line))`` and ``search_date(sanitize_b(line))``."""
     lines = split_lines(text)
-    for i, line in enumerate(lines):
-        clean_line = sanitize_b(line)
+    # split_lines leaves only charset A, which is charset B plus ",", so
+    # sanitize_b(line) is line.replace(",", "")
+    joined = "\n".join(lines).replace(",", "")
+    clean = joined.split("\n")
+    # neither pattern can match across "\n", so a miss on the joined text
+    # proves no line matches and the per-line pass is skipped
+    pans = [_try_pan_number(c) for c in clean] if _PAN_RELAXED.search(joined) else [None] * len(lines)
+    dates = [search_date(c) for c in clean] if search_date(joined) else [None] * len(lines)
+    return lines, joined.upper().split("\n"), pans, dates
 
-        pan = _try_pan_number(clean_line)
+
+def _finish(extracted_data: dict) -> dict:
+    extracted_data["ocr_name"] = alpha_space(extracted_data["ocr_name"]).strip()
+    extracted_data["ocr_father_name"] = alpha_space(extracted_data["ocr_father_name"]).strip()
+    extracted_data["ocr_pan_number"] = _PAN_CLEAN.sub("", extracted_data["ocr_pan_number"]).strip()
+    return extracted_data
+
+
+def _pan_data(scan: tuple) -> dict:
+    extracted_data = _empty()
+    lines, upper, pans, dates = scan
+    for i, (line, pan, dob_match) in enumerate(zip(lines, pans, dates)):
         if pan is not None:
             extracted_data["ocr_pan_number"] = pan
             continue
-
-        dob_match = search_date(clean_line)
         if dob_match and not extracted_data["ocr_dob"]:
             extracted_data["ocr_dob"] = normalize_dob_format(dob_match)
             continue
-
         if (
-            "NAME" in clean_line.upper()
+            "NAME" in upper[i]
             and i + 1 < len(lines)
             and not extracted_data["ocr_name"]
             and not any(keyword in line for keyword in _NEW_PAN_NAME_EXCLUDE)
         ):
             extracted_data["ocr_name"] = alpha_space(lines[i + 1]).strip()
             continue
-
-        if "FATHER" in clean_line.upper() and i + 1 < len(lines):
+        if "FATHER" in upper[i] and i + 1 < len(lines):
             extracted_data["ocr_father_name"] = alpha_space(lines[i + 1]).strip()
-            continue
 
-    extracted_data["ocr_name"] = alpha_space(extracted_data["ocr_name"]).strip()
-    extracted_data["ocr_father_name"] = alpha_space(extracted_data["ocr_father_name"]).strip()
-    extracted_data["ocr_pan_number"] = _PAN_CLEAN.sub("", extracted_data["ocr_pan_number"]).strip()
-    return extracted_data
+    return _finish(extracted_data)
+
+
+def _old_pan_data(scan: tuple) -> dict:
+    extracted_data = _empty()
+    lines, upper, pans, dates = scan
+    for i, (line, pan, dob_match) in enumerate(zip(lines, pans, dates)):
+        if pan is not None:
+            extracted_data["ocr_pan_number"] = pan
+            continue
+        if dob_match:
+            extracted_data["ocr_dob"] = normalize_dob_format(dob_match)
+            continue
+        if "TAX" in upper[i] and i + 1 < len(lines) and not extracted_data["ocr_name"]:
+            if "INDIA" not in upper[i + 1]:
+                extracted_data["ocr_name"] = alpha_space(lines[i + 1]).strip()
+                # no continue — falls through (reference quirk, app.py:551)
+            elif i + 2 < len(lines):
+                extracted_data["ocr_name"] = alpha_space(lines[i + 2]).strip()
+                continue
+        if extracted_data["ocr_name"] and not extracted_data["ocr_dob"]:
+            extracted_data["ocr_father_name"] = alpha_space(line).strip()
+
+    return _finish(extracted_data)
+
+
+def extract_pan_data(text: str) -> dict:
+    """New-layout PAN extractor (app.py:567-620): NAME/FATHER label
+    anchoring, first-match DOB, relaxed PAN with repair."""
+    return _pan_data(_scan(text))
 
 
 def extract_old_pan_data(text: str) -> dict:
     """Old-layout PAN extractor (app.py:509-564): TAX/INDIA two-line
     anchoring; the father-name line keeps overwriting while a name is
     set and no DOB seen yet (reference quirk, app.py:555-557)."""
-    extracted_data = _empty()
-    lines = split_lines(text)
-    for i, line in enumerate(lines):
-        clean_line = sanitize_b(line)
-
-        pan = _try_pan_number(clean_line)
-        if pan is not None:
-            extracted_data["ocr_pan_number"] = pan
-            continue
-
-        dob_match = search_date(clean_line)
-        if dob_match:
-            extracted_data["ocr_dob"] = normalize_dob_format(dob_match)
-            continue
-
-        if (
-            "TAX" in clean_line.upper()
-            and i + 1 < len(lines)
-            and "INDIA" in sanitize_b(lines[i + 1]).upper()
-            and not extracted_data.get("ocr_name")
-            and i + 2 < len(lines)
-        ):
-            extracted_data["ocr_name"] = alpha_space(lines[i + 2]).strip()
-            continue
-        elif (
-            "TAX" in clean_line.upper()
-            and i + 1 < len(lines)
-            and "INDIA" not in sanitize_b(lines[i + 1]).upper()
-            and not extracted_data.get("ocr_name")
-        ):
-            extracted_data["ocr_name"] = alpha_space(lines[i + 1]).strip()
-            # no continue — falls through (reference quirk, app.py:551)
-
-        if extracted_data.get("ocr_name") and not extracted_data.get("ocr_dob"):
-            extracted_data["ocr_father_name"] = alpha_space(lines[i]).strip()
-            continue
-
-    extracted_data["ocr_name"] = alpha_space(extracted_data["ocr_name"]).strip()
-    extracted_data["ocr_father_name"] = alpha_space(extracted_data["ocr_father_name"]).strip()
-    extracted_data["ocr_pan_number"] = _PAN_CLEAN.sub("", extracted_data["ocr_pan_number"]).strip()
-    return extracted_data
+    return _old_pan_data(_scan(text))
 
 
 def extract_pan(text: str) -> dict:
     """The live cascade (app.py:2170-2178): new-layout first, fall back
     to old-layout when no name, then normalize the DOB."""
-    extracted_data = extract_pan_data(text)
+    scan = _scan(text)
+    extracted_data = _pan_data(scan)
     if not extracted_data.get("ocr_name"):
-        extracted_data = extract_old_pan_data(text)
+        extracted_data = _old_pan_data(scan)
     extracted_data["ocr_dob"] = normalize_dob_format(extracted_data["ocr_dob"])
     return extracted_data

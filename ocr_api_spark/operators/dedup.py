@@ -109,7 +109,11 @@ def minhash_signatures_arr(
     bit-identical output.  The added exchange carries one partially-
     aggregated row per (doc × map partition) — ~32 hex strings × k — so
     at 10^12 docs the shuffle is ∝ doc count, not shingle count; the
-    4× per-byte compute win dominates at every scale."""
+    4× per-byte compute win dominates at every scale.
+
+    Precondition: ``id_col`` is unique per document.  It is not checked
+    (a check costs a Spark job per call).  Rows that share an id get one
+    signature, over the union of their shingles."""
     sh = df.select(
         F.col(id_col), F.explode(_shingle_array(text_col, n, distinct=False)).alias("__s")
     )
@@ -216,9 +220,17 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, n: int, id_col: str = "doc
     broadcast exchange re-evaluates the operator's input subtree, and
     the real input (docs ⋈ LSH-candidate ids) is expensive to
     recompute.  min(n_a/n_b) equals that doc's one size (every row of a
-    pair group carries it under unique ids) and stays deterministic if
-    the unique-id precondition is ever violated.  Output rows/values are
-    bit-identical to the pre-r8 operator."""
+    pair group carries it under unique ids).  Output rows/values are
+    bit-identical to the pre-r8 operator.
+
+    Precondition: ``id_col`` is unique per document.  It is not checked
+    (a check costs a Spark job per call).  Rows that share an id still
+    give one output row per id pair, and its value does not depend on
+    row order or partitioning, but it is not a Jaccard: ``overlap``
+    counts the shared shingles of every row under the id, and ``n_a``/
+    ``n_b`` is the ``F.min`` of those rows' shingle counts, so the
+    value can exceed 1.  When the rows are exact copies the denominator
+    can reach 0, which raises DIVIDE_BY_ZERO under ANSI mode."""
     sh = df.select(F.col(id_col), _shingle_array(text_col, n).alias("__sh")).select(
         id_col,
         F.size("__sh").cast("bigint").alias("n_sh"),

@@ -188,6 +188,8 @@ def extract_batch(texts: pd.Series, doc_types: pd.Series) -> pd.DataFrame:
             row["error"] = "no text"
             rows.append(row)
             continue
+        # claim-less web rows have no doc_type and run the PAN cascade,
+        # the reference endpoint's default extractor
         fn = _DISPATCH.get(doc_type or "pan", _extract_pan)
         try:
             row.update(fn(text))

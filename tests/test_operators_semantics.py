@@ -61,6 +61,40 @@ def test_ngram_jaccard_values(session, near_dup_docs):
     assert (0, 3) not in pairs
 
 
+def test_duplicate_doc_ids_give_the_documented_output(session):
+    """The shingle operators assume unique ids and do not check it; with
+    duplicates they give what their docstrings say, not a silent merge."""
+    from pyspark.errors import ArithmeticException
+
+    from ocr_api_spark.operators.dedup import (
+        minhash_signatures,
+        minhash_signatures_arr,
+        ngram_jaccard_pairs,
+        word_shingles,
+    )
+
+    a = "one two three four five six"  # 4 word 3-grams
+    b = "one two three four seven eight nine"  # 5, of which 2 are in a
+    df = session.createDataFrame([(1, a), (1, b), (2, a)], "doc_id long, text string")
+
+    sh = [tuple(r) for r in word_shingles(df, "text", 3).collect()]
+    assert sorted(sh).count((1, "one two three")) == 2  # one row per input row
+    assert len(sh) == 4 + 5 + 4
+
+    sigs = {r["doc_id"]: tuple(r) for r in minhash_signatures_arr(df, "text", 3, k=4).collect()}
+    assert sorted(sigs) == [1, 2]  # one signature per id, over the union of its rows' shingles
+    assert set(sigs.values()) == {tuple(r) for r in minhash_signatures(word_shingles(df, "text", 3), k=4).collect()}
+
+    # overlap 4 + 2, n_a = min(4, 5), n_b = 4: 6 / (4 + 4 - 6), whatever the row order
+    for frame in (df, session.createDataFrame([(2, a), (1, b), (1, a)], "doc_id long, text string").repartition(3)):
+        rows = [tuple(r) for r in ngram_jaccard_pairs(frame, "text", 3).collect()]
+        assert rows == [(1, 2, 6, 3.0)]
+
+    copies = session.createDataFrame([(1, a), (1, a), (2, a)], "doc_id long, text string")
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):  # 8 / (4 + 4 - 8)
+        ngram_jaccard_pairs(copies, "text", 3).collect()
+
+
 def test_simhash_near_dup_proximity(session, near_dup_docs):
     from ocr_api_spark.operators.dedup import simhash64
 
