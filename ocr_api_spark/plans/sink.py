@@ -12,7 +12,9 @@ resumable mid-flight").
   manifests against the directory — orphan files (present but in no
   manifest: a crashed writer's leftovers) and missing files (manifest
   entries deleted out-of-band) are the two failure modes a 10^12-row
-  table accumulates.
+  table accumulates.  A run killed before it published leaves its
+  private ``_staging/<uuid>/`` write dir behind; ``verify_sink``
+  reports those too, and ``gc_orphans`` reclaims both kinds.
 - ``compact_bucket``: the small-file problem.  A long-running
   append-per-run sink collects many sub-target files per bucket;
   compaction rewrites one bucket to ~``target_mb`` files and records a
@@ -94,10 +96,33 @@ def snapshot_files(out_dir: str) -> set[str]:
     return files
 
 
+def _staging_dirs(out_dir: str) -> list[str]:
+    """``_staging/<uuid>`` write dirs (relative to ``out_dir``) that
+    runs have not published: in flight, or left by a killed run."""
+    root = os.path.join(out_dir, "_staging")
+    if not os.path.isdir(root):
+        return []
+    return sorted(os.path.join("_staging", d) for d in os.listdir(root))
+
+
+def _newest_mtime(path: str) -> float:
+    """Latest mtime anywhere under ``path``: a writer adds files deep in
+    its tree without touching the top dir's mtime."""
+    newest = os.path.getmtime(path)
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            try:
+                newest = max(newest, os.path.getmtime(os.path.join(root, name)))
+            except FileNotFoundError:
+                pass
+    return newest
+
+
 def verify_sink(out_dir: str) -> dict:
     """Reconcile manifests vs the directory.  Orphans = on disk but in
     no live snapshot (crashed/zombie writers); missing = committed but
-    gone (out-of-band deletion).  Both lists are the GC/repair input."""
+    gone (out-of-band deletion); staging = unpublished run write dirs.
+    All three lists are the GC/repair input."""
     base = os.path.join(out_dir, "extracted")
     on_disk = set()
     for root, _dirs, files in os.walk(base):
@@ -110,6 +135,7 @@ def verify_sink(out_dir: str) -> dict:
         "committed": len(committed),
         "orphans": sorted(on_disk - committed),
         "missing": sorted(committed - on_disk),
+        "staging": _staging_dirs(out_dir),
     }
 
 
@@ -199,15 +225,20 @@ def compact_bucket(
 def gc_orphans(out_dir: str, min_age_sec: float = 3600.0) -> list[str]:
     """Repair path for every crash window: delete data files present on
     disk but in no live snapshot (zombie writers, compactions that
-    published before finishing their delete).  ``min_age_sec`` guards
-    in-flight writers — a file younger than the threshold may simply
-    not be committed YET, so the default (1 h) only reclaims files no
-    live run can still be about to publish; pass 0 only when no writer
-    can be running."""
+    published before finishing their delete), and staging dirs of runs
+    that never published.  ``min_age_sec`` guards in-flight writers — a
+    file or staging dir younger than the threshold may simply not be
+    committed YET, so the default (1 h) only reclaims what no live run
+    can still be about to publish; pass 0 only when no writer can be
+    running.  Returns data files relative to ``extracted/`` and staging
+    dirs relative to ``out_dir``."""
+    import shutil
+
     base = os.path.join(out_dir, "extracted")
     now = time.time()
     removed = []
-    for rel in verify_sink(out_dir)["orphans"]:
+    v = verify_sink(out_dir)
+    for rel in v["orphans"]:
         path = os.path.join(base, rel)
         try:
             if now - os.path.getmtime(path) < min_age_sec:
@@ -216,4 +247,13 @@ def gc_orphans(out_dir: str, min_age_sec: float = 3600.0) -> list[str]:
             removed.append(rel)
         except FileNotFoundError:
             pass
+    for rel in v["staging"]:
+        path = os.path.join(out_dir, rel)
+        try:
+            if now - _newest_mtime(path) < min_age_sec:
+                continue
+        except FileNotFoundError:
+            continue  # its run published meanwhile
+        shutil.rmtree(path, ignore_errors=True)
+        removed.append(rel)
     return removed

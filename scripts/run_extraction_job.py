@@ -8,8 +8,9 @@
 The job is resumable: re-submitting with the same --out skips buckets
 already recorded in <out>/lineage.  ``--per-commit`` switches to
 chunked mode (run_extraction_chunked): one lineage commit per bucket
-group, so a mid-flight crash loses at most one group's work — the
-right mode for very long runs; see PROD.md.
+group, two groups in flight at once, so a mid-flight crash loses at
+most the two in-flight groups' work — the right mode for very long
+runs; see PROD.md.
 """
 
 from __future__ import annotations

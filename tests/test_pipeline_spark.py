@@ -217,9 +217,9 @@ def test_bucket_stats_footer_and_mixed_statuses(tmp_path):
 
 def test_chunked_run_kill_between_commits_resumes(session, synth, tmp_path, monkeypatch):
     """run_extraction_chunked commits lineage per bucket group, so a
-    crash between commits loses at most the in-flight group: a re-run
-    completes the rest without re-extracting committed buckets, and the
-    final output equals a clean single-job run byte-for-byte."""
+    crash between commits loses at most the two in-flight groups: a
+    re-run completes the rest without re-extracting committed buckets,
+    and the final output equals a clean single-job run byte-for-byte."""
     from ocr_api_spark.plans import pipeline
 
     ref_out = str(tmp_path / "ref")
@@ -274,6 +274,170 @@ def test_chunked_run_kill_between_commits_resumes(session, synth, tmp_path, monk
         n_buckets=8, buckets_per_commit=2, n_salts=4,
     )
     assert again["groups_run"] == 0 and again["rows"] == 0
+
+
+def _sorted_rows(path: str):
+    """Every column of a bucket-partitioned output, bucket decoded to
+    int, rows in url order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path)
+    i = t.schema.get_field_index("bucket")
+    return t.set_column(i, "bucket", t.column(i).cast(pa.int32())).sort_by("url")
+
+
+@pytest.fixture(scope="module")
+def one_job_8(session, synth, tmp_path_factory):
+    """One uninterrupted run over 8 buckets: the reference a chunked or
+    concurrent output must equal."""
+    from ocr_api_spark.plans.pipeline import run_extraction
+
+    out = str(tmp_path_factory.mktemp("one_job_8"))
+    run_extraction(session, synth["pages"], synth["claims"], out, n_buckets=8, n_salts=4)
+    return _sorted_rows(out + "/extracted")
+
+
+def test_chunked_failure_with_group_in_flight(session, synth, tmp_path, monkeypatch, one_job_8):
+    """A group that fails while its neighbour is writing stops the
+    window: no later group starts, the neighbour still commits (and
+    leaves no staging dir or orphan), the error reaches the caller, and
+    a resume ends equal to one uninterrupted job."""
+    import threading
+    import time
+
+    from ocr_api_spark.plans import pipeline
+    from ocr_api_spark.plans.sink import verify_sink
+
+    out = str(tmp_path / "out")
+    real = pipeline.run_extraction
+    started = []
+    neighbour_running, failed = threading.Event(), threading.Event()
+
+    def flaky(*a, buckets, **kw):
+        started.append(list(buckets))
+        if buckets == [0, 1]:
+            assert neighbour_running.wait(60)
+            time.sleep(0.2)
+            failed.set()
+            raise RuntimeError("simulated group failure")
+        neighbour_running.set()
+        stats = real(*a, buckets=buckets, **kw)
+        # finish after the failure, so the window sees it first
+        assert failed.wait(60)
+        time.sleep(0.2)
+        return stats
+
+    monkeypatch.setattr(pipeline, "run_extraction", flaky)
+    with pytest.raises(RuntimeError, match="simulated group failure"):
+        pipeline.run_extraction_chunked(
+            session, synth["pages"], synth["claims"], out,
+            n_buckets=8, buckets_per_commit=2, n_salts=4,
+        )
+    monkeypatch.setattr(pipeline, "run_extraction", real)
+
+    assert sorted(started) == [[0, 1], [2, 3]]  # nothing submitted after the failure
+    committed = set(pipeline.read_completed_buckets(session, out))
+    assert committed <= {b for g in started for b in g}
+    assert committed == {2, 3}  # the neighbour's commit stands
+    v = verify_sink(out)
+    assert v["orphans"] == [] and v["missing"] == [] and v["staging"] == []
+
+    totals = pipeline.run_extraction_chunked(
+        session, synth["pages"], synth["claims"], out,
+        n_buckets=8, buckets_per_commit=2, n_salts=4,
+    )
+    assert totals["groups_skipped"] == 1 and totals["groups_run"] == 3
+    got = _sorted_rows(out + "/extracted")
+    assert len(set(got.column("url").to_pylist())) == got.num_rows == 300
+    assert got.equals(one_job_8)
+
+
+@pytest.mark.filterwarnings("error")
+def test_concurrent_writers_on_disjoint_buckets(session, synth, tmp_path, one_job_8):
+    """Two run_extraction calls into one out_dir at once, on disjoint
+    buckets: each returns and commits exactly its own rows (metrics,
+    snapshot, lineage), neither warns of a footer mismatch, and the
+    union equals one uninterrupted run."""
+    import json
+    import os
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from ocr_api_spark.plans import pipeline
+
+    out = str(tmp_path / "out")
+    halves = {"a": [0, 1, 2, 3], "b": [4, 5, 6, 7]}
+    barrier = threading.Barrier(len(halves))
+    results, errors = {}, {}
+
+    def writer(name):
+        barrier.wait()
+        try:
+            results[name] = pipeline.run_extraction(
+                session, synth["pages"], synth["claims"], out,
+                n_buckets=8, n_salts=4, buckets=halves[name],
+            )
+        except BaseException as e:  # re-raised below, in the test thread
+            errors[name] = e
+
+    threads = [threading.Thread(target=writer, args=(n,)) for n in halves]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+
+    ref_buckets = one_job_8.column("bucket").to_pylist()
+    ref_rows = {b: ref_buckets.count(b) for b in range(8)}
+    for name, bs in halves.items():
+        assert results[name]["rows"] == sum(ref_rows[b] for b in bs)
+
+    metrics = pq.read_table(os.path.join(out, "metrics")).to_pylist()
+    assert sorted((m["bucket"], m["rows_out"]) for m in metrics) == sorted(ref_rows.items())
+
+    snap_dir = os.path.join(out, "_snapshots")
+    snaps = []
+    for f in os.listdir(snap_dir):
+        with open(os.path.join(snap_dir, f)) as fh:
+            snaps.append(json.load(fh))
+    lineage_dir = os.path.join(out, "lineage")
+    lineage = [pq.read_table(os.path.join(lineage_dir, f)).column("bucket").to_pylist() for f in os.listdir(lineage_dir)]
+    assert sorted(sorted(bs) for bs in lineage) == list(halves.values())
+    by_buckets = {tuple(sorted(b["bucket"] for b in s["buckets"])): s for s in snaps}
+    assert len(snaps) == 2 and sorted(by_buckets) == [tuple(bs) for bs in halves.values()]
+    for name, bs in halves.items():
+        snap = by_buckets[tuple(bs)]
+        assert sum(b["rows_out"] for b in snap["buckets"]) == results[name]["rows"]
+        assert {f.split("/")[0] for f in snap["files"]} == {f"bucket={b}" for b in bs}
+
+    assert _sorted_rows(out + "/extracted").equals(one_job_8)
+    assert not os.listdir(os.path.join(out, "_staging"))
+
+
+def test_chunked_groups_inherit_the_callers_job_group(session, synth, tmp_path):
+    """The caller's local properties reach every group's jobs: with a job
+    group set, each job the chunked run starts belongs to that group,
+    none runs ungrouped."""
+    from ocr_api_spark.plans import pipeline
+
+    sc = session.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("chunked-caller", "chunked run under a caller's job group")
+    try:
+        totals = pipeline.run_extraction_chunked(
+            session, synth["pages"], synth["claims"], str(tmp_path / "out"),
+            n_buckets=8, buckets_per_commit=4, n_salts=4,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert totals["groups_run"] == 2 and totals["rows"] == 300
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    # each group runs at least its write job
+    assert len(tracker.getJobIdsForGroup("chunked-caller")) >= totals["groups_run"]
 
 
 def test_chunked_commits_empty_buckets(session, synth, tmp_path):

@@ -137,3 +137,28 @@ def test_compact_lock_serializes_and_gc_repairs(session, sink):
     assert not os.path.exists(zombie)
     v = verify_sink(out)
     assert v["orphans"] == [] and v["missing"] == []
+
+
+def test_staging_leftovers_reported_and_gc_by_age(tmp_path):
+    """A run killed before it published leaves ``_staging/<uuid>/``:
+    verify_sink reports it, and gc_orphans removes it only once every
+    file in it is older than ``min_age_sec`` (a live writer keeps adding
+    files deep in its tree)."""
+    from ocr_api_spark.plans.sink import gc_orphans, verify_sink
+
+    out = tmp_path / "out"
+    old = os.path.getmtime(tmp_path) - 7200
+    stale, young, busy = (out / "_staging" / name for name in ("dead", "live", "busy"))
+    for d in (stale, young, busy):
+        (d / "bucket=3").mkdir(parents=True)
+        (d / "bucket=3" / "part-0.parquet").write_bytes(b"x")
+    for p in (stale, stale / "bucket=3", stale / "bucket=3" / "part-0.parquet", busy):
+        os.utime(p, (old, old))
+
+    v = verify_sink(str(out))
+    assert v["staging"] == ["_staging/busy", "_staging/dead", "_staging/live"]
+    assert v["orphans"] == [] and v["missing"] == []
+
+    assert gc_orphans(str(out)) == ["_staging/dead"]
+    assert not stale.exists() and young.exists() and busy.exists()
+    assert verify_sink(str(out))["staging"] == ["_staging/busy", "_staging/live"]
