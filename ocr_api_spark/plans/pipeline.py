@@ -9,12 +9,14 @@ Spark job — SURVEY.md §3) with the scale contract of the north_rule:
   n_salts)`` so one hot bucket spreads over many tasks.  The salt only
   affects placement — extraction is pure per-row, so content is
   deterministic regardless of layout.
-- **lineage + metrics**: after the extraction write commits, one row per
-  bucket (rows in/out, failures, wall seconds) is appended to
-  ``metrics``; the set of completed buckets is the ``lineage`` table.
-  A re-run reads lineage first and filters completed buckets out of the
-  *scan* (partition pruning at the source), making a mid-flight kill
-  resumable without duplicates.
+- **lineage + metrics in one commit record**: a run commits by writing
+  one ``_snapshots/`` manifest (``plans/sink.py``) naming its files and,
+  per committed bucket, rows out, failures and wall seconds.  The
+  completed buckets are the union over manifests.  A re-run reads them
+  first, filters them out of the *scan* (partition pruning at the
+  source), and clears whatever an uncommitted run left in the buckets
+  it is about to write, making a kill at any point resumable without
+  duplicates.
 - **write, then publish**: each run writes into a private
   ``out_dir/_staging/<uuid>/`` and renames its files into
   ``extracted/``, so its new files are known without diffing the
@@ -28,6 +30,7 @@ Spark job — SURVEY.md §3) with the scale contract of the north_rule:
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,28 +75,22 @@ def with_salt(df: DataFrame, n_salts: int, hot_hosts: list[str] | None = None) -
 
 
 def read_completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
-    """Buckets already committed (resume input), sorted.  ONLY a missing
-    lineage table means 'first run' — any other read failure must
-    surface, or a corrupt/mixed-schema lineage would silently re-extract
-    every bucket and duplicate the output.
+    """Buckets already committed (resume input), sorted: the union of
+    the bucket entries of every run's manifest.  Compaction manifests
+    rewrite buckets and never commit one.  A damaged manifest raises
+    (``sink.read_manifests``), or the re-run would re-extract every
+    bucket and duplicate the output.  Driver-side JSON reads; ``spark``
+    is unused."""
+    from ocr_api_spark.plans.sink import read_manifests
 
-    The table is a handful of driver-written files (``_append_table``),
-    so it is read with pyarrow on the driver: a Spark job here cost
-    ~0.24 s of scheduling per call, and a chunked resume makes one call
-    per group plus one up front.  Like Spark's reader, files whose names
-    start with ``.`` or ``_`` (in-flight temps, markers) are not part of
-    the table; a directory holding only those has no commits yet."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-
-    lineage_path = os.path.join(out_dir, "lineage")
-    if not os.path.isdir(lineage_path):
-        return []
-    lineage = ds.dataset(lineage_path, format="parquet", ignore_prefixes=[".", "_"])
-    if not lineage.files:
-        return []
-    buckets = pc.unique(lineage.to_table(columns=["bucket"]).column("bucket"))
-    return sorted(int(b) for b in buckets.to_pylist())
+    return sorted(
+        {
+            entry["bucket"]
+            for manifest in read_manifests(out_dir)
+            if not manifest.get("compaction")
+            for entry in manifest["buckets"]
+        }
+    )
 
 
 def extraction_plan(
@@ -264,10 +261,11 @@ def _publish(staging: str, out_path: str) -> set[str]:
     staging dir (Spark's ``_SUCCESS`` and ``.crc`` siblings go with it).
     Spark's part names carry the write job's UUID, so they never
     collide with files already in the table.  Rename is atomic on one
-    filesystem; a kill part-way leaves renamed files that no snapshot
-    lists (``verify_sink`` orphans) and the rest still in staging."""
-    import shutil
-
+    filesystem.  Published files are not yet committed: until the run's
+    manifest names them, a kill leaves them in buckets no manifest
+    lists, and the next run on those buckets deletes them before it
+    writes; a kill part-way also leaves the rest in staging
+    (``gc_orphans``)."""
     published = set()
     for src in _data_files(staging):
         rel = os.path.relpath(src, staging)
@@ -277,53 +275,6 @@ def _publish(staging: str, out_path: str) -> set[str]:
         published.add(dst)
     shutil.rmtree(staging)
     return published
-
-
-def _append_table(dir_path: str, columns: dict) -> None:
-    """Append one parquet file of driver-local rows to a table directory.
-    Column types pin the schema Spark's writer used for these tables
-    (bucket int32, counts int64, wall float64, attempt_ts UTC-adjusted
-    timestamp) so old and new files in one directory always merge."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    types = {
-        "bucket": pa.int32(),
-        "rows_out": pa.int64(),
-        "rows_failed": pa.int64(),
-        "wall_s": pa.float64(),
-        "attempt_ts": pa.timestamp("us", tz="UTC"),
-    }
-    os.makedirs(dir_path, exist_ok=True)
-    table = pa.table(
-        {
-            k: (
-                pa.array([_ts_us(v) for v in vals], type=types[k])
-                if k == "attempt_ts"
-                else pa.array(vals, type=types[k])
-            )
-            for k, vals in columns.items()
-        }
-    )
-    # dot-temp + rename (review r7): a SIGKILL mid-write must not leave
-    # a torn .parquet in lineage/metrics — read_completed_buckets
-    # deliberately surfaces read failures, so a truncated commit file
-    # would brick every subsequent resume.  Dotfiles are invisible to
-    # Spark's reader, read_completed_buckets and _data_files; rename on
-    # one filesystem is atomic, so the table only ever contains whole
-    # files.
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(dir_path, "." + name + ".tmp")
-    pq.write_table(table, tmp)
-    os.rename(tmp, os.path.join(dir_path, name))
-
-
-def _ts_us(epoch_s: float):
-    import datetime
-
-    return datetime.datetime.fromtimestamp(epoch_s, tz=datetime.timezone.utc)
 
 
 def run_extraction(
@@ -341,8 +292,8 @@ def run_extraction(
 
     ``buckets``: restrict this invocation to the given bucket ids (the
     url-hash bucket is deterministic, so a filtered run commits exactly
-    those buckets' lineage).  ``run_extraction_chunked`` uses this to
-    bound the blast radius of a mid-flight failure."""
+    those buckets, the empty ones included).  ``run_extraction_chunked``
+    uses this to bound the blast radius of a mid-flight failure."""
     t0 = time.time()
     from ocr_api_spark.kernels.image import ENGINE_PROP, image_engine
 
@@ -366,6 +317,17 @@ def run_extraction(
     if done:
         pages = pages.filter(~F.col("bucket").isin(done))
     pages = pages.drop("bucket")  # extraction_plan re-derives it
+
+    # No manifest names a bucket in todo, so nothing in its directory is
+    # committed: it holds only files a killed run published before its
+    # manifest.  Clear them, or this run's rows would land beside theirs.
+    # Runs in flight together own disjoint buckets.
+    out_path = os.path.join(out_dir, "extracted")
+    todo = set(range(n_buckets) if buckets is None else map(int, buckets)) - set(done)
+    for b in todo:
+        bucket_dir = os.path.join(out_path, f"bucket={b}")
+        if os.path.isdir(bucket_dir):
+            shutil.rmtree(bucket_dir)
 
     # Repartition on (bucket, salt) happens INSIDE the plan, before the
     # UDF stage: it sets UDF parallelism (a compressed-byte-sized scan
@@ -413,7 +375,6 @@ def run_extraction(
     # this run's commit.  Leading "_": table readers skip the dir, and a
     # killed run's leftover is sink.verify_sink's "staging" (gc_orphans
     # reclaims it).
-    out_path = os.path.join(out_dir, "extracted")
     staging = os.path.join(out_dir, "_staging", uuid.uuid4().hex)
     plan.write.partitionBy("bucket").parquet(staging)
     new_files = _publish(staging, out_path)
@@ -422,44 +383,19 @@ def run_extraction(
     n_rows = int(m["rows_out"] or 0)
     wall_now = round(time.time() - t0, 3)
     stats_rows = _bucket_stats(new_files, wall_now)
+    # A bucket-scoped run commits every requested bucket (review r7): one
+    # that hashes zero urls produces no files, but without an entry
+    # run_extraction_chunked would re-launch that group's full job on
+    # every resume forever.  An unscoped run commits the buckets it
+    # touched (a single job never loops on its commits).
+    if buckets is not None:
+        stats_rows += [(b, 0, 0, wall_now) for b in sorted(todo - {r[0] for r in stats_rows})]
     if stats_rows:
-        # metrics + lineage are driver-local lists (one row per bucket);
-        # writing them through Spark jobs is pure scheduling overhead, so
-        # append single-file parquet directly — spark.read.parquet reads
-        # the directories identically, and the tables stay tiny at any
-        # corpus scale (rows ∝ n_buckets, not data)
-        _append_table(
-            os.path.join(out_dir, "metrics"),
-            {
-                "bucket": [r[0] for r in stats_rows],
-                "rows_out": [r[1] for r in stats_rows],
-                "rows_failed": [r[2] for r in stats_rows],
-                "wall_s": [r[3] for r in stats_rows],
-                "attempt_ts": [time.time()] * len(stats_rows),
-            },
-        )
-        # Iceberg-shaped commit record: which files this run added, with
-        # per-bucket counts (plans/sink.py — verify_sink/compact_bucket
-        # consume these)
+        # the commit: one manifest naming this run's files, with
+        # per-bucket counts (plans/sink.py)
         from ocr_api_spark.plans.sink import write_snapshot
 
         write_snapshot(out_dir, new_files, stats_rows)
-
-    # Lineage commits OUTSIDE the stats_rows gate when this run was
-    # bucket-scoped (review r7): a requested bucket that hashes zero
-    # urls produces no files, but the write that would have contained
-    # it DID commit — without a lineage row, run_extraction_chunked
-    # would re-launch that group's full job on every resume forever.
-    # Unscoped runs keep the old behavior (only touched buckets; a
-    # single job never loops on lineage).
-    lineage_buckets = {r[0] for r in stats_rows}
-    if buckets is not None:
-        lineage_buckets |= set(int(b) for b in buckets) - set(done)
-    if lineage_buckets:
-        _append_table(
-            os.path.join(out_dir, "lineage"),
-            {"bucket": sorted(lineage_buckets)},
-        )
 
     footer_rows = sum(r[1] for r in stats_rows)
     if footer_rows != n_rows:
@@ -510,20 +446,20 @@ def run_extraction_chunked(
 ) -> dict:
     """Resume-granular extraction for very long runs: process buckets in
     groups of ``buckets_per_commit``, each group one ``run_extraction``
-    (one Spark write + one lineage/metrics/snapshot commit).  Two groups
-    run at once, so one group's set-up overlaps the other's job; a new
-    group starts only when one finishes.  A mid-flight kill (OOM,
-    preempted driver, spot reclaim) loses at most the two in-flight
-    groups' work; the next invocation reads lineage and continues from
-    the last commits — this is what "resumable at 10^12 documents"
+    (one Spark write + one manifest commit).  Two groups run at once, so
+    one group's set-up overlaps the other's job; a new group starts only
+    when one finishes.  A mid-flight kill (OOM, preempted driver, spot
+    reclaim) loses at most the two in-flight groups' work; the next
+    invocation reads the manifests and continues from the last
+    commits — this is what "resumable at 10^12 documents"
     means operationally: the unit of redo is a bucket group, not the
     corpus.  Single-job ``run_extraction`` remains the right call when
     the whole corpus fits one job's failure domain.
 
     When a group fails, no further group starts; the other in-flight
     group finishes and commits (its buckets are disjoint, and commit
-    order does not matter: lineage is a set), then the first error is
-    raised.  Each group inherits the caller's Spark local properties
+    order does not matter: the completed buckets are a set), then the
+    first error is raised.  Each group inherits the caller's Spark local properties
     (job group, description, scheduler pool).
 
     Group size trades scheduler overhead (one job per group) against

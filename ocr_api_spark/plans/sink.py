@@ -3,11 +3,13 @@ the parquet-directory emulation of an Iceberg table's commit protocol
 (SURVEY §2.1 S11; north_rule's "checkpointed lineage + metrics …
 resumable mid-flight").
 
-- ``write_snapshot``: every successful ``run_extraction`` commit
-  appends a JSON manifest naming exactly the files it added with their
-  per-bucket row/failed counts.  This is what an Iceberg snapshot's
-  manifest list provides natively; with it, "which files belong to
-  which run" never requires a directory diff again.
+- ``write_snapshot``: the one commit record.  Every successful
+  ``run_extraction`` commit writes a JSON manifest naming exactly the
+  files it added and, per bucket it commits, the row/failed counts and
+  the run's wall seconds.  This is what an Iceberg snapshot's manifest
+  list provides natively; the manifests are the table's lineage (the
+  committed buckets, ``read_manifests``) and its metrics, and with them
+  "which files belong to which run" never requires a directory diff.
 - ``snapshot_files`` / ``verify_sink``: reconcile the union of
   manifests against the directory — orphan files (present but in no
   manifest: a crashed writer's leftovers) and missing files (manifest
@@ -30,7 +32,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
 
 def _snapshot_dir(out_dir: str) -> str:
@@ -44,9 +48,10 @@ def write_snapshot(
     replaces: set[str] | None = None,
     compaction: bool = False,
 ) -> str:
-    """Record one commit: relative file paths + per-bucket stats (and,
-    for compactions, the files this snapshot replaces).  Returns the
-    manifest path — the single publish point for every commit kind."""
+    """Record one commit: relative file paths + per-bucket stats
+    (``(bucket, rows_out, rows_failed, wall_s)`` rows) and, for
+    compactions, the files this snapshot replaces.  Returns the manifest
+    path — the single publish point for every commit kind."""
     snap_dir = _snapshot_dir(out_dir)
     os.makedirs(snap_dir, exist_ok=True)
     seq = len([f for f in os.listdir(snap_dir) if f.endswith(".json")])
@@ -60,7 +65,8 @@ def write_snapshot(
         "ts": time.time(),
         "files": sorted(rel(f) for f in new_files),
         "buckets": [
-            {"bucket": b, "rows_out": r, "rows_failed": fl} for (b, r, fl, _w) in stats_rows
+            {"bucket": b, "rows_out": r, "rows_failed": fl, "wall_s": w}
+            for (b, r, fl, w) in stats_rows
         ],
     }
     if compaction:
@@ -69,8 +75,6 @@ def write_snapshot(
     # uuid suffix: two CONCURRENT committers can compute the same seq
     # (len-of-dir), and an identical filename would let one os.replace
     # silently swallow the other's manifest; the name stays seq-ordered
-    import uuid
-
     path = os.path.join(snap_dir, f"snap-{seq:05d}-{uuid.uuid4().hex[:8]}.json")
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -79,18 +83,27 @@ def write_snapshot(
     return path
 
 
+def read_manifests(out_dir: str) -> list[dict]:
+    """Every published manifest, in commit-sequence order.  A
+    ``.json.tmp`` is a manifest its writer never renamed into place (a
+    kill mid-write), so it is no commit.  A published manifest that does
+    not parse raises: a damaged record must never read as 'no commits'."""
+    snap_dir = _snapshot_dir(out_dir)
+    if not os.path.isdir(snap_dir):
+        return []
+    manifests = []
+    for name in sorted(os.listdir(snap_dir)):
+        if name.endswith(".json"):
+            with open(os.path.join(snap_dir, name)) as f:
+                manifests.append(json.load(f))
+    return manifests
+
+
 def snapshot_files(out_dir: str) -> set[str]:
     """Relative paths of every file any snapshot has committed (minus
     files later replaced by compaction)."""
-    snap_dir = _snapshot_dir(out_dir)
-    if not os.path.isdir(snap_dir):
-        return set()
     files: set[str] = set()
-    for name in sorted(os.listdir(snap_dir)):
-        if not name.endswith(".json"):
-            continue
-        with open(os.path.join(snap_dir, name)) as f:
-            manifest = json.load(f)
+    for manifest in read_manifests(out_dir):
         files |= set(manifest["files"])
         files -= set(manifest.get("replaces", []))
     return files
@@ -123,12 +136,10 @@ def verify_sink(out_dir: str) -> dict:
     no live snapshot (crashed/zombie writers); missing = committed but
     gone (out-of-band deletion); staging = unpublished run write dirs.
     All three lists are the GC/repair input."""
+    from ocr_api_spark.plans.pipeline import _data_files
+
     base = os.path.join(out_dir, "extracted")
-    on_disk = set()
-    for root, _dirs, files in os.walk(base):
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith("."):
-                on_disk.add(os.path.relpath(os.path.join(root, f), base))
+    on_disk = {os.path.relpath(f, base) for f in _data_files(base)}
     committed = snapshot_files(out_dir)
     return {
         "on_disk": len(on_disk),
@@ -157,9 +168,8 @@ def compact_bucket(
     generations are live sees duplicate rows for one listing — is what
     Iceberg's metadata-pointer swap removes; documented emulation
     limit (readers that go through ``snapshot_files`` are unaffected)."""
-    import uuid
-
     from ocr_api_spark.plans import locks
+    from ocr_api_spark.plans.pipeline import _bucket_stats, _data_files
 
     base = os.path.join(out_dir, "extracted")
     bucket_dir = os.path.join(base, f"bucket={bucket}")
@@ -170,11 +180,7 @@ def compact_bucket(
     if lock_token is None:
         return {"bucket": bucket, "compacted": False, "reason": "locked"}
     try:
-        old = [
-            os.path.join(bucket_dir, f)
-            for f in os.listdir(bucket_dir)
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
+        old = sorted(_data_files(bucket_dir))
         total_bytes = sum(os.path.getsize(f) for f in old)
         n_out = max(1, round(total_bytes / (target_mb * 1024 * 1024)))
         if len(old) <= n_out:
@@ -191,19 +197,13 @@ def compact_bucket(
         # promote compacted files in (uuid names: a re-run after a crash
         # can never collide with a previous attempt's survivors)
         gen = uuid.uuid4().hex[:8]
-        for f in os.listdir(tmp_dir):
-            if f.endswith(".parquet") and not f.startswith("."):
-                os.rename(
-                    os.path.join(tmp_dir, f), os.path.join(bucket_dir, f"compact-{gen}-{f}")
-                )
-                new_rel.append(os.path.join(f"bucket={bucket}", f"compact-{gen}-{f}"))
-        import shutil
-
+        for src in _data_files(tmp_dir):
+            name = f"compact-{gen}-{os.path.basename(src)}"
+            os.rename(src, os.path.join(bucket_dir, name))
+            new_rel.append(os.path.join(f"bucket={bucket}", name))
         shutil.rmtree(tmp_dir, ignore_errors=True)
 
         # row/failed counts of the compacted files from their footers/stats
-        from ocr_api_spark.plans.pipeline import _bucket_stats
-
         stats_rows = _bucket_stats({os.path.join(base, f) for f in new_rel}, 0.0)
         # PUBLISH, then delete: from here the old files are logically gone
         write_snapshot(out_dir, set(new_rel), stats_rows, replaces=set(old), compaction=True)
@@ -232,8 +232,6 @@ def gc_orphans(out_dir: str, min_age_sec: float = 3600.0) -> list[str]:
     can still be about to publish; pass 0 only when no writer can be
     running.  Returns data files relative to ``extracted/`` and staging
     dirs relative to ``out_dir``."""
-    import shutil
-
     base = os.path.join(out_dir, "extracted")
     now = time.time()
     removed = []

@@ -5,14 +5,15 @@ corpus (120k pages, the bench generator):
 
 1. ``ref``   — clean single-job ``run_extraction`` → reference output.
 2. ``chunk`` — ``run_extraction_chunked`` (bucket-group commits); the
-   parent watches the lineage table and SIGKILLs the whole process
-   group after the first commit lands — a real crash, not an injected
-   exception: the in-flight group's job dies with the JVM.
-3. ``chunk`` again — resumes from lineage, completes the rest.
+   parent watches ``_snapshots/`` for the first manifest (a commit)
+   and SIGKILLs the whole process group after it lands — a real crash,
+   not an injected exception: the in-flight group's job dies with the
+   JVM.
+3. ``chunk`` again — resumes from the manifests, completes the rest.
 
 Evidence printed as one JSON line and recorded in BENCH/BASELINE.md:
 - buckets committed at kill time, and that the resume run did NOT
-  re-extract them (exactly one metrics row per bucket),
+  re-extract them (each bucket in exactly one run's manifest),
 - final rows == reference rows, zero duplicate urls,
 - per-url extracted_text byte-identical to the reference (md5 over the
   url-sorted concatenation).
@@ -77,11 +78,11 @@ def _run_worker(mode: str, out: str, cpus: int, kill_after_first_commit: bool) -
         text=True,
         start_new_session=True,  # own process group: the kill takes the JVM too
     )
-    lineage = os.path.join(out, "lineage")
+    snapshots = os.path.join(out, "_snapshots")
     if kill_after_first_commit:
         while proc.poll() is None:
-            if os.path.isdir(lineage) and any(
-                f.endswith(".parquet") for f in os.listdir(lineage)
+            if os.path.isdir(snapshots) and any(
+                f.endswith(".json") for f in os.listdir(snapshots)
             ):
                 time.sleep(1.0)  # let the commit finish, land inside the NEXT group
                 try:
@@ -145,13 +146,18 @@ def main() -> None:
 
     n_got, n_ref = got.count(), ref.count()
     dup_urls = got.groupBy("url").count().where(F.col("count") > 1).count()
-    # one metrics row per bucket == committed groups were not re-run
-    metrics = spark.read.parquet(os.path.join(out, "metrics"))
-    re_extracted = (
-        metrics.groupBy("bucket").count().where(F.col("count") > 1).count()
-    )
     h_got, h_ref = corpus_hash(got), corpus_hash(ref)
     spark.stop()
+
+    # each bucket in one run's manifest == committed groups were not re-run
+    from collections import Counter
+
+    from ocr_api_spark.plans.sink import read_manifests
+
+    commits = Counter(
+        e["bucket"] for m in read_manifests(out) if not m.get("compaction") for e in m["buckets"]
+    )
+    re_extracted = sum(1 for n in commits.values() if n > 1)
 
     print(json.dumps({
         "metric": "sf1.0_resume_evidence",

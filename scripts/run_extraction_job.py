@@ -6,11 +6,11 @@
         [--buckets 64] [--salts 8] [--parts N] [--per-commit 16]
 
 The job is resumable: re-submitting with the same --out skips buckets
-already recorded in <out>/lineage.  ``--per-commit`` switches to
-chunked mode (run_extraction_chunked): one lineage commit per bucket
-group, two groups in flight at once, so a mid-flight crash loses at
-most the two in-flight groups' work — the right mode for very long
-runs; see PROD.md.
+already committed by a manifest in <out>/_snapshots.  ``--per-commit``
+switches to chunked mode (run_extraction_chunked): one manifest commit
+per bucket group, two groups in flight at once, so a mid-flight crash
+loses at most the two in-flight groups' work — the right mode for very
+long runs; see PROD.md.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ def main() -> None:
     ap.add_argument("--salts", type=int, default=8)
     ap.add_argument("--parts", type=int, default=None)
     ap.add_argument("--per-commit", type=int, default=None,
-                    help="buckets per lineage commit (chunked resume mode)")
+                    help="buckets per manifest commit (chunked resume mode)")
     args = ap.parse_args()
 
     # spark-submit owns master/conf; only fill test-friendly defaults

@@ -4,7 +4,7 @@
 - column pruning: the scan's ReadSchema excludes unused payload columns
 - dim joins broadcast (BroadcastHashJoin, no shuffle exchange on the dim)
 - the extraction pipeline has exactly ONE ArrowEvalPython stage (fused)
-- the lineage re-run prunes completed buckets at the scan (filter above
+- a resumed run prunes completed buckets at the scan (filter above
   the source, not post-extraction)
 """
 

@@ -216,7 +216,7 @@ def test_bucket_stats_footer_and_mixed_statuses(tmp_path):
 
 
 def test_chunked_run_kill_between_commits_resumes(session, synth, tmp_path, monkeypatch):
-    """run_extraction_chunked commits lineage per bucket group, so a
+    """run_extraction_chunked commits a manifest per bucket group, so a
     crash between commits loses at most the two in-flight groups: a
     re-run completes the rest without re-extracting committed buckets,
     and the final output equals a clean single-job run byte-for-byte."""
@@ -353,17 +353,90 @@ def test_chunked_failure_with_group_in_flight(session, synth, tmp_path, monkeypa
     assert got.equals(one_job_8)
 
 
+class _Killed(Exception):
+    """A simulated process kill at one step of a commit."""
+
+
+@pytest.mark.parametrize("kill", ["mid_publish", "after_publish", "torn_manifest", "after_manifest"])
+def test_kill_at_each_commit_step_resumes(session, synth, tmp_path, monkeypatch, one_job_8, kill):
+    """A chunked run killed at any step of its groups' commits (half the
+    files renamed into the table; all of them; the manifest's temp
+    written but not renamed; the manifest in place) resumes to exactly
+    one uninterrupted job: no url twice, no orphan, nothing missing.
+    Only a run that reached its manifest has committed; whatever a
+    killed group published without one is cleared by the resume, and
+    its staging dir is left to gc_orphans."""
+    import os
+
+    from ocr_api_spark.plans import pipeline, sink
+
+    out = str(tmp_path / "out")
+    real_publish, real_snapshot = pipeline._publish, sink.write_snapshot
+
+    def publish(staging, out_path):
+        if kill == "mid_publish":
+            files = sorted(pipeline._data_files(staging))
+            for src in files[: len(files) // 2]:
+                dst = os.path.join(out_path, os.path.relpath(src, staging))
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
+            raise _Killed(kill)
+        published = real_publish(staging, out_path)
+        if kill == "after_publish":
+            raise _Killed(kill)
+        return published
+
+    def write_snapshot(out_dir, *a, **kw):
+        if kill == "torn_manifest":
+            snap_dir = os.path.join(out_dir, "_snapshots")
+            os.makedirs(snap_dir, exist_ok=True)
+            with open(os.path.join(snap_dir, f"snap-00000-{os.getpid()}.json.tmp"), "a") as f:
+                f.write('{"seq": 0, "files": ["bucket=')
+            raise _Killed(kill)
+        path = real_snapshot(out_dir, *a, **kw)
+        if kill == "after_manifest":
+            raise _Killed(kill)
+        return path
+
+    monkeypatch.setattr(pipeline, "_publish", publish)
+    monkeypatch.setattr(sink, "write_snapshot", write_snapshot)
+    with pytest.raises(_Killed):
+        pipeline.run_extraction_chunked(
+            session, synth["pages"], synth["claims"], out,
+            n_buckets=8, buckets_per_commit=2, n_salts=4,
+        )
+    monkeypatch.undo()
+
+    # both in-flight groups died at the same step; only a manifest commits
+    committed = set(pipeline.read_completed_buckets(session, out))
+    assert committed == ({0, 1, 2, 3} if kill == "after_manifest" else set())
+
+    totals = pipeline.run_extraction_chunked(
+        session, synth["pages"], synth["claims"], out,
+        n_buckets=8, buckets_per_commit=2, n_salts=4,
+    )
+    assert totals["groups_run"] == 4 - len(committed) // 2
+    got = _sorted_rows(out + "/extracted")
+    assert len(set(got.column("url").to_pylist())) == got.num_rows == 300
+    assert got.equals(one_job_8)
+
+    v = sink.verify_sink(out)
+    assert v["orphans"] == [] and v["missing"] == []
+    assert len(v["staging"]) == (2 if kill == "mid_publish" else 0)
+    assert sink.gc_orphans(out, min_age_sec=0) == v["staging"]
+    assert sink.verify_sink(out)["staging"] == []
+
+
 @pytest.mark.filterwarnings("error")
 def test_concurrent_writers_on_disjoint_buckets(session, synth, tmp_path, one_job_8):
     """Two run_extraction calls into one out_dir at once, on disjoint
-    buckets: each returns and commits exactly its own rows (metrics,
-    snapshot, lineage), neither warns of a footer mismatch, and the
-    union equals one uninterrupted run."""
+    buckets: each returns and commits exactly its own rows (one
+    manifest each, with its buckets' rows and its wall seconds), neither
+    warns of a footer mismatch, and the union equals one uninterrupted
+    run."""
     import json
     import os
     import threading
-
-    import pyarrow.parquet as pq
 
     from ocr_api_spark.plans import pipeline
 
@@ -394,22 +467,22 @@ def test_concurrent_writers_on_disjoint_buckets(session, synth, tmp_path, one_jo
     for name, bs in halves.items():
         assert results[name]["rows"] == sum(ref_rows[b] for b in bs)
 
-    metrics = pq.read_table(os.path.join(out, "metrics")).to_pylist()
-    assert sorted((m["bucket"], m["rows_out"]) for m in metrics) == sorted(ref_rows.items())
-
+    # the manifests are the only commit records
+    assert sorted(os.listdir(out)) == ["_snapshots", "_staging", "extracted"]
     snap_dir = os.path.join(out, "_snapshots")
     snaps = []
     for f in os.listdir(snap_dir):
         with open(os.path.join(snap_dir, f)) as fh:
             snaps.append(json.load(fh))
-    lineage_dir = os.path.join(out, "lineage")
-    lineage = [pq.read_table(os.path.join(lineage_dir, f)).column("bucket").to_pylist() for f in os.listdir(lineage_dir)]
-    assert sorted(sorted(bs) for bs in lineage) == list(halves.values())
+    entries = [e for s in snaps for e in s["buckets"]]
+    assert sorted((e["bucket"], e["rows_out"]) for e in entries) == sorted(ref_rows.items())
     by_buckets = {tuple(sorted(b["bucket"] for b in s["buckets"])): s for s in snaps}
     assert len(snaps) == 2 and sorted(by_buckets) == [tuple(bs) for bs in halves.values()]
     for name, bs in halves.items():
         snap = by_buckets[tuple(bs)]
         assert sum(b["rows_out"] for b in snap["buckets"]) == results[name]["rows"]
+        walls = {b["wall_s"] for b in snap["buckets"]}
+        assert len(walls) == 1 and 0 < walls.pop() <= results[name]["wall_s"]
         assert {f.split("/")[0] for f in snap["files"]} == {f"bucket={b}" for b in bs}
 
     assert _sorted_rows(out + "/extracted").equals(one_job_8)
@@ -441,7 +514,7 @@ def test_chunked_groups_inherit_the_callers_job_group(session, synth, tmp_path):
 
 
 def test_chunked_commits_empty_buckets(session, synth, tmp_path):
-    """A bucket that hashes zero urls must still enter lineage when its
+    """A bucket that hashes zero urls must still be committed when its
     group runs (review r7): without that, every resume re-launches the
     group's full job forever and 'further invocation is a no-op' never
     holds at production bucket counts."""
@@ -474,65 +547,87 @@ def test_chunked_commits_empty_buckets(session, synth, tmp_path):
 
 
 def test_torn_lineage_tmp_file_is_invisible(session, synth, tmp_path):
-    """A SIGKILL mid-append leaves only a dot-prefixed .tmp in lineage
+    """A kill mid-manifest leaves only a ``.json.tmp`` in ``_snapshots/``
     (the rename is atomic); readers must ignore it rather than brick
     every resume (review r7)."""
-    from ocr_api_spark.plans import pipeline
+    from ocr_api_spark.plans import pipeline, sink
 
     out = str(tmp_path / "out")
     pipeline.run_extraction(
         session, synth["pages"], synth["claims"], out, n_buckets=8, n_salts=4
     )
     committed = set(pipeline.read_completed_buckets(session, out))
+    files = sink.snapshot_files(out)
+    assert committed == set(range(8))
 
-    # simulate the torn write: a half-written temp from a killed append
-    lineage = tmp_path / "out" / "lineage"
-    (lineage / ".part-deadbeef.parquet.tmp").write_bytes(b"PAR1 torn garbage")
+    # simulate the torn write: a half-written temp from a killed commit
+    torn = tmp_path / "out" / "_snapshots" / "snap-00001-deadbeef.json.tmp"
+    torn.write_text('{"seq": 1, "files": ["bucket=')
 
     assert set(pipeline.read_completed_buckets(session, out)) == committed
-    # and the maintenance dir-diff ignores it too
-    assert not any(
-        f.endswith(".tmp") for f in pipeline._data_files(str(lineage))
-    )
+    assert sink.snapshot_files(out) == files
+    v = sink.verify_sink(out)
+    assert v["orphans"] == [] and v["missing"] == []
 
 
 def test_lineage_read_matches_spark_reader(session, tmp_path):
-    """read_completed_buckets reads lineage with pyarrow on the driver; it
-    must return exactly the bucket set Spark's reader sees, sorted, over
-    several files with repeated buckets, Spark-written files beside
-    them (``_SUCCESS`` and ``.crc`` siblings) and an in-flight temp."""
-    from ocr_api_spark.plans import pipeline
+    """read_completed_buckets reads the manifests on the driver; it must
+    return exactly the bucket set Spark's JSON reader sees in the
+    published manifests, sorted: the union over runs, zero-row entries
+    included, compaction manifests and an in-flight temp excluded.  A
+    compaction of a bucket no run committed does not commit it."""
+    import pandas as pd
+    from pyspark.sql import functions as F
 
-    lineage = tmp_path / "out" / "lineage"
-    pipeline._append_table(str(lineage), {"bucket": [5, 1, 9]})
-    pipeline._append_table(str(lineage), {"bucket": [1, 12]})
-    session.createDataFrame([(9,), (3,)], "bucket int").write.mode("append").parquet(str(lineage))
-    (lineage / ".part-deadbeef.parquet.tmp").write_bytes(b"PAR1 torn garbage")
-    assert any(f.name.startswith("_") for f in lineage.iterdir())
+    from ocr_api_spark.plans import pipeline, sink
 
-    spark_read = session.read.parquet(str(lineage)).select("bucket").distinct().collect()
-    got = pipeline.read_completed_buckets(session, str(tmp_path / "out"))
-    assert got == sorted(r["bucket"] for r in spark_read) == [1, 3, 5, 9, 12]
+    out = tmp_path / "out"
+    sink.write_snapshot(str(out), set(), [(5, 10, 0, 1.0), (1, 3, 1, 1.0), (9, 0, 0, 1.0)])
+    sink.write_snapshot(str(out), set(), [(1, 2, 0, 2.0), (12, 0, 0, 2.0)])
+    sink.write_snapshot(str(out), set(), [(3, 4, 0, 0.0)], replaces=set(), compaction=True)
+    snap_dir = out / "_snapshots"
+    (snap_dir / "snap-00003-deadbeef.json.tmp").write_text('{"seq": 3, "buckets": [{"bucket": 7')
+
+    spark_read = (
+        session.read.json(str(snap_dir / "*.json"))
+        .where(F.col("compaction").isNull())
+        .select(F.explode("buckets.bucket").alias("bucket"))
+        .distinct()
+        .collect()
+    )
+    got = pipeline.read_completed_buckets(session, str(out))
+    assert got == sorted(r["bucket"] for r in spark_read) == [1, 5, 9, 12]
+
+    # data a killed run published into bucket 7 without a manifest
+    bucket_dir = out / "extracted" / "bucket=7"
+    bucket_dir.mkdir(parents=True)
+    for i in range(2):
+        pd.DataFrame({"url": [f"u{i}"], "status": ["Completed"]}).to_parquet(
+            bucket_dir / f"part-{i}.parquet", index=False
+        )
+    assert sink.compact_bucket(session, str(out), 7)["compacted"]
+    assert pipeline.read_completed_buckets(session, str(out)) == got
 
 
 def test_lineage_read_failures(session, tmp_path):
-    """No lineage table, or one holding only an in-flight temp, means no
-    commits; a damaged committed file must raise, never read as 'first
-    run' (that would re-extract every bucket and duplicate the output)."""
-    import pyarrow as pa
+    """No manifest, or only an in-flight temp, means no commits; a
+    damaged published manifest must raise, never read as 'first run'
+    (that would re-extract every bucket and duplicate the output)."""
+    import json
 
-    from ocr_api_spark.plans import pipeline
+    from ocr_api_spark.plans import pipeline, sink
 
     out = tmp_path / "out"
     assert pipeline.read_completed_buckets(session, str(out)) == []
-    lineage = out / "lineage"
-    lineage.mkdir(parents=True)
-    (lineage / ".part-0.parquet.tmp").write_bytes(b"PAR1 torn garbage")
+    snap_dir = out / "_snapshots"
+    snap_dir.mkdir(parents=True)
+    (snap_dir / "snap-00000-deadbeef.json.tmp").write_text('{"seq": 0, "bu')
     assert pipeline.read_completed_buckets(session, str(out)) == []
 
-    pipeline._append_table(str(lineage), {"bucket": [2, 4]})
-    (lineage / "part-corrupt.parquet").write_bytes(b"PAR1 not a parquet file")
-    with pytest.raises(pa.ArrowInvalid):
+    sink.write_snapshot(str(out), set(), [(2, 1, 0, 1.0), (4, 0, 0, 1.0)])
+    assert pipeline.read_completed_buckets(session, str(out)) == [2, 4]
+    (snap_dir / "snap-00001-corrupt0.json").write_text('{"seq": 1, "buckets": [{"bu')
+    with pytest.raises(json.JSONDecodeError):
         pipeline.read_completed_buckets(session, str(out))
 
 
