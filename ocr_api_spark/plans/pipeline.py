@@ -335,12 +335,15 @@ def run_extraction(
     # input bytes instead of extracted structs, and aligns tasks with the
     # bucket-partitioned sink (n_parts files, not n_tasks × n_buckets).
     # One partition per core, not two: each Python task pays a fixed
-    # worker setup (PySpark's setup_spark_files → importlib.
-    # invalidate_caches, ~0.3 CPU-s per task on CPython 3.11) whatever
-    # its row count.  A second wave of tasks bought no balance (the
-    # range sampler keeps partitions within ~4% of the mean) and cost
-    # one more setup per core per job: perfbench on 4 vCPUs, local[4],
-    # medians of 12 seeds, resume_chunked 2,284 → 3,330 docs/s.
+    # set-up whatever its row count, and a second wave of tasks buys no
+    # balance (the range sampler keeps partitions within ~4% of the
+    # mean).  That set-up was ~0.3 s of a core per task while workers
+    # imported PySpark from pyspark.zip, and is ~0.08 s under
+    # plans.worker_daemon (a pass-through pandas UDF over 4,000 rows,
+    # 16 tasks against 4, local[4]).  Two per core still lost: perfbench
+    # on 4 vCPUs, local[4], medians, resume_chunked 5,716 → 4,958
+    # docs/s (6 pairs, all lost), crawl_mixed 2,063 → 2,050 (4 pairs,
+    # 1 won).
     n_parts = repartition or spark.sparkContext.defaultParallelism
     plan = extraction_plan(pages, claims, n_buckets, n_salts, n_parts=n_parts)
 
@@ -431,7 +434,9 @@ def run_extraction(
 # 4 vCPUs, local[4], medians of 10 seeds, 3,364 → 4,355 docs/s.  Two is
 # the smallest width that overlaps one group's set-up with another's
 # run; a wider window adds in-flight broadcasts, memory and
-# redo-on-kill for idle time two already covers.
+# redo-on-kill for idle time two already covers.  Re-measured with the
+# workers on plans.worker_daemon, against two: one in flight 5,759 →
+# 4,447 docs/s (4 pairs, all lost), three 5,974 → 5,865 (6 pairs, 2 won).
 _GROUPS_IN_FLIGHT = 2
 
 

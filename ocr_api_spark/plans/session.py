@@ -4,13 +4,39 @@ Scale posture (north_rule): AQE on (runtime coalescing + skew-join
 splitting), Arrow batches sized for text payloads, shuffle partitions
 matched to the core count at local scale (a cluster deploy overrides
 via spark-submit --conf; nothing here hard-codes local mode).
+Python workers start from ``plans.worker_daemon`` (unpacked PySpark
+instead of pyspark.zip) only where the driver can see they will import
+it: a local master and the package imported from a directory its
+workers inherit on their path; anywhere else PySpark's own daemon runs.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+import ocr_api_spark
+
+_DAEMON_MODULE = "ocr_api_spark.plans.worker_daemon"
+
+
+def _workers_import_package(master: str) -> bool:
+    """Whether Python workers can import ``_DAEMON_MODULE``.  If they
+    cannot, every Python task fails, so this asks for what the driver
+    can see: a ``local`` master, whose workers are children of the JVM
+    and inherit its cwd (first on a ``python -m`` path) and
+    ``PYTHONPATH``, and the package imported from a directory (not a
+    ``--py-files`` zip) whose parent is one of the two."""
+    if not re.fullmatch(r"local(\[.*\])?", master):
+        return False
+    pkg_dir = os.path.dirname(os.path.abspath(ocr_api_spark.__file__))
+    if not os.path.isdir(pkg_dir):  # inside a zip
+        return False
+    root = os.path.realpath(os.path.dirname(pkg_dir))
+    roots = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(r and os.path.realpath(r) == root for r in roots)
 
 
 def build_session(
@@ -43,6 +69,9 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    if _workers_import_package(extra_conf.get("spark.master", master)):
+        builder = builder.config("spark.python.daemon.module", _DAEMON_MODULE)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -33,7 +33,9 @@ def main() -> None:
                     help="buckets per manifest commit (chunked resume mode)")
     args = ap.parse_args()
 
-    # spark-submit owns master/conf; only fill test-friendly defaults
+    # spark-submit owns master and conf: this sets only the app name.
+    # The package arrives in the --py-files zip, so the workers keep
+    # PySpark's own daemon (see PROD.md, Launch)
     spark = SparkSession.builder.appName("ocr_api_spark.extraction").getOrCreate()
     from ocr_api_spark.plans.pipeline import run_extraction, run_extraction_chunked
 
