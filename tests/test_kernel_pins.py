@@ -1,8 +1,8 @@
 """The text kernels' outputs match the digests in tests/data/kernel_pins.json.
 
-The pins were written by ``scripts/pin_kernels.py`` before the PAN and
-boilerplate kernels were last rewritten; a rewrite must leave every
-digest unchanged.  No Spark.
+The pins were written by ``scripts/pin_kernels.py`` before the kernels
+they cover were last rewritten; a rewrite must leave every digest
+unchanged.  No Spark.
 """
 
 from __future__ import annotations
@@ -24,5 +24,7 @@ def test_pins_cover_every_kernel_and_render_stably():
     pinned = json.loads(text)
     assert render(pinned) == text
     for cls, entry in pinned.items():
-        assert set(entry) == set(KERNELS) | {"n"}, cls
+        # the document classes also pin match_batch over their claims
+        batch = {"match_batch"} if cls.startswith("doc.") else set()
+        assert set(entry) == set(KERNELS) | {"n"} | batch, cls
         assert entry["n"] > 0, cls
