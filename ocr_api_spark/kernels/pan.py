@@ -7,6 +7,7 @@ Ports of ``extract_pan_data`` (app.py:567-620), ``extract_old_pan_data``
 from __future__ import annotations
 
 import re
+import string
 
 from ocr_api_spark.kernels.common import (
     alpha_space,
@@ -21,6 +22,13 @@ _PAN_STRICT = re.compile(r"[A-Z]{5}[0-9]{4}[A-Z]")
 _PAN_CLEAN = re.compile(r"[^A-Z0-9]+")
 
 _NEW_PAN_NAME_EXCLUDE = ["GOVT.", "INCOME TAX", "PERMANENT ACCOUNT NUMBER", "CARD", "DATE OF BIRTH", "FATHER"]
+
+# The bytes _scan's lines are made of: split_lines keeps charset A
+# ([A-Za-z0-9 /,\n-], every non-ASCII character deleted) and _scan drops ",".
+_UNKEPT = bytes(c for c in range(256) if c not in (string.ascii_letters + string.digits + " /\n-").encode())
+# upper-case letters read as "A", digits as "0", "-" as "/"
+_SHAPE = bytes.maketrans((string.ascii_uppercase + string.digits + "-").encode(), b"A" * 26 + b"0" * 10 + b"/")
+_UPPER = bytes.maketrans(string.ascii_lowercase.encode(), string.ascii_uppercase.encode())
 
 
 def _empty() -> dict:
@@ -39,7 +47,30 @@ def _try_pan_number(clean_line: str) -> str | None:
     return None
 
 
+def _holds_evidence(text: str) -> bool:
+    """False only when no line of ``_scan`` can hold a relaxed PAN (five
+    [A-Z] in a row), a date (``\\d\\d[-/]\\d\\d[-/]\\d\\d\\d\\d``) or a NAME,
+    FATHER or TAX anchor.  None of these contains a space or a newline,
+    so the sanitised text can be searched whole: a miss there is a miss
+    on every line."""
+    raw = text.encode("ascii", "ignore")
+    shape = raw.translate(_SHAPE, _UNKEPT)
+    if b"AAAAA" in shape or b"00/00/0000" in shape:
+        return True
+    upper = raw.translate(_UPPER, _UNKEPT)
+    return b"NAME" in upper or b"FATHER" in upper or b"TAX" in upper
+
+
 def _scan(text: str) -> tuple[list, list, list, list]:
+    """``_scan_lines(text)``, except that a text without evidence scans
+    as no lines: both layouts read the all-empty result off those, as
+    they would off its lines."""
+    if not _holds_evidence(text):
+        return [], [], [], []
+    return _scan_lines(text)
+
+
+def _scan_lines(text: str) -> tuple[list, list, list, list]:
     """The per-line reads both layouts share, computed once per text:
     ``split_lines(text)``, then per line ``sanitize_b(line).upper()``,
     ``_try_pan_number(sanitize_b(line))`` and ``search_date(sanitize_b(line))``."""

@@ -723,7 +723,7 @@ def _connected_components_star(
         # large-star over the symmetric neighborhood: m = min(N(u) ∪ u),
         # every neighbor v > u re-attaches as (v, m)
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
         # (no self-loop filter needed: the new edge is (old v, m) with
         # m <= old u < old v, so its endpoints always differ)
         large = (

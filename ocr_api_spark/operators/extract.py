@@ -189,7 +189,9 @@ def extract_batch(texts: pd.Series, doc_types: pd.Series) -> pd.DataFrame:
             rows.append(row)
             continue
         # claim-less web rows have no doc_type and run the PAN cascade,
-        # the reference endpoint's default extractor
+        # the reference endpoint's default extractor; a text with no PAN,
+        # date or NAME/FATHER/TAX anchor (most web text) returns empty
+        # from one pass, without building lines
         fn = _DISPATCH.get(doc_type or "pan", _extract_pan)
         try:
             row.update(fn(text))

@@ -119,3 +119,37 @@ def test_regex_whitespace_class_is_str_isspace():
     and re.sub(r"\\s+", ...) cut at the same places."""
     ws = re.compile(r"\s")
     assert not [hex(cp) for cp in range(0x110000) if (ws.fullmatch(chr(cp)) is not None) != chr(cp).isspace()]
+
+
+# text that often holds, or nearly holds, what the PAN cascade reads:
+# PAN and date tokens, anchors in any case, and characters sanitisation
+# deletes (",", ".", "·", non-ASCII) inside any of them
+evidence_text = st.lists(
+    st.one_of(
+        st.sampled_from(
+            ["ABCDE1234F", "ABCDE", "ABCD", "12/05/1990", "12-05-1990", "12/05", "/1990", "NAME", "name", "Na.me",
+             "FATHER", "fat·her", "TAX", "T,AX", "ta", "x", "é", ",", "·", " ", "\n", "\r", "\xa0", "0", "9"]
+        ),
+        st.text(odd_chars, max_size=6),
+    ),
+    max_size=30,
+).map("".join)
+
+
+@given(evidence_text)
+@settings(max_examples=1000, deadline=None)
+def test_pan_emptiness_check_never_hides_evidence(s):
+    """``_holds_evidence`` says "none" only when no line of the full scan
+    holds a relaxed PAN, a date or an anchor, and then every PAN layout
+    reads the all-empty result the full scan gives."""
+    lines, upper, _, _ = pan._scan_lines(s)
+    clean = [line.replace(",", "") for line in lines]
+    found = (
+        any(pan._PAN_RELAXED.search(c) or common.search_date(c) for c in clean)
+        or any("NAME" in u or "FATHER" in u or "TAX" in u for u in upper)
+    )
+    if found:
+        assert pan._holds_evidence(s)
+    full = pan._scan_lines(s)
+    assert pan._pan_data(pan._scan(s)) == pan._pan_data(full)
+    assert pan._old_pan_data(pan._scan(s)) == pan._old_pan_data(full)
