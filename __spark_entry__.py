@@ -41,7 +41,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the extraction spine over sf0.001 ``documents`` —
     scan → JVM text features → Arrow extraction UDF → struct output.
     (The byte-identical pages pipeline is exercised in tests/ and bench.)"""
-    from ocr_api_spark.operators.extract import extract_udf
+    from ocr_api_spark.operators.extract import with_extraction
     from ocr_api_spark.operators.textstats import (
         with_fingerprint,
         with_lang_guess,
@@ -51,8 +51,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
     enriched = with_fingerprint(with_lang_guess(with_stopword_ratio(with_quality(docs))))
-    extracted = enriched.withColumn("extraction", extract_udf(F.col("text"), F.lit("pan")))
-    return extracted.select(
+    # no doc_type column: every document runs the PAN cascade
+    return with_extraction(enriched).select(
         "doc_id",
         "lang",
         "source",
@@ -2585,12 +2585,11 @@ WHERE corpus_key = {_CORPUS_KEY_SQL}
 
 
 def _extract_pan_over_documents(spark, sf_dir):
-    from ocr_api_spark.operators.extract import extract_udf
+    from ocr_api_spark.operators.extract import with_extraction
 
     _write_expected_extractions(sf_dir)
-    docs = _t(spark, sf_dir, "documents")
-    ex = docs.withColumn("extraction", extract_udf(F.col("text"), F.lit("pan")))
-    return ex.select(
+    # no doc_type column: every document runs the PAN cascade
+    return with_extraction(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.col("extraction.status").alias("status"),
         F.col("extraction.pan.ocr_name").alias("ocr_name"),
@@ -2602,7 +2601,7 @@ def _extract_all_branches(spark, sf_dir):
     """Every extractor branch (pan/aadhaar/bank/financial/dl/passport)
     exercised distributed, doc_type round-robined by doc_id — checked
     exactly against the driver-side kernel run (differential oracle)."""
-    from ocr_api_spark.operators.extract import extract_udf
+    from ocr_api_spark.operators.extract import with_extraction
 
     _write_expected_extractions(sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 600)
@@ -2610,10 +2609,7 @@ def _extract_all_branches(spark, sf_dir):
         F.array(*[F.lit(t) for t in _BRANCH_TYPES]),
         (F.col("doc_id") % 6 + 1).cast("int"),
     )
-    ex = docs.withColumn("doc_type", doc_type).withColumn(
-        "extraction", extract_udf(F.col("text"), F.col("doc_type"))
-    )
-    return ex.select(
+    return with_extraction(docs.withColumn("doc_type", doc_type)).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "doc_type",
         F.col("extraction.status").alias("status"),

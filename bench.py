@@ -530,7 +530,7 @@ RETRY_SLEEP_SEC = 60
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     attempts: list[dict] = []
     for i in range(MAX_ATTEMPTS):
         result = run_bench(sf_dir, cpus)

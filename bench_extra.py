@@ -61,7 +61,7 @@ def explain_str(df) -> str:
 
 
 def cmd_plans(sf_dir: str, outdir: str, suffix: str) -> None:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     spark = _session(cpus)
     os.makedirs(outdir, exist_ok=True)
     for name, fn in _queries(spark, sf_dir).items():
@@ -86,7 +86,7 @@ def cmd_plans(sf_dir: str, outdir: str, suffix: str) -> None:
 
 
 def cmd_time(sf_dir: str, names: list[str]) -> None:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     spark = _session(cpus)
     qs = _queries(spark, sf_dir)
     out = {}
@@ -108,7 +108,7 @@ def cmd_extract(sf_dir: str) -> None:
     from bench import _sf_from_dir, _synth_pages
     from ocr_api_spark.plans.pipeline import run_extraction
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     spark = _session(cpus)
     sf = _sf_from_dir(sf_dir)
     synth = _synth_pages(sf)
@@ -148,7 +148,7 @@ def cmd_dedup(sf_dir: str) -> None:
         ngram_jaccard_pairs,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     spark = _session(cpus)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).repartition(cpus * 2)
     docs.count()

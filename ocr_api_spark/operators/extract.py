@@ -1,7 +1,9 @@
-"""The extraction and match UDF stages.
+"""The extraction and match UDF stage.
 
-Arrow-batched ``pandas_udf``s wrapping the pure kernels — the only
-Python↔JVM boundaries in the pipeline, amortized per batch.  Regexes
+One Arrow-batched ``pandas_udf`` (``fused_extract_udf``) wraps the pure
+kernels: text resolve, field extraction and match, one Python↔JVM
+crossing amortized per batch.  ``with_extraction`` is the one place a
+frame is wired into it (batch pipeline, stream, entry queries).  Regexes
 compile once per Python worker at module import (the per-executor
 singleton pattern; contrast the reference's per-request PaddleOCR
 construction, app.py:2163 — the single biggest throughput lever noted
@@ -16,6 +18,7 @@ Failed row (app.py:2280).  A poison row never kills a partition.
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
@@ -203,11 +206,6 @@ def extract_batch(texts: pd.Series, doc_types: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=list(EXTRACT_SCHEMA.fieldNames()))
 
 
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_udf(texts: pd.Series, doc_types: pd.Series) -> pd.DataFrame:
-    return extract_batch(texts, doc_types)
-
-
 def _payload_to_text(payload) -> str | None:
     """Binary payload → text: the S4 PDF text layer for ``%PDF`` payloads
     (per-page extract_text + clean_text, app.py:3202-3212 with the §0.1
@@ -226,15 +224,6 @@ def _payload_to_text(payload) -> str | None:
                 return None  # undecodable here -> C4 sends it to the OCR branch
         payload = raw.decode("utf-8", errors="replace")
     return boilerplate.extract_main_text(payload)
-
-
-@pandas_udf(StringType())
-def boilerplate_udf(htmls: pd.Series) -> pd.Series:
-    """binary payload → main-content text (HTML boilerplate strip, or the
-    PDF text layer for %PDF payloads).  Null-propagating, so wiring it
-    as ``coalesce(nullif(text, ''), boilerplate_udf(when(text='', html)))``
-    only pays the parse for rows that need it."""
-    return htmls.map(_payload_to_text)
 
 
 def match_batch(
@@ -341,10 +330,9 @@ def fused_extract_udf(
     accounts: pd.Series,
 ) -> pd.DataFrame:
     """Single-crossing stage: boilerplate (when text is empty) + field
-    extraction + match fold in ONE Arrow round trip.  The separate
-    ``boilerplate_udf``/``extract_udf`` remain for composability; the
-    pipeline uses this to avoid shipping page-sized payloads across the
-    JVM↔Python boundary more than once."""
+    extraction + match fold in ONE Arrow round trip, so a page-sized
+    payload crosses the JVM↔Python boundary once.  Wire it with
+    ``with_extraction``."""
 
     def resolve(text, html):
         if text:
@@ -375,14 +363,37 @@ def fused_extract_udf(
     return out
 
 
-def resolve_text_column(df):
-    """``coalesce(nullif(text,''), boilerplate(html))`` — the C4-style
-    lazy fallback: HTML parsing only runs for rows without text, and the
-    parquet scan can prune ``html`` entirely when every row has text."""
-    needs_html = F.when(
-        F.col("text").isNull() | (F.length("text") == 0), F.col("html")
-    )
+# The claims columns a joined frame carries.  The first nine are the
+# match inputs, in fused_extract_udf's argument order.
+CLAIM_COLS = [
+    "name",
+    "father_name",
+    "dob",
+    "pan",
+    "adharno",
+    "address",
+    "ifsc",
+    "micr",
+    "account_number",
+    "company",
+    "sources",
+    "req_id",
+]
+
+
+def with_extraction(df: DataFrame) -> DataFrame:
+    """``df`` plus an ``extraction`` struct (``FULL_SCHEMA``) from one
+    ``fused_extract_udf`` call: the single way a frame feeds the fused
+    stage, for the batch pipeline, the stream and the entry queries.
+
+    ``html`` reaches the UDF only where ``text`` is null or empty (the
+    C4-style lazy fallback), so the HTML parse runs only for rows
+    without text.  An input column ``df`` lacks (``html``, ``doc_type``,
+    a claim) is added to it as a null string: a null ``doc_type`` runs
+    the PAN cascade, and a null claim scores no match."""
+    inputs = ["html", "doc_type", *CLAIM_COLS[:9]]
+    df = df.withColumns({c: F.lit(None).cast("string") for c in inputs if c not in df.columns})
+    html_when_needed = F.when(F.col("text").isNull() | (F.length("text") == 0), F.col("html"))
     return df.withColumn(
-        "resolved_text",
-        F.coalesce(F.nullif(F.col("text"), F.lit("")), boilerplate_udf(needs_html)),
+        "extraction", fused_extract_udf("text", html_when_needed, *inputs[1:])
     )

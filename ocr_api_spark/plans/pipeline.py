@@ -36,41 +36,15 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_api_spark.operators.extract import fused_extract_udf
-
-CLAIM_COLS = [
-    "name",
-    "father_name",
-    "dob",
-    "pan",
-    "adharno",
-    "address",
-    "ifsc",
-    "micr",
-    "account_number",
-    "company",
-    "sources",
-    "req_id",
-]
+# CLAIM_COLS is also imported from here (perfbench)
+from ocr_api_spark.operators.extract import CLAIM_COLS, with_extraction  # noqa: F401
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
 
-def with_salt(df: DataFrame, n_salts: int, hot_hosts: list[str] | None = None) -> DataFrame:
-    """Uniform salt by default; when a hot-host list is supplied (from
-    ``plans.skew.hot_hosts``), only those hosts get salted — cold hosts
-    keep salt 0 so their files stay consolidated."""
-    if hot_hosts:
-        from ocr_api_spark.plans.skew import host_col
-
-        salted = F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_salts)).cast("int")
-        hot_arr = F.array(*[F.lit(h) for h in hot_hosts])
-        return df.withColumn(
-            "salt",
-            F.when(F.array_contains(hot_arr, host_col(F.col("url"))), salted).otherwise(F.lit(0)),
-        )
+def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
     return df.withColumn("salt", F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_salts)).cast("int"))
 
 
@@ -100,17 +74,18 @@ def extraction_plan(
     n_salts: int,
     n_parts: int | None = None,
     broadcast_claims: bool = True,
-    hot_hosts: list[str] | None = None,
 ) -> DataFrame:
     """Build the logical plan: bucket+salt, repartition the *raw* pages
     (parallelism for the UDF stage + alignment for the bucket-partitioned
     sink — and the shuffle moves input bytes, not extracted structs),
-    join claims, resolve text (HTML branch lazy), extract, match.
+    left-join claims, then ``with_extraction``: resolve text (HTML branch
+    lazy), extract and match in one Arrow stage.  Without claims,
+    ``doc_type`` and every match are null.
 
     ``broadcast_claims``: claims are per-url facts; at test scale they
     broadcast, at 10^12 scale disable this and co-bucket both tables so
     the join is shuffle-free."""
-    pages = with_salt(with_bucket(pages, n_buckets), n_salts, hot_hosts)
+    pages = with_salt(with_bucket(pages, n_buckets), n_salts)
     if n_parts:
         # r8 (guide §6 file sizing + §2.5): RANGE partition on (bucket,
         # salt) instead of hash.  Hash scattered every bucket's n_salts
@@ -128,48 +103,10 @@ def extraction_plan(
         pages = pages.repartitionByRange(n_parts, "bucket", "salt")
     if claims is not None:
         right = F.broadcast(claims) if broadcast_claims else claims
-        joined = pages.join(right, "url", "left")
-    else:
-        joined = pages
-        for c in ["doc_type", *CLAIM_COLS]:
-            joined = joined.withColumn(c, F.lit(None).cast("string"))
-
-    # fused single Arrow crossing: boilerplate + extract + match
-    html_when_needed = F.when(F.col("text").isNull() | (F.length("text") == 0), F.col("html"))
-    extracted = joined.withColumn(
-        "extraction",
-        fused_extract_udf(
-            F.col("text"),
-            html_when_needed,
-            F.col("doc_type"),
-            F.col("name"),
-            F.col("father_name"),
-            F.col("dob"),
-            F.col("pan"),
-            F.col("adharno"),
-            F.col("address"),
-            F.col("ifsc"),
-            F.col("micr"),
-            F.col("account_number"),
-        ),
-    )
-    return extracted.select(
-        "url",
-        "warc_ts",
-        "lang",
-        "bucket",
-        "salt",
-        "doc_type",
-        F.col("extraction.extracted_text").alias("extracted_text"),
-        F.col("extraction.status").alias("status"),
-        F.col("extraction.error").alias("error"),
-        F.col("extraction.pan").alias("pan"),
-        F.col("extraction.aadhaar").alias("aadhaar"),
-        F.col("extraction.bank").alias("bank"),
-        F.col("extraction.financial").alias("financial"),
-        F.col("extraction.dl").alias("dl"),
-        F.col("extraction.passport").alias("passport"),
-        F.col("extraction.match").alias("match"),
+        pages = pages.join(right, "url", "left")
+    # FULL_SCHEMA's field order is the output order after doc_type
+    return with_extraction(pages).select(
+        "url", "warc_ts", "lang", "bucket", "salt", "doc_type", "extraction.*"
     )
 
 

@@ -6,8 +6,8 @@ arrival (app.py:2064).  The streaming re-expression treats the
 
 - ``readStream`` over the parquet/Iceberg directory (new files = new
   arrivals),
-- the same extraction UDF chain (the plan is identical — Structured
-  Streaming reuses the batch operators),
+- the batch pipeline's extraction stage (``with_extraction``: one fused
+  Arrow crossing), after an optional stream-static claims join,
 - watermark on ``warc_ts`` + tumbling-window per-language counts (the
   metrics analog of the reference's per-request MySQL INSERT), and
 - a running per-company credit decrement (J5, app.py:2251-2256) as a
@@ -21,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_api_spark.operators.extract import extract_udf, fused_extract_udf, resolve_text_column
-from ocr_api_spark.plans.pipeline import CLAIM_COLS
+from ocr_api_spark.operators.extract import with_extraction
 
 
 def read_pages_stream(spark: SparkSession, pages_dir: str, schema=None) -> DataFrame:
@@ -32,17 +31,17 @@ def read_pages_stream(spark: SparkSession, pages_dir: str, schema=None) -> DataF
     return reader.schema(schema).option("maxFilesPerTrigger", 8).load(pages_dir)
 
 
-def extraction_stream(pages: DataFrame, doc_type_col: str | None = None) -> DataFrame:
-    """The batch extraction stage applied to a stream (doc_type from the
-    stream itself or a constant 'pan' when absent)."""
-    resolved = resolve_text_column(pages)
-    dt = F.col(doc_type_col) if doc_type_col else F.lit("pan")
-    return resolved.withColumn("extraction", extract_udf(F.col("resolved_text"), dt)).select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("extraction.extracted_text").alias("extracted_text"),
-        F.col("extraction.status").alias("status"),
+def extraction_stream(pages: DataFrame, claims_static: DataFrame | None = None) -> DataFrame:
+    """The batch extraction stage applied to a stream: a stream-static
+    left join on url when the (slowly-changing) claims table is given,
+    then the same ``with_extraction`` stage as ``extraction_plan``, so
+    a url reads the same ``extracted_text``, ``status`` and ``match`` in
+    either."""
+    if claims_static is not None:
+        pages = pages.join(claims_static, "url", "left")
+    return with_extraction(pages).select(
+        "url", "warc_ts", "lang", "doc_type",
+        "extraction.extracted_text", "extraction.status", "extraction.match",
     )
 
 
@@ -177,32 +176,6 @@ def masking_stream(token_pages: DataFrame) -> DataFrame:
             )
 
     return token_pages.mapInPandas(gen, MASK_REGION_SCHEMA)
-
-
-def extraction_stream_with_claims(pages: DataFrame, claims_static: DataFrame) -> DataFrame:
-    """Stream-static join: the pages stream joins the (slowly-changing)
-    claims table, then runs the same fused single-crossing stage as the
-    batch pipeline — plan parity between batch and streaming."""
-    joined = pages.join(claims_static, "url", "left")
-    html_when_needed = F.when(F.col("text").isNull() | (F.length("text") == 0), F.col("html"))
-    out = joined.withColumn(
-        "extraction",
-        fused_extract_udf(
-            F.col("text"),
-            html_when_needed,
-            F.col("doc_type"),
-            *[F.col(c) for c in CLAIM_COLS[:9]],
-        ),
-    )
-    return out.select(
-        "url",
-        "warc_ts",
-        "lang",
-        "doc_type",
-        F.col("extraction.extracted_text").alias("extracted_text"),
-        F.col("extraction.status").alias("status"),
-        F.col("extraction.match").alias("match"),
-    )
 
 
 def windowed_doc_counts(extracted: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:

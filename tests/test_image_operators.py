@@ -188,7 +188,7 @@ def test_e4_passport_lifecycle_end_to_end(session):
     the real kernels."""
     from pyspark.sql import functions as F
 
-    from ocr_api_spark.operators.extract import extract_udf
+    from ocr_api_spark.operators.extract import with_extraction
     from ocr_api_spark.operators.multimodal import preocr_chain, with_token_text
 
     rng = np.random.default_rng(17)
@@ -216,11 +216,8 @@ def test_e4_passport_lifecycle_end_to_end(session):
     )
     staged = pre.join(toks_df, "url")
     texted = with_token_text(staged, conf_threshold=0.5)
-    out = (
-        texted.withColumn("extraction", extract_udf(F.col("token_text"), F.lit("passport")))
-        .select("url", "extraction.status", "extraction.passport.*")
-        .collect()[0]
-    )
+    passport_rows = texted.withColumn("text", F.col("token_text")).withColumn("doc_type", F.lit("passport"))
+    out = with_extraction(passport_rows).select("url", "extraction.status", "extraction.passport.*").collect()[0]
     assert out["status"] == "Completed"
     assert out["passport_number"] == "M1234567"
     assert out["surname"] == "SHARMA"

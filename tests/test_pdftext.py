@@ -229,10 +229,8 @@ def session():
 def test_fused_udf_pdf_branch(session):
     """S4 in the pipeline: a row with empty text and a %PDF payload goes
     through the PDF text layer + clean_text (not the HTML boilerplate)."""
-    from pyspark.sql import functions as F
-
     from ocr_api_spark.kernels.common import clean_text
-    from ocr_api_spark.operators.extract import fused_extract_udf
+    from ocr_api_spark.operators.extract import with_extraction
 
     pdf_bytes = write_minimal_pdf(
         [[(72, 72, 12, "Permanent Account Number"), (72, 90, 12, "ABCPS1234F")]]
@@ -240,10 +238,9 @@ def test_fused_udf_pdf_branch(session):
     df = session.createDataFrame(
         [("u1", "", bytearray(pdf_bytes), "pan")], "url string, text string, html binary, doc_type string"
     )
-    nulls = [F.lit(None).cast("string")] * 9
-    out = df.withColumn(
-        "x", fused_extract_udf(F.col("text"), F.col("html"), F.col("doc_type"), *nulls)
-    ).select("x.extracted_text", "x.status", "x.pan").collect()[0]
+    out = with_extraction(df).select(
+        "extraction.extracted_text", "extraction.status", "extraction.pan"
+    ).collect()[0]
     expected = clean_text(pdf_text(pdf_bytes))
     assert out["extracted_text"] == expected
     assert out["status"] == "Completed"
@@ -304,9 +301,7 @@ def test_malformed_pdf_is_not_a_poison_pill(session):
     """A payload that starts with %PDF but has an unparseable content
     stream (e.g. a bad octal escape) must route to the C4 fallback
     (resolved text None -> status Failed), never fail the Spark task."""
-    from pyspark.sql import functions as F
-
-    from ocr_api_spark.operators.extract import fused_extract_udf
+    from ocr_api_spark.operators.extract import with_extraction
 
     good = write_minimal_pdf([[(72, 72, 12, "Permanent Account Number"), (72, 90, 12, "ABCPS1234F")]])
     # invalid octal escape: parses tolerantly (the \\8 is literal), never raises
@@ -321,14 +316,9 @@ def test_malformed_pdf_is_not_a_poison_pill(session):
         ],
         "url string, text string, html binary, doc_type string",
     )
-    nulls = [F.lit(None).cast("string")] * 9
     out = {
         r["url"]: r
-        for r in df.withColumn(
-            "x", fused_extract_udf(F.col("text"), F.col("html"), F.col("doc_type"), *nulls)
-        )
-        .select("url", "x.status", "x.error")
-        .collect()
+        for r in with_extraction(df).select("url", "extraction.status", "extraction.error").collect()
     }
     assert out["ok"]["status"] == "Completed"
     assert out["odd"]["status"] == "Completed"  # tolerant parse, row survives
@@ -589,10 +579,8 @@ def test_indirect_length_last_definition_wins():
 def test_fused_udf_compressed_pdf_branch(session):
     """The pipeline's %PDF branch handles Flate-compressed content
     streams identically to raw ones — same extracted text, same PAN."""
-    from pyspark.sql import functions as F
-
     from ocr_api_spark.kernels.common import clean_text
-    from ocr_api_spark.operators.extract import fused_extract_udf
+    from ocr_api_spark.operators.extract import with_extraction
 
     spans = [[(72, 72, 12, "Permanent Account Number"), (72, 90, 12, "ABCPS1234F")]]
     plain = write_minimal_pdf(spans)
@@ -602,10 +590,9 @@ def test_fused_udf_compressed_pdf_branch(session):
         [("u1", "", bytearray(flate), "pan")],
         "url string, text string, html binary, doc_type string",
     )
-    nulls = [F.lit(None).cast("string")] * 9
-    out = df.withColumn(
-        "x", fused_extract_udf(F.col("text"), F.col("html"), F.col("doc_type"), *nulls)
-    ).select("x.extracted_text", "x.status", "x.pan").collect()[0]
+    out = with_extraction(df).select(
+        "extraction.extracted_text", "extraction.status", "extraction.pan"
+    ).collect()[0]
     assert out["extracted_text"] == clean_text(pdf_text(plain))
     assert out["status"] == "Completed"
     assert out["pan"]["ocr_pan_number"] == "ABCPS1234F"

@@ -47,8 +47,11 @@ def test_dim_join_broadcasts(session):
 
 
 def test_extraction_plan_single_arrow_stage(session, tmp_path):
+    import os
+
     from ocr_api_spark.plans.pipeline import extraction_plan
     from ocr_api_spark.sources.pages import write_pages
+    from ocr_api_spark.streaming.stream import extraction_stream, read_pages_stream
 
     paths = write_pages(str(tmp_path), n_rows=50, seed=11)
     pages = session.read.parquet(paths["pages"])
@@ -61,6 +64,17 @@ def test_extraction_plan_single_arrow_stage(session, tmp_path):
     # the html payload only feeds the Arrow stage; the scan must not be
     # pruned of it (needed) but the sink projection must not carry it
     assert "Exchange" in plan  # the (bucket, salt) repartition
+
+    # the stream runs the same single fused stage, with and without claims
+    stream_dir = tmp_path / "pages_stream"
+    os.makedirs(stream_dir)
+    os.link(paths["pages"], stream_dir / "pages.parquet")
+    pages_stream = read_pages_stream(session, str(stream_dir))
+    for claims_static in (claims, None):
+        plan = explain_str(extraction_stream(pages_stream, claims_static))
+        assert plan.count(") ArrowEvalPython") == 1, plan
+    plan = explain_str(extraction_plan(pages, None, 8, 2, n_parts=4))
+    assert plan.count(") ArrowEvalPython") == 1, plan
 
 
 def test_extraction_plan_prebucketed_shuffle_free(session, tmp_path):

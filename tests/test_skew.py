@@ -72,29 +72,6 @@ def test_salted_agg_equals_plain_agg(session, skewed_pages):
     assert a == b
 
 
-def test_pipeline_adaptive_salt_cold_hosts_stay_zero(session, tmp_path):
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ocr_api_spark.plans.pipeline import extraction_plan
-
-    rows = []
-    for i in range(200):
-        h = "hot.example" if i < 150 else f"cold{i % 5}.example"
-        rows.append({"url": f"https://{h}/p/{i}", "warc_ts": pd.Timestamp("2024-01-01"),
-                     "html": None, "text": f"doc {i}", "lang": "en"})
-    p = str(tmp_path / "pages.parquet")
-    pd.DataFrame(rows).to_parquet(p, index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
-    pages = session.read.parquet(p)
-
-    plan = extraction_plan(pages, None, 8, 8, hot_hosts=["hot.example"])
-    out = plan.select("url", "salt").toPandas()
-    hot_salts = out[out.url.str.contains("hot.example")]["salt"].nunique()
-    cold_salts = set(out[~out.url.str.contains("hot.example")]["salt"])
-    assert hot_salts >= 4
-    assert cold_salts == {0}
-
-
 def _spark_major() -> int:
     import pyspark
 

@@ -136,14 +136,14 @@ def test_credits_ledger_stateful(session, synth, tmp_path):
 def test_stream_static_claims_join(session, synth, tmp_path):
     import os
 
-    from ocr_api_spark.streaming.stream import extraction_stream_with_claims, read_pages_stream
+    from ocr_api_spark.streaming.stream import extraction_stream, read_pages_stream
 
     stream_dir = str(tmp_path / "pages_stream")
     os.makedirs(stream_dir)
     os.link(synth["pages"], os.path.join(stream_dir, "pages.parquet"))
     claims = session.read.parquet(synth["claims"])
 
-    out = extraction_stream_with_claims(read_pages_stream(session, stream_dir), claims)
+    out = extraction_stream(read_pages_stream(session, stream_dir), claims)
     q = (
         out.writeStream.format("memory")
         .queryName("stream_claims")
@@ -156,6 +156,45 @@ def test_stream_static_claims_join(session, synth, tmp_path):
     assert len(rows) == 120
     matched = [r for r in rows if r["match"] and r["match"]["average_match_percentage"] is not None]
     assert len(matched) > 0  # claimed doc rows carry match folds in streaming too
+
+
+def test_stream_matches_batch_extraction(session, synth, tmp_path):
+    """Batch/stream parity: on the same pages and claims, the stream and
+    ``extraction_plan`` give every url the same extracted_text, status
+    and match."""
+    import os
+
+    from ocr_api_spark.plans.pipeline import extraction_plan
+    from ocr_api_spark.streaming.stream import extraction_stream, read_pages_stream
+
+    stream_dir = str(tmp_path / "pages_stream")
+    os.makedirs(stream_dir)
+    os.link(synth["pages"], os.path.join(stream_dir, "pages.parquet"))
+    claims = session.read.parquet(synth["claims"])
+
+    q = (
+        extraction_stream(read_pages_stream(session, stream_dir), claims)
+        .writeStream.format("memory")
+        .queryName("stream_parity")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    def by_url(df):
+        rows = df.select("url", "extracted_text", "status", "match").collect()
+        return {r["url"]: r.asDict(recursive=True) for r in rows}
+
+    pages = session.read.parquet(synth["pages"])
+    streamed = by_url(session.table("stream_parity"))
+    batch = by_url(extraction_plan(pages, claims, 8, 2, n_parts=4))
+    assert len(batch) == 120
+    assert streamed == batch
+    # the comparison covers the HTML branch and real match folds
+    web = [r["url"] for r in pages.where("html IS NOT NULL").select("url").collect()]
+    assert any(batch[u]["extracted_text"] for u in web)
+    assert any(r["match"]["average_match_percentage"] is not None for r in batch.values())
 
 
 def test_signature_operator(session):
