@@ -233,15 +233,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         timings[name] = best
         spreads[name] = samples
 
-    # --- dedup tier end-to-end: minhash → banded LSH (capped) → exact
-    # jaccard re-rank of the candidates — the near-dup path a training-
-    # data pipeline runs corpus-wide, timed as one dataflow at this sf
-    from ocr_api_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures_arr,
-        ngram_jaccard_pairs,
-    )
-
     def _substring_stage(d):
         # exact-substring dedup (Lee et al. family) over the natural
         # corpus: rolling 20-token window hash -> corpus-wide count ->
@@ -264,29 +255,17 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).repartition(cpus * 2)
     n_docs_dedup = docs.count()
 
+    # --- dedup tier end-to-end: operators.dedup.near_duplicates (minhash →
+    # banded LSH, capped → each candidate pair's exact jaccard) — the
+    # near-dup path a training-data pipeline runs corpus-wide, timed as
+    # one dataflow at this sf, its verified pairs written to a temp dir
+    from ocr_api_spark.operators.dedup import near_duplicates
+
+    dedup_out = tempfile.mkdtemp(prefix="bench_dedup_")
+
     def _dedup_flow(d):
-        # materialize the signature table once (production writes it to
-        # its own parquet table): the capped LSH reads it twice — once
-        # for the logged bucket-size governance pass, once for the join
-        sigs = minhash_signatures_arr(d, "text", n=3, k=8).cache()
-        pairs = lsh_candidate_pairs(
-            sigs, [(0, 1), (2, 3), (4, 5), (6, 7)], max_bucket_size=64
-        ).cache()
-        cand_ids = (
-            pairs.select(F.col("id_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        verified = (
-            ngram_jaccard_pairs(d.join(cand_ids, "doc_id"), "text", 3)
-            .join(pairs, ["id_a", "id_b"])
-            .where(F.col("jaccard") >= 0.8)
-        )
-        n_dups = verified.count()
-        n_pairs = pairs.count()
-        pairs.unpersist()
-        sigs.unpersist()
-        return n_pairs, n_dups
+        shutil.rmtree(dedup_out, ignore_errors=True)
+        return near_duplicates(d, dedup_out)
 
     _dedup_flow(docs.limit(200))  # warm codegen/shuffle paths, same plan
 
@@ -298,9 +277,9 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     best, samples, clean = timed_best(_dedup_once, trials=2, max_attempts=4)
     extras["dedup_pipeline_sec"] = best
     spreads["dedup_pipeline"] = samples
-    n_pairs, n_dups = state["dedup"]
-    extras["dedup_candidate_pairs"] = n_pairs
-    extras["dedup_verified_dups"] = n_dups
+    shutil.rmtree(dedup_out, ignore_errors=True)
+    extras["dedup_candidate_pairs"] = state["dedup"]["candidates"]
+    extras["dedup_verified_dups"] = state["dedup"]["verified"]
     extras["dedup_docs_per_sec"] = round(n_docs_dedup / max(extras["dedup_pipeline_sec"], 1e-9))
     extras["substring_dedup_sec"], extras["substring_dup_spans"] = _substring_stage(docs)
 

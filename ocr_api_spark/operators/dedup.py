@@ -7,10 +7,12 @@
            bands → candidate pairs from band-bucket joins.  At 100 TB
            the band join is the only shuffle and its key space (band
            signatures) is high-cardinality, so it partitions evenly.
-- n-gram jaccard: exact pairwise similarity over exploded distinct
-           shingles — quadratic in cluster size, so only ever applied
-           to a bounded candidate set (the LSH output or an explicit
-           subset), never the full corpus.
+- n-gram jaccard: exact similarity over distinct shingles.
+           ``near_duplicates`` scores each LSH candidate pair directly
+           (``array_intersect`` of the two docs' shingle arrays), so its
+           cost is linear in the pairs.  ``ngram_jaccard_pairs`` scores
+           every pair sharing a shingle — quadratic in cluster size, so
+           only ever applied to a bounded subset, never the full corpus.
 - simhash: 64-bit bit-majority signature from md5(shingle), computed as
            ONE higher-order `aggregate` over the shingle array — one row
            per doc, no per-bit explode (a 1,000-shingle doc stays one
@@ -136,12 +138,12 @@ def lsh_candidate_pairs(
     cluster of c byte-identical docs shares every band signature, so the
     band self-join emits c(c-1)/2 pairs per band — million-copy
     boilerplate clusters in real corpora make that quadratic blowup
-    fatal.  Either feed this operator exact-deduped input (the pipeline
-    runs ``dedupe_pages`` first, plans/pipeline.py), or set
-    ``max_bucket_size``: band buckets larger than the cap are dropped
-    from the join entirely (their members stay eligible through their
-    other bands) and the drop is logged with bucket counts.  A dropped
-    bucket of size c is exactly the degenerate case: near-certain
+    fatal.  Either feed this operator exact-deduped input (for pages,
+    ``plans.pipeline.dedupe_pages``), or set ``max_bucket_size`` (as
+    ``near_duplicates`` does): band buckets larger than the cap are
+    dropped from the join entirely (their members stay eligible through
+    their other bands) and the drop is logged with bucket counts.  A
+    dropped bucket of size c is exactly the degenerate case: near-certain
     duplicates that exact dedup should have removed — capping bounds
     per-bucket join work at cap², keeping the band join linear-ish in
     practice."""
@@ -253,6 +255,61 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, n: int, id_col: str = "doc
         )
         .select("id_a", "id_b", "overlap", "jaccard")
     )
+
+
+# the near-dup flow's parameters: every caller runs the same flow
+SHINGLE_N = 3
+MINHASH_K = 8
+LSH_BANDS = ((0, 1), (2, 3), (4, 5), (6, 7))
+LSH_MAX_BUCKET = 64
+JACCARD_MIN = 0.8
+
+
+def near_duplicates(docs: DataFrame, out_path: str) -> dict:
+    """The near-dup flow over ``docs`` (``doc_id``, ``text``): MinHash
+    signatures → capped LSH candidate pairs → each pair verified by the
+    exact Jaccard of its two docs' distinct word 3-gram sets (the
+    ``ngram_jaccard_pairs`` value).  Writes the pairs with Jaccard ≥
+    ``JACCARD_MIN`` to ``out_path`` as parquet ``(id_a, id_b, overlap,
+    jaccard)`` and returns ``{"candidates": …, "verified": …}``.
+
+    Verification joins each pair to both docs' shingle arrays and takes
+    ``size(array_intersect)``: O(pairs × shingles), where scoring every
+    pair that shares a shingle costs the sum over shingles of the
+    squared document frequency — which exact-copy clusters under the
+    LSH cap make quadratic.
+
+    Signatures and pairs are cached for this call only (the capped LSH
+    reads the signatures twice, the count and the write read the pairs)
+    and unpersisted before it returns.
+
+    Precondition: ``doc_id`` is unique per document.  It is not checked
+    (a check costs a Spark job per call).  Rows that share an id get one
+    signature, over the union of their shingles, and a pair is scored
+    once per combination of its ids' rows."""
+    sh = docs.select("doc_id", _shingle_array("text", SHINGLE_N).alias("sh"))
+    overlap = F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint")
+    union = F.size("sh_a") + F.size("sh_b") - F.col("overlap")
+    jaccard = F.round(F.col("overlap") / union, 4).cast("double")
+    sigs = minhash_signatures_arr(docs, "text", SHINGLE_N, MINHASH_K).cache()
+    try:
+        pairs = lsh_candidate_pairs(sigs, LSH_BANDS, max_bucket_size=LSH_MAX_BUCKET).cache()
+        try:
+            n_candidates = pairs.count()
+            (
+                pairs.join(sh.toDF("id_a", "sh_a"), "id_a")
+                .join(sh.toDF("id_b", "sh_b"), "id_b")
+                .select("id_a", "id_b", "sh_a", "sh_b", overlap.alias("overlap"))
+                .select("id_a", "id_b", "overlap", jaccard.alias("jaccard"))
+                .where(F.col("jaccard") >= JACCARD_MIN)
+                .write.parquet(out_path)
+            )
+        finally:
+            pairs.unpersist()
+    finally:
+        sigs.unpersist()
+    n_verified = docs.sparkSession.read.parquet(out_path).count()
+    return {"candidates": n_candidates, "verified": n_verified}
 
 
 def winnowing_fingerprints(

@@ -222,7 +222,6 @@ def run_extraction(
     n_buckets: int = 64,
     n_salts: int = 8,
     repartition: int | None = None,
-    dedupe: bool = False,
     buckets: list[int] | None = None,
 ) -> dict:
     """Run (or resume) the pipeline.  Returns run statistics.
@@ -243,8 +242,6 @@ def run_extraction(
     driver_engine = image_engine()
     spark.sparkContext.setLocalProperty(ENGINE_PROP, driver_engine)
     pages = spark.read.parquet(pages_path)
-    if dedupe:
-        pages = dedupe_pages(pages)
     claims = spark.read.parquet(claims_path) if claims_path else None
 
     done = read_completed_buckets(spark, out_dir)
@@ -409,15 +406,6 @@ def run_extraction_chunked(
     statistically even, and each group's job internally repartitions to
     full cluster parallelism, so chunking costs extra scans of the
     (pruned) input, not idle executors."""
-    if kw.get("dedupe"):
-        # review r7: dedupe_pages is a corpus-wide window that cannot be
-        # pushed below the per-group bucket filter — chunking would pay
-        # the FULL dedupe shuffle once per group (16x at 4096/256).
-        # Stage a deduped corpus once upstream instead.
-        raise ValueError(
-            "dedupe=True is not supported in chunked mode: run dedupe_pages "
-            "once and point pages_path at the deduped table"
-        )
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
     from itertools import islice
 

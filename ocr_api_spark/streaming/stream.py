@@ -219,16 +219,6 @@ def sessionized_stream(
     )
 
 
-def credits_stream(claims: DataFrame, initial_credits: int = 1000) -> DataFrame:
-    """Per-company running credit decrement (J5): each claim consumes one
-    credit.  Expressed as a streaming aggregate (complete mode) — at
-    production scale this MERGEs into the accounts table per batch."""
-    return claims.groupBy("company").agg(
-        (F.lit(initial_credits) - F.count("*")).alias("credits_left"),
-        F.count("*").alias("docs_processed"),
-    )
-
-
 def credits_ledger_stream(claims: DataFrame, initial_credits: int = 1000) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: a running
     per-company credit ledger (the exact streaming analog of the

@@ -95,6 +95,75 @@ def test_duplicate_doc_ids_give_the_documented_output(session):
         ngram_jaccard_pairs(copies, "text", 3).collect()
 
 
+COPY_IDS = range(100, 120)  # an exact-copy cluster under the LSH bucket cap
+
+
+def _persisted_rdds(session):
+    return set(session.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.fixture(scope="module")
+def near_dup_run(session, near_dup_docs, tmp_path_factory):
+    """One ``near_duplicates`` call over the near-dup docs plus 20 exact
+    copies; returns (docs, its result, its written rows, the ids of the
+    RDDs persisted before and after the call)."""
+    from ocr_api_spark.operators.dedup import near_duplicates
+
+    copy = "boilerplate footer text repeated verbatim on every mirrored page of the site"
+    docs = near_dup_docs.unionByName(
+        session.createDataFrame([(i, copy) for i in COPY_IDS], "doc_id long, text string")
+    )
+    out = str(tmp_path_factory.mktemp("near_dup") / "pairs")
+    before = _persisted_rdds(session)
+    res = near_duplicates(docs, out)
+    rows = session.read.parquet(out)
+    return docs, res, rows, out, (before, _persisted_rdds(session))
+
+
+def test_near_duplicates_equals_the_composed_flow(session, near_dup_run):
+    """The pair-by-pair verify writes what scoring every candidate doc
+    with ``ngram_jaccard_pairs`` and keeping the candidate pairs gives."""
+    from pyspark.sql import functions as F
+
+    from ocr_api_spark.operators import dedup
+
+    docs, res, rows, _out, _ = near_dup_run
+    sigs = dedup.minhash_signatures_arr(docs, "text", dedup.SHINGLE_N, dedup.MINHASH_K)
+    pairs = dedup.lsh_candidate_pairs(sigs, dedup.LSH_BANDS, max_bucket_size=dedup.LSH_MAX_BUCKET)
+    cand_ids = pairs.select(F.col("id_a").alias("doc_id")).union(pairs.select("id_b")).distinct()
+    expected = (
+        dedup.ngram_jaccard_pairs(docs.join(cand_ids, "doc_id"), "text", dedup.SHINGLE_N)
+        .join(pairs, ["id_a", "id_b"])
+        .where(F.col("jaccard") >= dedup.JACCARD_MIN)
+    )
+    assert rows.columns == ["id_a", "id_b", "overlap", "jaccard"]
+    got = sorted(tuple(r) for r in rows.collect())
+    assert got == sorted(tuple(r) for r in expected.select(*rows.columns).collect())
+    assert res == {"candidates": pairs.count(), "verified": len(got)}
+    assert (0, 1, 19, 1.0) in got  # the exact dup of the base text: 21 words, 19 distinct 3-grams
+
+
+def test_near_duplicates_scores_exact_copies_one(near_dup_run):
+    _docs, _res, rows, _out, _ = near_dup_run
+    copies = {(r["id_a"], r["id_b"]): r["jaccard"] for r in rows.collect() if r["id_a"] in COPY_IDS}
+    assert len(copies) == len(COPY_IDS) * (len(COPY_IDS) - 1) // 2
+    assert set(copies.values()) == {1.0}
+
+
+def test_near_duplicates_leaves_nothing_cached(session, near_dup_run):
+    """Signatures and pairs are unpersisted on return, and when the call
+    fails (here: the output path already exists)."""
+    from pyspark.errors import AnalysisException
+
+    from ocr_api_spark.operators.dedup import near_duplicates
+
+    docs, _res, _rows, out, (before, after) = near_dup_run
+    assert after == before
+    with pytest.raises(AnalysisException, match="PATH_ALREADY_EXISTS"):
+        near_duplicates(docs, out)
+    assert _persisted_rdds(session) == before
+
+
 def test_simhash_near_dup_proximity(session, near_dup_docs):
     from ocr_api_spark.operators.dedup import simhash64
 

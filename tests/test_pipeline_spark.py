@@ -536,15 +536,6 @@ def test_chunked_commits_empty_buckets(session, synth, tmp_path):
     )
     assert again["groups_run"] == 0 and again["rows"] == 0
 
-    # chunked + dedupe is rejected loudly (full-corpus window per group)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="chunked"):
-        pipeline.run_extraction_chunked(
-            session, synth["pages"], synth["claims"], out,
-            n_buckets=64, buckets_per_commit=16, dedupe=True,
-        )
-
 
 def test_torn_lineage_tmp_file_is_invisible(session, synth, tmp_path):
     """A kill mid-manifest leaves only a ``.json.tmp`` in ``_snapshots/``
