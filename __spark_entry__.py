@@ -1036,6 +1036,7 @@ def _stream_mask_regions(spark, sf_dir):
     import tempfile
     import uuid
 
+    from ocr_api_spark.plans.pipeline import read_parquet
     from ocr_api_spark.streaming.stream import masking_stream
 
     d = F.col("doc_id")
@@ -1090,7 +1091,7 @@ def _stream_mask_regions(spark, sf_dir):
     synth.repartition(4).write.mode("overwrite").parquet(src_dir)
     stream_src = (
         spark.readStream.format("parquet")
-        .schema(spark.read.parquet(src_dir).schema)
+        .schema(read_parquet(spark, src_dir).schema)
         .option("maxFilesPerTrigger", 2)
         .load(src_dir)
     )

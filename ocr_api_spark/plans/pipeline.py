@@ -23,29 +23,141 @@ Spark job — SURVEY.md §3) with the scale contract of the north_rule:
   table, and runs on disjoint buckets can commit side by side.
   ``run_extraction_chunked`` keeps two bucket groups in flight; a kill
   redoes at most those two groups.
-- **claims join**: left join on url.  Claims at production scale are
-  bucketed the same way; at test scale AQE chooses a broadcast.
+- **claims join**: left join on url.  ``extraction_plan`` broadcasts
+  the claims (``F.broadcast``) unless told not to; at production scale
+  they are bucketed the same way as the pages and joined without a
+  shuffle.
+- **driver set-up**: ``read_parquet`` takes each input's schema from one
+  parquet footer, so a run starts no schema-inference job, and the plan
+  is built from SQL expressions in few Py4J calls.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 # CLAIM_COLS is also imported from here (perfbench)
 from ocr_api_spark.operators.extract import CLAIM_COLS, with_extraction  # noqa: F401
 
 
+# The bucket and salt of a row, as SQL: one parsed expression is one
+# Py4J call where the Column builders make one per function and literal.
+_BUCKET_SQL = "CAST(pmod(xxhash64(url), {}) AS INT)"
+_SALT_SQL = "CAST(pmod(xxhash64(url, 1), {}) AS INT)"
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    return df.withColumn("bucket", F.expr(_BUCKET_SQL.format(int(n_buckets))))
 
 
 def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
-    return df.withColumn("salt", F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_salts)).cast("int"))
+    return df.withColumn("salt", F.expr(_SALT_SQL.format(int(n_salts))))
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """A name Spark's file index skips (``HadoopFSUtils.shouldFilterOutPathName``;
+    it keeps the summary files, which ``_footer_file`` looks for first)."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
+
+
+def _footer_file(path: str) -> str | None:
+    """The file whose footer Spark's inference reads with mergeSchema
+    off: ``path`` itself, or the first data file under it in path order.
+    None where Spark must decide: a missing or non-local path, an empty
+    directory, or a summary file, which Spark would read first."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    found = []
+    for root, dirs, files in os.walk(path):
+        if {"_metadata", "_common_metadata"} & set(files):
+            return None
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        found += [os.path.join(root, f) for f in files if not _hidden(f)]
+    return min(found, default=None)
+
+
+def _same_in_spark(t) -> bool:
+    """Whether Spark's parquet reader types a column of arrow type ``t``
+    as ``from_arrow_type`` does.  INT96 is decided apart (``_footer_schema``);
+    an ns timestamp is illegal to Spark, and the types left out map
+    differently (duration, unsigned ints) or not at all."""
+    import pyarrow.types as pt
+
+    if pt.is_dictionary(t):
+        return _same_in_spark(t.value_type)
+    if pt.is_list(t) or pt.is_large_list(t):
+        return _same_in_spark(t.value_type)
+    if pt.is_map(t):
+        return _same_in_spark(t.key_type) and _same_in_spark(t.item_type)
+    if pt.is_struct(t):
+        return t.num_fields > 0 and all(_same_in_spark(f.type) for f in t)
+    if pt.is_timestamp(t):
+        return t.unit != "ns"
+    if pt.is_decimal(t):
+        return t.precision <= 38
+    checks = (pt.is_boolean, pt.is_int8, pt.is_int16, pt.is_int32, pt.is_int64, pt.is_float32,
+              pt.is_float64, pt.is_string, pt.is_large_string, pt.is_binary, pt.is_large_binary, pt.is_date32)
+    return any(check(t) for check in checks)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The data schema ``spark.read.parquet(path)`` infers, read from one
+    footer on the driver; None where only Spark's inference can tell.
+    A Spark-written file carries its schema as JSON, which is what Spark
+    uses; otherwise the arrow schema maps as Spark types the parquet
+    columns, with INT96 (Spark's legacy timestamp) taken from the
+    physical type."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    footer = _footer_file(path)
+    if footer is None or spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return None
+    try:
+        pf = pq.ParquetFile(footer)
+        spark_json = (pf.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if spark_json is not None:
+            return StructType.fromJson(json.loads(spark_json))
+        int96 = {
+            pf.schema.column(i).path
+            for i in range(pf.metadata.num_columns)
+            if pf.schema.column(i).physical_type == "INT96"
+        }
+        ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+        fields = []
+        for f in pf.schema_arrow:
+            if f.name in int96:
+                t = TimestampType()
+            elif _same_in_spark(f.type):
+                t = from_arrow_type(f.type, prefer_timestamp_ntz=ntz)
+            else:
+                return None
+            fields.append(StructField(f.name, t, f.nullable))
+        return StructType(fields)
+    except (OSError, ValueError, KeyError, TypeError):
+        return None  # unreadable here: Spark raises its own error
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job: the
+    schema comes from one footer on the driver (``_footer_schema``) and
+    equals the inferred one; Spark still discovers hive partition
+    columns.  Where the footer cannot decide, Spark infers as before."""
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def read_completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
@@ -82,10 +194,15 @@ def extraction_plan(
     lazy), extract and match in one Arrow stage.  Without claims,
     ``doc_type`` and every match are null.
 
-    ``broadcast_claims``: claims are per-url facts; at test scale they
-    broadcast, at 10^12 scale disable this and co-bucket both tables so
-    the join is shuffle-free."""
-    pages = with_salt(with_bucket(pages, n_buckets), n_salts)
+    ``broadcast_claims``: claims are per-url facts, joined through
+    ``F.broadcast`` by default; at 10^12 scale disable this and
+    co-bucket both tables so the join is shuffle-free."""
+    pages = pages.withColumns(
+        {
+            "bucket": F.expr(_BUCKET_SQL.format(int(n_buckets))),
+            "salt": F.expr(_SALT_SQL.format(int(n_salts))),
+        }
+    )
     if n_parts:
         # r8 (guide §6 file sizing + §2.5): RANGE partition on (bucket,
         # salt) instead of hash.  Hash scattered every bucket's n_salts
@@ -105,7 +222,7 @@ def extraction_plan(
         right = F.broadcast(claims) if broadcast_claims else claims
         pages = pages.join(right, "url", "left")
     # FULL_SCHEMA's field order is the output order after doc_type
-    return with_extraction(pages).select(
+    return with_extraction(pages).selectExpr(
         "url", "warc_ts", "lang", "bucket", "salt", "doc_type", "extraction.*"
     )
 
@@ -241,16 +358,20 @@ def run_extraction(
     # silently diverging (ADVICE r5; see kernels.image._cv2)
     driver_engine = image_engine()
     spark.sparkContext.setLocalProperty(ENGINE_PROP, driver_engine)
-    pages = spark.read.parquet(pages_path)
-    claims = spark.read.parquet(claims_path) if claims_path else None
+    pages = read_parquet(spark, pages_path)
+    claims = read_parquet(spark, claims_path) if claims_path else None
 
+    # the resume filter tests the bucket expression itself: extraction_plan
+    # derives the column, and the optimizer pushes the filter to the scan
     done = read_completed_buckets(spark, out_dir)
-    pages = with_bucket(pages, n_buckets)
+    bucket = _BUCKET_SQL.format(int(n_buckets))
+    keep = []
     if buckets is not None:
-        pages = pages.filter(F.col("bucket").isin([int(b) for b in buckets]))
+        keep.append(f"{bucket} IN ({', '.join(str(int(b)) for b in buckets)})" if buckets else "false")
     if done:
-        pages = pages.filter(~F.col("bucket").isin(done))
-    pages = pages.drop("bucket")  # extraction_plan re-derives it
+        keep.append(f"NOT {bucket} IN ({', '.join(str(int(b)) for b in done)})")
+    if keep:
+        pages = pages.where(" AND ".join(keep))
 
     # No manifest names a bucket in todo, so nothing in its directory is
     # committed: it holds only files a killed run published before its
@@ -302,8 +423,8 @@ def run_extraction(
     obs = Observation(f"run_metrics_{uuid.uuid4().hex}")
     plan = plan.observe(
         obs,
-        F.count(F.lit(1)).alias("rows_out"),
-        F.sum(F.when(F.col("status") == "Failed", 1).otherwise(0)).alias("rows_failed"),
+        F.expr("count(1) AS rows_out"),
+        F.expr("sum(CASE WHEN status = 'Failed' THEN 1 ELSE 0 END) AS rows_failed"),
     )
 
     # Write, then publish: the write goes to a staging dir only this run
@@ -362,9 +483,9 @@ def run_extraction(
 
 
 # Bucket groups run_extraction_chunked keeps in flight.  Each group
-# spends ~half its wall in set-up with the cores idle (schema inference,
-# plan building, the claims broadcast, the range sample), and a second
-# group's UDF/write job fills that window: perfbench resume_chunked on
+# spends ~half its wall in set-up with the cores idle (plan building,
+# the claims broadcast, the range sample), and a second group's
+# UDF/write job fills that window: perfbench resume_chunked on
 # 4 vCPUs, local[4], medians of 10 seeds, 3,364 → 4,355 docs/s.  Two is
 # the smallest width that overlaps one group's set-up with another's
 # run; a wider window adds in-flight broadcasts, memory and

@@ -1,73 +1,29 @@
-"""Skew handling for hot hosts (north_rule: "salting for skewed hosts";
-SURVEY.md §4.2(c)).
+"""Skew-safe aggregation for hot keys (north_rule: "salting for skewed
+hosts"; SURVEY.md §4.2(c)).
 
 Common-Crawl host frequencies are Zipf: a handful of hosts own a large
-share of urls, so any host-keyed shuffle (per-host aggregates, host-level
-joins) funnels those rows into single tasks.  Three pieces:
-
-- ``host_frequencies``: the lightweight pre-pass — one partial-agg
-  ``groupBy(host).count()`` over the (pruned) url column only.
-- ``with_adaptive_salt``: salt ONLY the hot hosts (frequency above
-  ``threshold`` of total), salt 0 elsewhere — placement changes, content
-  never does.  The hot-host list is tiny and broadcasts.
-- ``salted_host_agg``: the two-phase aggregate — partial by
-  (host, salt), final by host — so a hot host's rows spread over
-  ``n_salts`` tasks in the expensive first phase and the second phase
-  only merges ``n_salts`` pre-aggregated rows per host.
+share of urls, so a host-keyed aggregate funnels their rows into single
+tasks.  ``salted_host_agg`` is the two-phase aggregate: partial by
+(host, salt), final by host.  A hot host's rows spread over the salts
+in the expensive first phase, and the second phase only merges one
+pre-aggregated row per (host, salt).  The caller picks the salt; a
+hash of a per-row key (``pmod(xxhash64(url), n)``) spreads every host
+and changes placement only, never the result.
 
 AQE's skew-join splitting handles *join*-side skew at runtime; this
-module is for aggregation skew and for steering the write layout, which
-AQE does not re-plan.
+module is for aggregation skew, which AQE does not re-plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def host_col(url: Column) -> Column:
-    """host part of the url (scheme://host/...)."""
-    return F.regexp_extract(url, r"^[a-z]+://([^/]+)", 1)
-
-
-def host_frequencies(df: DataFrame, host: Column | str = "host") -> DataFrame:
-    # compare to the sentinel only when host is a str: `col == "..."` builds
-    # a Column, and truthiness-testing a Column raises ValueError
-    if isinstance(host, str):
-        h = host_col(F.col("url")) if host == "__from_url__" else F.col(host)
-    else:
-        h = host
-    return df.groupBy(h.alias("host")).agg(F.count("*").alias("n_rows"))
-
-
-def hot_hosts(df: DataFrame, host: Column | str = "__from_url__", threshold: float = 0.01) -> list[str]:
-    """Hosts owning more than ``threshold`` of all rows.  Driver-side
-    list; at 10^12 rows this is still tiny (≤ 1/threshold entries)."""
-    freq = host_frequencies(df, host)
-    total = freq.agg(F.sum("n_rows")).collect()[0][0] or 1
-    rows = freq.where(F.col("n_rows") > threshold * total).collect()
-    return sorted(r["host"] for r in rows)
-
-
-def with_adaptive_salt(
-    df: DataFrame, hot: list[str], n_salts: int = 16, host: Column | None = None
-) -> DataFrame:
-    """salt ∈ [0, n_salts) for rows of hot hosts, 0 otherwise."""
-    h = host if host is not None else host_col(F.col("url"))
-    hot_arr = F.array(*[F.lit(x) for x in hot]) if hot else F.array().cast("array<string>")
-    salted = F.pmod(F.xxhash64("url", F.lit(7)), F.lit(n_salts)).cast("int")
-    return df.withColumn("host", h).withColumn(
-        "salt", F.when(F.array_contains(hot_arr, F.col("host")), salted).otherwise(F.lit(0))
-    )
 
 
 def salted_host_agg(df: DataFrame, aggs: list, host: str = "host", salt: str = "salt") -> DataFrame:
     """Two-phase aggregate: partial by (host, salt), final by host.
-    ``aggs`` is a list of (partial_expr, final_expr_builder) pairs is
-    overkill for the algebraic aggregates we need — counts and sums
-    re-aggregate with sum, so callers pass plain named sum/count exprs
-    and this helper handles the rest."""
+    ``aggs`` are named count and sum expressions: both re-aggregate with
+    sum, so the final phase sums each partial column."""
     partial = df.groupBy(host, salt).agg(*aggs)
     merge = [F.sum(c).alias(c) for c in partial.columns if c not in (host, salt)]
     return partial.groupBy(host).agg(*merge)

@@ -22,12 +22,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_api_spark.operators.extract import with_extraction
+from ocr_api_spark.plans.pipeline import read_parquet
 
 
 def read_pages_stream(spark: SparkSession, pages_dir: str, schema=None) -> DataFrame:
+    """The pages directory as a stream; without ``schema``, the batch
+    reader's (``read_parquet``: one footer, no inference job)."""
     reader = spark.readStream.format("parquet")
     if schema is None:
-        schema = spark.read.parquet(pages_dir).schema
+        schema = read_parquet(spark, pages_dir).schema
     return reader.schema(schema).option("maxFilesPerTrigger", 8).load(pages_dir)
 
 
@@ -406,7 +409,7 @@ def run_credits_merge_stream(
     Accounts are a per-company dim — tiny at any corpus scale — so the
     per-batch driver-side merge is bounded; the heavy side (requests)
     stays distributed through the gate and the groupBy."""
-    schema = spark.read.parquet(claims_dir).schema
+    schema = read_parquet(spark, claims_dir).schema
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_credits_batch(

@@ -635,9 +635,13 @@ def test_udf_stage_runs_one_task_per_core(session, synth, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
-    stages = [s for j in tracker.getJobIdsForGroup("one-task-per-core") for s in tracker.getJobInfo(j).stageIds]
+    jobs = tracker.getJobIdsForGroup("one-task-per-core")
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
     write_stage = tracker.getStageInfo(max(stages))  # the last stage run is the write
     assert write_stage.numTasks == sc.defaultParallelism
+    # the claims broadcast, the range sample, the shuffle map and the
+    # write: reading the inputs runs no schema-inference job
+    assert len(jobs) == 4, sorted(jobs)
 
 
 def test_web_only_corpus_runs(session, tmp_path):
@@ -658,3 +662,100 @@ def test_web_only_corpus_runs(session, tmp_path):
     got = session.read.parquet(out + "/extracted").select("url", "extracted_text").toPandas()
     golden = pq.read_table(paths["golden"]).to_pandas()
     assert dict(zip(got["url"], got["extracted_text"])) == dict(zip(golden["url"], golden["extracted_text"]))
+
+
+def _parquet_input(kind: str, session, d) -> str:
+    """One parquet input of each shape ``read_parquet`` must type as
+    Spark's inference does."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = datetime.datetime(2024, 5, 1, 12, 30)
+    langs = pa.array(["en", "fr", "en", "fr"])
+    path = str(d / "t")
+    if kind == "pyarrow_types":
+        schema = pa.schema(
+            [
+                pa.field("naive", pa.timestamp("us")),
+                pa.field("utc", pa.timestamp("us", tz="UTC")),
+                pa.field("blob", pa.binary()),
+                pa.field("required", pa.int64(), nullable=False),
+                pa.field("large", pa.large_string()),
+            ]
+        )
+        t = pa.table([[ts], [ts], [b"\x00"], [1], ["x"]], schema=schema)
+        pq.write_table(t, path + ".parquet")
+        return path + ".parquet"
+    if kind in ("spark_ltz_4_files", "spark_partition_by"):
+        df = session.range(40).selectExpr(
+            "id", "timestamp'2024-05-01 12:30:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+            "IF(id % 2 = 0, 'en', 'fr') AS lang",
+        )
+        if kind == "spark_ltz_4_files":
+            df.repartition(4).write.parquet(path)
+        else:
+            df.write.partitionBy("lang").parquet(path)
+        return path
+    if kind == "pyarrow_hive":
+        t = pa.table({"url": ["a", "b", "c", "d"], "n": [1, 2, 3, 4], "lang": langs})
+        pq.write_to_dataset(t, path, partition_cols=["lang"])
+        return path
+    if kind == "int96_no_spark_metadata":
+        t = pa.table({"ts": pa.array([ts], pa.timestamp("us")), "n": [1]})
+        pq.write_table(t, path + ".parquet", use_deprecated_int96_timestamps=True, store_schema=False)
+        return path + ".parquet"
+    if kind == "web_only_claims":
+        return write_pages(str(d), n_rows=40, seed=7, web_fraction=1.0)["claims"]
+    raise ValueError(kind)
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "pyarrow_types",
+        "spark_ltz_4_files",
+        "spark_partition_by",
+        "pyarrow_hive",
+        "int96_no_spark_metadata",
+        "web_only_claims",
+    ],
+)
+def test_read_parquet_schema_equals_inferred(session, tmp_path, kind):
+    """read_parquet takes the schema from one footer instead of Spark's
+    inference job; the frame's schema must equal the inferred one,
+    partition columns included."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from ocr_api_spark.plans.pipeline import _footer_schema, read_parquet
+
+    path = _parquet_input(kind, session, tmp_path)
+    inferred = session.read.parquet(path).schema
+    assert _footer_schema(session, path) is not None  # decided from the footer
+    assert read_parquet(session, path).schema == inferred
+    if kind == "int96_no_spark_metadata":
+        # arrow reads INT96 as a naive timestamp; Spark's is LTZ
+        assert from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True) != inferred
+
+
+@pytest.mark.parametrize("kind", ["empty_dir", "ns_timestamp"])
+def test_read_parquet_raises_where_spark_does(session, tmp_path, kind):
+    """An input Spark cannot read still fails through read_parquet, at
+    plan time or when the data is read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_api_spark.plans.pipeline import read_parquet
+
+    path = str(tmp_path / kind)
+    if kind == "empty_dir":
+        (tmp_path / kind).mkdir()
+    else:
+        path += ".parquet"
+        pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("ns"))}), path)
+    with pytest.raises(Exception):
+        session.read.parquet(path).collect()
+    with pytest.raises(Exception):
+        read_parquet(session, path).collect()

@@ -1,5 +1,5 @@
-"""Skew machinery tests: hot-host detection, adaptive salting spreads
-only the hot keys, two-phase aggregate equals the plain aggregate."""
+"""Skew machinery tests: the two-phase salted aggregate equals the
+plain aggregate, and AQE splits a skewed band join."""
 
 from __future__ import annotations
 
@@ -28,38 +28,17 @@ def skewed_pages(session):
     return session.createDataFrame(rows, "url string, value double")
 
 
-def test_hot_host_detection(session, skewed_pages):
-    from ocr_api_spark.plans.skew import hot_hosts
-
-    hot = hot_hosts(skewed_pages, threshold=0.1)
-    assert hot == ["host0.example", "host1.example"]
-
-
-def test_adaptive_salt_spreads_only_hot(session, skewed_pages):
-    from pyspark.sql import functions as F
-
-    from ocr_api_spark.plans.skew import hot_hosts, with_adaptive_salt
-
-    hot = hot_hosts(skewed_pages, threshold=0.1)
-    salted = with_adaptive_salt(skewed_pages, hot, n_salts=8)
-    per_key = salted.groupBy("host", "salt").count()
-    # the hot hosts spread over many salts; cold hosts stay at salt 0
-    hot_salts = per_key.where(F.col("host") == "host0.example").count()
-    assert hot_salts >= 6
-    cold = per_key.where(~F.col("host").isin(hot)).select("salt").distinct().collect()
-    assert [r["salt"] for r in cold] == [0]
-    # largest (host, salt) cell is far below the unsalted hot-host count
-    max_cell = per_key.agg(F.max("count")).collect()[0][0]
-    assert max_cell < 600 / 4
-
-
 def test_salted_agg_equals_plain_agg(session, skewed_pages):
     from pyspark.sql import functions as F
 
-    from ocr_api_spark.plans.skew import hot_hosts, salted_host_agg, with_adaptive_salt
+    from ocr_api_spark.plans.skew import salted_host_agg
 
-    hot = hot_hosts(skewed_pages, threshold=0.1)
-    salted = with_adaptive_salt(skewed_pages, hot, n_salts=8)
+    # the salt rule of __spark_entry__._salted_source_stats, on the url
+    salted = skewed_pages.select(
+        F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host"),
+        "value",
+        F.pmod(F.xxhash64("url"), F.lit(8)).cast("int").alias("salt"),
+    )
     two_phase = salted_host_agg(
         salted, [F.count("*").alias("n"), F.sum("value").alias("sum_value")]
     )
