@@ -1,27 +1,27 @@
-"""Substring-dedup stress: materialization knob + stride cost/recall.
+"""Substring-dedup stress: exact vs winnowing cost/recall.
 
-The r5 verdict's ask: ``duplicated_substring_spans`` computes the
-(doc, pos, whash) projection twice (Catalyst recomputes the lazy window
-frame on the count side and the probe side of the join back) — measure
-the ``materialize=`` knob at the 50k-doc stress scale (replicated sf0.1
-corpus, every doc a duplicate: worst-case span volume) and the
-``stride`` cost/recall curve.
+Runs ``duplicated_substring_spans(window=20)`` exactly and with MOSS
+winnowing (``winnow`` 3 and 9) over a replicated sf0.1 corpus at the
+50k-doc stress scale.
 
 Usage::
 
-    python BENCH/stress_substring.py [replicas] [cpus]
+    python BENCH/stress_substring.py [replicas] [cpus] [shape]
 
-Prints one JSON line per configuration: wall seconds (best of 2
-steal-gated trials), span count, and flagged-token coverage (recall
-denominator = stride-1 coverage).  Results recorded in
-BENCH/BASELINE.md.
+``shape`` is ``all-dup`` (every replica identical: worst-case span
+volume), ``misaligned`` (replica r shifted by r filler tokens) or
+``natural`` (replicas never match each other).  Prints one JSON line
+per configuration: wall seconds (best of 2 steal-gated trials), span
+count, and flagged-token coverage (recall denominator = the exact
+run's coverage).  Results recorded in BENCH/BASELINE.md (the r6/r7
+rows also cover the since-deleted stride, sample_mod and materialize
+options).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -59,8 +59,7 @@ def main() -> None:
     elif shape == "misaligned":
         # replica r prefixed with r filler tokens: every duplicated
         # passage appears at offsets 0..replicas-1 — the shape where
-        # positional stride's congruence requirement bites and
-        # content-defined sampling (sample_mod) does not.
+        # only an alignment-robust selection (winnowing) keeps recall.
         # nb: F.sequence(1, r) at r=0 yields a DESCENDING [1,0] (it
         # auto-steps -1), which silently shifted BOTH replicas by one
         # token in the first cut of this shape — slice a literal token
@@ -68,7 +67,7 @@ def main() -> None:
         if replicas > 16:
             # F.slice caps at the filler array length, which would make
             # replicas 16+ position-CONGRUENT copies and silently
-            # inflate measured stride recall (review r6)
+            # inflate measured recall (review r6)
             raise SystemExit("misaligned shape supports at most 16 replicas")
         fillers = F.split(F.lit("z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11 z12 z13 z14 z15"), " ")
         text = F.when(F.col("r") == 0, F.col("text")).otherwise(
@@ -83,7 +82,7 @@ def main() -> None:
         # never match ACROSS replicas — duplicate structure is the
         # corpus's natural ~8% of docs, at 10x the corpus size.  This is
         # the realistic shape: flagged volume small, the window-hash
-        # projection dominates, which is what materialize= dedupes.
+        # projection dominates.
         text = F.regexp_replace(
             F.col("text"), " ", F.concat(F.lit(" x"), F.col("r").cast("string"), F.lit("_"))
         )
@@ -96,78 +95,42 @@ def main() -> None:
     n_docs = corpus.count()
     print(f"# corpus: {n_base} base docs x {replicas} = {n_docs} ({shape})", file=sys.stderr)
 
-    mat_path = "/dev/shm/substring_wins"
     coverage_ref: dict[str, int] = {}
 
     from bench import timed_best
 
-    def run(stride: int, materialize: str | None, sample_mod: int | None = None,
-            winnow: int | None = None):
+    def run(winnow: int | None = None):
         state = {}
 
         def once():
-            spans = duplicated_substring_spans(
-                corpus, window=20, stride=stride, materialize=materialize,
-                sample_mod=sample_mod, winnow=winnow,
-            )
+            spans = duplicated_substring_spans(corpus, window=20, winnow=winnow)
             agg = spans.agg(
                 F.count("*").alias("n_spans"),
                 F.sum(F.col("span_end") - F.col("span_start") + 1).alias("coverage"),
             ).collect()[0]
             state["n_spans"], state["coverage"] = agg["n_spans"], int(agg["coverage"] or 0)
 
-        def cleanup():
-            # inter-trial bookkeeping OUTSIDE the timed window (review
-            # r6: charging a trial with the previous trial's cache
-            # clear / rmtree understated the knob's benefit)
-            if materialize == "cache":
-                spark.catalog.clearCache()
-                corpus.persist().count()  # keep the corpus pinned for the next config
-            elif materialize:
-                shutil.rmtree(materialize, ignore_errors=True)
-
-        best, samples, _clean = timed_best(once, trials=2, max_attempts=4, between=cleanup)
-        if stride == 1 and materialize is None and sample_mod is None and winnow is None:
-            # exact-mode coverage only — a sampled mode must never
+        best, samples, _clean = timed_best(once, trials=2, max_attempts=4)
+        if winnow is None:
+            # exact-mode coverage only — a winnowed mode must never
             # become its own recall denominator (review r7)
             coverage_ref["cov"] = state["coverage"]
         rec = {
-            "stride": stride,
-            "sample_mod": sample_mod,
             "winnow": winnow,
-            "materialize": materialize or "none",
             "wall_s": best,
             "trials": samples,
             "n_spans": state["n_spans"],
             "coverage_tokens": state["coverage"],
-            "recall_vs_stride1": round(state["coverage"] / max(coverage_ref.get("cov", state["coverage"]), 1), 4),
+            "recall_vs_exact": round(state["coverage"] / max(coverage_ref.get("cov", state["coverage"]), 1), 4),
         }
         print(json.dumps(rec))
         return rec
 
-    base = run(1, None)
-    cached = run(1, "cache")
-    pathed = run(1, mat_path)
-    print(
-        json.dumps(
-            {
-                "speedup_cache": round(base["wall_s"] / cached["wall_s"], 2),
-                "speedup_path": round(base["wall_s"] / pathed["wall_s"], 2),
-            }
-        )
-    )
-    for s in (2, 4):
-        run(s, None)
-    # content-defined sampling at matching expected volumes: on a
-    # misaligned corpus stride recall collapses toward 1/stride while
-    # sample_mod keys on the hash itself and holds
-    for m in (2, 4):
-        run(1, None, sample_mod=m)
-    # true-MOSS winnowing at comparable volumes: density ~2/(w+1), so
-    # w=3 ~ sample_mod 2 and w=9 ~ sample_mod 5 — alignment-robust like
-    # sample_mod but with a DETERMINISTIC per-passage guarantee
+    run()
+    # MOSS winnowing: density ~2/(w+1), alignment-robust with a
+    # DETERMINISTIC per-passage guarantee
     for w in (3, 9):
-        run(1, None, winnow=w)
+        run(winnow=w)
     spark.stop()
 
 

@@ -29,8 +29,6 @@ from ocr_api_spark.kernels.common import (
 _NUM_SEP = re.compile(r"[^0-9 /-]+")
 _DIGITS_SPACE = re.compile(r"[^0-9 ]+")
 
-FIELDS = ("ocr_name", "ocr_address", "ocr_dob", "ocr_adhar_number", "ocr_address_for_match")
-
 
 def _empty() -> dict:
     return {

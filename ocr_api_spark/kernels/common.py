@@ -69,7 +69,6 @@ except ImportError:  # pragma: no cover
 # --- sanitizers -----------------------------------------------------------
 # charset A keeps commas (used for the initial line split, app.py:581);
 # charset B drops them (per-line re-clean, app.py:586).
-_SAN_A = re.compile(r"[^A-Za-z0-9 /,-]+")
 # charset A with newline preserved: lets split_lines sanitize the WHOLE
 # text in one sub call and split afterwards (r8) — per-line sub calls
 # were the hot spot of the canonical split
@@ -80,11 +79,6 @@ _DIGITS_ONLY = re.compile(r"[^0-9]+")
 _DIGITS_SPACE = re.compile(r"[^0-9 ]+")
 _DOB_CHARS = re.compile(r"[^0-9 /-]+")
 _DATE_RE = re.compile(r"\d{2}[-/]\d{2}[-/]\d{4}")
-
-
-def sanitize_a(line: str) -> str:
-    """``re.sub(r'[^A-Za-z0-9 /,-]+', '', line)`` (app.py:581)."""
-    return _SAN_A.sub("", line)
 
 
 def sanitize_b(line: str) -> str:

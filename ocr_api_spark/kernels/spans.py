@@ -9,18 +9,6 @@ from __future__ import annotations
 
 import re
 
-LABELS = (
-    "PAN",
-    "first_NAME",
-    "middle_NAME",
-    "last_NAME",
-    "FATHER_first_NAME",
-    "FATHER_middle_NAME",
-    "FATHER_last_NAME",
-    "DOB",
-)
-
-
 def find_indices(text: str, word: str):
     """app.py:1899-1902 — all escaped-literal spans, None when absent."""
     matches = [match.span() for match in re.finditer(re.escape(word), text)]

@@ -416,16 +416,6 @@ def with_signature_verdicts(df: DataFrame, img_col: str = "img") -> DataFrame:
     return df.withColumn("signature", sig_udf(F.col(img_col)))
 
 
-TOKEN_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("text", StringType()),
-            StructField("conf", FloatType()),
-            StructField("box", ArrayType(ArrayType(IntegerType()))),
-        ]
-    )
-)
-
 MASK_SCHEMA = ArrayType(
     StructType(
         [

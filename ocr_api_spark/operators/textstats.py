@@ -242,6 +242,3 @@ def with_gopher_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         & (F.col("g_alpha_word_ratio") >= 0.7)
         & (F.col("g_stop_hits") >= 2),
     )
-
-
-STOPWORD_SQL_EN = "', '".join(EN_STOP)

@@ -231,10 +231,12 @@ def dedupe_pages(pages: DataFrame) -> DataFrame:
     """Exact-dedup stage (training-data-pipeline tier): one row per
     distinct text payload, deterministic keeper (min url).  At scale this
     is one shuffle keyed by the md5 fingerprint — high cardinality, no
-    skew.  HTML rows dedupe on the raw payload."""
+    skew.  HTML rows dedupe on the raw payload (``content_fingerprint``)."""
     from pyspark.sql.window import Window
 
-    key = F.md5(F.coalesce(F.nullif(F.col("text"), F.lit("")), F.col("html").cast("string"), F.lit("")))
+    from ocr_api_spark.operators.dedup import content_fingerprint
+
+    key = content_fingerprint()
     return (
         pages.withColumn("__rn", F.row_number().over(Window.partitionBy(key).orderBy("url")))
         .where(F.col("__rn") == 1)

@@ -58,7 +58,6 @@ _BPC_RE = re.compile(rb"/BitsPerComponent\s+(\d+)")
 _CS_RE = re.compile(rb"/ColorSpace\s*/([A-Za-z0-9]+)")
 _FILTER_NAMES_RE = re.compile(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
 _FNAME_RE = re.compile(rb"/([A-Za-z0-9]+)")
-_NUM_RE = re.compile(rb"[-+]?\d*\.?\d+")
 
 _MAX_SAMPLES = 64_000_000  # decoded image samples (w*h*channels)
 _MAX_CANVAS_PIXELS = 64_000_000  # per-page canvas, dpi-derived

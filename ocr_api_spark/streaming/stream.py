@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_api_spark.operators.dedup import content_fingerprint
 from ocr_api_spark.operators.extract import with_extraction
 from ocr_api_spark.plans.pipeline import read_parquet
 
@@ -62,15 +63,10 @@ def dedup_stream(pages: DataFrame, watermark: str = "2 hours") -> DataFrame:
     limit.  Duplicates farther apart than the horizon pass through;
     the batch exact-dedup pass remains the cross-horizon backstop (the
     same accept-then-compact split Iceberg ingestion pipelines use).
-    Same fingerprint definition as ``dedupe_pages``: text payload, else
-    the raw html bytes."""
-    fingerprint = F.md5(
-        F.coalesce(
-            F.nullif(F.col("text"), F.lit("")), F.col("html").cast("string"), F.lit("")
-        )
-    )
+    Same fingerprint as ``dedupe_pages`` (``content_fingerprint``): text
+    payload, else the raw html bytes."""
     return (
-        pages.withColumn("fingerprint", fingerprint)
+        pages.withColumn("fingerprint", content_fingerprint())
         # parquet crawl timestamps arrive as TIMESTAMP_NTZ; event-time
         # watermarks require the instant type
         .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))

@@ -42,11 +42,26 @@ def test_exact_dedup_counts(session, near_dup_docs):
     assert out["distinct_texts"] == 4  # 0 and 1 collapse
 
 
-def test_minhash_lsh_finds_near_dups(session, near_dup_docs):
-    from ocr_api_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures, word_shingles
+def _minhash_replica(texts, k):
+    """``minhash_signatures_arr`` in plain Python: over the distinct
+    word 3-grams of ``texts`` (one doc's rows), column j is the min of
+    ``md5(f"{j}:{shingle}")``; None when there are no shingles."""
+    import hashlib
 
-    sh = word_shingles(near_dup_docs, "text", 3)
-    sigs = minhash_signatures(sh, k=4)
+    shingles = set()
+    for text in texts:
+        words = text.split(" ")
+        m = max(len(words) - 3, 0) + 1
+        shingles |= {" ".join(words[i : i + 3]) for i in range(m)} - {""}
+    if not shingles:
+        return None
+    return tuple(min(hashlib.md5(f"{j}:{s}".encode()).hexdigest() for s in shingles) for j in range(k))
+
+
+def test_minhash_lsh_finds_near_dups(session, near_dup_docs):
+    from ocr_api_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures_arr
+
+    sigs = minhash_signatures_arr(near_dup_docs, "text", 3, k=4)
     pairs = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(sigs, [(0, 1), (2, 3)]).collect()}
     assert (0, 1) in pairs  # exact dup always shares every band
     assert (0, 3) not in pairs and (0, 4) not in pairs  # unrelated never
@@ -66,24 +81,15 @@ def test_duplicate_doc_ids_give_the_documented_output(session):
     duplicates they give what their docstrings say, not a silent merge."""
     from pyspark.errors import ArithmeticException
 
-    from ocr_api_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_arr,
-        ngram_jaccard_pairs,
-        word_shingles,
-    )
+    from ocr_api_spark.operators.dedup import minhash_signatures_arr, ngram_jaccard_pairs
 
     a = "one two three four five six"  # 4 word 3-grams
     b = "one two three four seven eight nine"  # 5, of which 2 are in a
     df = session.createDataFrame([(1, a), (1, b), (2, a)], "doc_id long, text string")
 
-    sh = [tuple(r) for r in word_shingles(df, "text", 3).collect()]
-    assert sorted(sh).count((1, "one two three")) == 2  # one row per input row
-    assert len(sh) == 4 + 5 + 4
-
-    sigs = {r["doc_id"]: tuple(r) for r in minhash_signatures_arr(df, "text", 3, k=4).collect()}
-    assert sorted(sigs) == [1, 2]  # one signature per id, over the union of its rows' shingles
-    assert set(sigs.values()) == {tuple(r) for r in minhash_signatures(word_shingles(df, "text", 3), k=4).collect()}
+    # one signature per id, over the union of its rows' shingles
+    sigs = {r["doc_id"]: tuple(r)[1:] for r in minhash_signatures_arr(df, "text", 3, k=4).collect()}
+    assert sigs == {1: _minhash_replica([a, b], 4), 2: _minhash_replica([a], 4)}
 
     # overlap 4 + 2, n_a = min(4, 5), n_b = 4: 6 / (4 + 4 - 6), whatever the row order
     for frame in (df, session.createDataFrame([(2, a), (1, b), (1, a)], "doc_id long, text string").repartition(3)):
@@ -114,6 +120,11 @@ def near_dup_run(session, near_dup_docs, tmp_path_factory):
         session.createDataFrame([(i, copy) for i in COPY_IDS], "doc_id long, text string")
     )
     out = str(tmp_path_factory.mktemp("near_dup") / "pairs")
+    # start from nothing persisted: a local checkpoint that an earlier
+    # module left for the JVM's garbage collector (connected_components'
+    # rounds) can otherwise be cleaned during the call and read as a change
+    for rdd in session.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
     before = _persisted_rdds(session)
     res = near_duplicates(docs, out)
     rows = session.read.parquet(out)
@@ -405,19 +416,28 @@ def test_bpe_token_count_semantics(session):
 
 
 def test_minhash_projection_equals_exploded_form(session, near_dup_docs):
-    """The array-fold signatures must equal the explode→groupBy form
-    bit-for-bit (same hash, same distinct-shingle set)."""
-    from ocr_api_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_arr,
-        word_shingles,
-    )
+    """``minhash_signatures_arr`` equals the per-shingle form computed
+    in Python with hashlib, bit for bit: per doc and seed j, the min of
+    md5(f"{j}:{shingle}") over its distinct word 3-grams.  A doc with no
+    shingles gets no row; rows sharing an id get one signature over the
+    union of their shingles."""
+    from ocr_api_spark.operators.dedup import minhash_signatures_arr
 
-    exploded = {
-        tuple(r) for r in minhash_signatures(word_shingles(near_dup_docs, "text", 3), k=4).collect()
-    }
-    projected = {tuple(r) for r in minhash_signatures_arr(near_dup_docs, "text", 3, k=4).collect()}
-    assert exploded == projected
+    rows = [tuple(r) for r in near_dup_docs.collect()] + [
+        (5, ""),  # no shingles
+        (6, "two words"),  # one partial shingle
+        (7, "alpha beta gamma delta"),
+        (7, "gamma delta epsilon"),  # duplicate id: union with the row above
+    ]
+    df = session.createDataFrame(rows, "doc_id long, text string")
+    want: dict = {}
+    for doc_id, text in rows:
+        want.setdefault(doc_id, []).append(text)
+    want = {i: _minhash_replica(texts, 4) for i, texts in want.items()}
+    assert want.pop(5) is None
+
+    got = {r["doc_id"]: tuple(r)[1:] for r in minhash_signatures_arr(df, "text", 3, k=4).collect()}
+    assert got == want
 
 
 def test_minhash_codegen_explode_single_exchange(session):
@@ -673,59 +693,6 @@ def test_duplicated_substring_spans_distinct_islands(session):
     assert spans == [(1, 0, 3), (1, 9, 12), (2, 1, 4), (2, 10, 13)]
 
 
-def test_duplicated_substring_spans_materialize_and_stride1_identical(session, tmp_path):
-    """The r6 materialization knob must not change results: cache mode,
-    parquet-path mode, and stride=1 all emit exactly the default
-    operator's spans (materialize only removes Catalyst's double
-    computation of the window-hash projection)."""
-    from ocr_api_spark.operators.dedup import duplicated_substring_spans
-
-    passage = " ".join(f"p{i}" for i in range(12))
-    rows = [
-        (i, f"h{i}a h{i}b {passage} t{i}") for i in range(6)
-    ] + [(90, "z0 z1 z2 z3 z4 z5 z6 z7")]
-    df = session.createDataFrame(rows, "doc_id long, text string")
-
-    def spans(**kw):
-        return sorted(
-            tuple(r) for r in duplicated_substring_spans(df, window=4, **kw).collect()
-        )
-
-    base = spans()
-    assert base  # the shared passage must actually flag
-    assert spans(stride=1) == base
-    assert spans(materialize="cache") == base
-    assert spans(materialize=str(tmp_path / "wins")) == base
-    session.catalog.clearCache()
-
-
-def test_duplicated_substring_spans_stride_semantics(session):
-    """stride=2: only even-aligned windows exist, so consecutive
-    flagged positions 2 apart must still merge into ONE span, and a
-    duplicated passage is found when an aligned window fits inside it
-    on both copies."""
-    from ocr_api_spark.operators.dedup import duplicated_substring_spans
-
-    passage = " ".join(f"p{i}" for i in range(10))
-    # passage starts at pos 2 in doc 1 and pos 4 in doc 2: aligned
-    # (even) windows inside the passage exist in both docs
-    rows = [
-        (1, f"a0 a1 {passage} a2"),
-        (2, f"b0 b1 b2 b3 {passage}"),
-    ]
-    df = session.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["span_start"], r["span_end"], r["n_windows"])
-        for r in duplicated_substring_spans(df, window=4, stride=2).collect()
-    }
-    # doc1: window starts in passage at even pos 2,4,6,8 (pos+3 <= 11);
-    # doc2: even pos 4,6,8,10 — shared window TEXTS are the 7 aligned
-    # passage windows p0..p3, p2..p5, p4..p7, p6..p9 → per doc those at
-    # even positions: doc1 pos 2(p0..p3),4(p2..),6(p4..),8(p6..);
-    # doc2 pos 4(p0..p3),6,8,10 — all flagged, strided islands merge
-    assert got == {1: (2, 11, 4), 2: (4, 13, 4)}
-
-
 def test_hll_estimate_row_branches(session):
     """The single-row estimator DataFrame: small cardinality takes the
     linear-counting branch, large takes the raw harmonic branch, and
@@ -749,117 +716,33 @@ def test_hll_estimate_row_branches(session):
         assert abs(row["hll_estimate"] - n) / n < 0.25
 
 
-def test_star_cc_matches_label_prop_on_shallow_graph(session):
-    """Drop-in contract: both algorithms return identical clusters on
-    the normal near-dup shape."""
-    from ocr_api_spark.operators.dedup import connected_components
-
-    pairs = session.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12)], "id_a int, id_b int"
-    )
-    nodes = session.createDataFrame([(i,) for i in [1, 2, 3, 4, 5, 10, 11, 12, 99]], "doc_id int")
-    lp = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs, nodes).collect()}
-    st = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs, nodes, algorithm="star").collect()
-    }
-    assert st == lp == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 99: 99}
-
-
 def test_star_cc_converges_on_pathological_chain(session):
-    """A 100-node path has diameter 99: min-label propagation needs ~99
-    rounds (it must raise at the default 30-round budget — silent wrong
-    labels would be worse), while small-star/large-star contracts it in
-    O(log n) rounds within the same budget."""
-    import pytest as _pytest
-
+    """A 100-node path has diameter 99; small-star/large-star contracts
+    it in O(log n) rounds, well within the default 30-round budget.  A
+    budget too small raises — silent wrong labels would be worse."""
     from ocr_api_spark.operators.dedup import connected_components
 
     n = 100
     pairs = session.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a int, id_b int")
     nodes = session.createDataFrame([(i,) for i in range(n)], "doc_id int")
 
-    with _pytest.raises(ValueError, match="did not converge"):
-        connected_components(pairs, nodes, max_iters=30)
-
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs, nodes, max_iters=30, algorithm="star").collect()
-    }
+    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs, nodes, max_iters=30).collect()}
     assert got == {i: 0 for i in range(n)}
+
+    with pytest.raises(ValueError, match="did not converge"):
+        connected_components(pairs, nodes, max_iters=2)
 
 
 def test_star_cc_ignores_phantom_pair_ids(session):
-    """Drop-in parity on dirty input (review r5): pairs referencing ids
-    absent from `nodes` contribute nothing under label_prop (the label
-    join skips them), so star must not propagate connectivity THROUGH
-    a phantom node either."""
+    """Dirty input (review r5): pairs referencing ids absent from
+    `nodes` connect nothing, so no connectivity propagates THROUGH a
+    phantom node."""
     from ocr_api_spark.operators.dedup import connected_components
 
     pairs = session.createDataFrame([(5, 999), (999, 3)], "id_a int, id_b int")
     nodes = session.createDataFrame([(3,), (5,)], "doc_id int")
-    lp = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs, nodes).collect()}
-    st = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs, nodes, algorithm="star").collect()
-    }
-    assert lp == st == {3: 3, 5: 5}
-
-
-def test_duplicated_substring_spans_sample_mod_alignment_robust(session):
-    """Content-defined sampling (sample_mod) must find a duplicated
-    passage whose copies sit at offsets INCONGRUENT mod the sampling
-    rate — the exact miss mode of positional stride (review r6): the
-    selection keys on the window hash itself, so both copies keep the
-    same windows at any alignment."""
-    import pytest
-
-    from ocr_api_spark.operators.dedup import duplicated_substring_spans
-
-    passage = " ".join(f"p{i}" for i in range(40))
-    rows = [
-        (1, f"a0 a1 {passage}"),          # passage starts at pos 2
-        (2, f"b0 b1 b2 {passage}"),       # pos 3: incongruent mod 2
-        (3, "c0 c1 c2 c3 c4 c5 c6 c7"),
-    ]
-    df = session.createDataFrame(rows, "doc_id long, text string")
-
-    # positional stride=2 structurally misses the misaligned pair
-    strided = duplicated_substring_spans(df, window=4, stride=2).collect()
-    assert strided == []
-
-    # content-defined sampling at the same expected volume finds it.
-    # A doc may emit SEVERAL spans (the sampled-gap threshold can split
-    # the passage) and groupBy output has no promised order, so collect
-    # the FULL span set per doc (review r6: a dict comprehension kept
-    # whichever row arrived last — collect-order luck)
-    spans_by_doc: dict[int, list] = {}
-    for r in duplicated_substring_spans(df, window=4, sample_mod=2).collect():
-        spans_by_doc.setdefault(r["doc_id"], []).append(
-            (r["span_start"], r["span_end"])
-        )
-    assert set(spans_by_doc) == {1, 2}
-    s1 = sorted(spans_by_doc[1])
-    s2 = sorted(spans_by_doc[2])
-    # every span covers (a subset of) the passage region in each doc,
-    # offset by each doc's own prefix — approximate bounds, inside text
-    assert all(2 <= a <= b <= 2 + 40 - 1 for a, b in s1)
-    assert all(3 <= a <= b <= 3 + 40 - 1 for a, b in s2)
-    # identical passage ⇒ identical SAMPLED window set ⇒ the whole span
-    # LIST maps to the same passage-relative offsets in both copies
-    assert [(a - 2, b - 2) for a, b in s1] == [(a - 3, b - 3) for a, b in s2]
-
-    # degenerate/identity cases
-    base = sorted(tuple(r) for r in duplicated_substring_spans(df, window=4).collect())
-    assert sorted(tuple(r) for r in duplicated_substring_spans(df, window=4, sample_mod=1).collect()) == base
-    with pytest.raises(ValueError):
-        duplicated_substring_spans(df, window=4, stride=2, sample_mod=2)
-    # sample_mod validation mirrors stride (review r7): 0/negative used
-    # to silently behave as exact — must fail loudly instead
-    with pytest.raises(ValueError, match="sample_mod"):
-        duplicated_substring_spans(df, window=4, sample_mod=0)
-    with pytest.raises(ValueError, match="sample_mod"):
-        duplicated_substring_spans(df, window=4, sample_mod=-3)
+    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs, nodes).collect()}
+    assert got == {3: 3, 5: 5}
 
 
 def test_duplicated_substring_spans_winnow(session):
@@ -911,10 +794,6 @@ def test_duplicated_substring_spans_winnow(session):
     assert w1 == base
     with pytest.raises(ValueError, match="winnow"):
         duplicated_substring_spans(df, window=4, winnow=0)
-    with pytest.raises(ValueError, match="alternative sampling"):
-        duplicated_substring_spans(df, window=4, winnow=3, sample_mod=2)
-    with pytest.raises(ValueError, match="alternative sampling"):
-        duplicated_substring_spans(df, window=4, winnow=3, stride=2)
 
 
 def test_winnow_differential_vs_python_replica(session):

@@ -231,10 +231,8 @@ def test_substring_dedup_no_python_no_cartesian(session):
 def test_substring_dedup_winnow_single_doc_shuffle(session):
     """Winnow mode adds two window passes (argmin + lag) over the SAME
     doc-keyed sort as the hash window — it must not introduce a Python
-    stage, a cartesian, or an extra doc-keyed exchange: exactly one
-    hashpartitioning on the doc column feeds all three Window nodes
-    (the only other exchanges key on whash for the corpus count and the
-    join back)."""
+    stage, a cartesian, or an extra doc-keyed exchange: the plan has as
+    many exchanges on the doc column as the exact operator's."""
     import re
 
     from pyspark.sql import functions as F
@@ -250,9 +248,7 @@ def test_substring_dedup_winnow_single_doc_shuffle(session):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     # same doc-keyed exchange count as the exact operator: the argmin +
-    # lag passes ride the hash window's existing sort (each lazy
-    # recompute side + the islands merge carries one — the materialize
-    # knob collapses the recompute, unchanged by winnow)
+    # lag passes ride the hash window's existing sort
     base_plan = explain_str(duplicated_substring_spans(docs, window=8))
     n_doc_ex = len(re.findall(r"hashpartitioning\(doc_id", plan))
     n_doc_ex_base = len(re.findall(r"hashpartitioning\(doc_id", base_plan))
