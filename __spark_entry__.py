@@ -22,6 +22,7 @@ by name):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1088,39 +1089,41 @@ def _stream_mask_regions(spark, sf_dir):
         )
     )
     src_dir = tempfile.mkdtemp(prefix="mask_stream_src_")
-    synth.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream_src = (
-        spark.readStream.format("parquet")
-        .schema(read_parquet(spark, src_dir).schema)
-        .option("maxFilesPerTrigger", 2)
-        .load(src_dir)
-    )
     name = "mask_regions_" + uuid.uuid4().hex[:12]
-    q = (
-        masking_stream(stream_src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table(name).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("region_idx").cast("int").alias("region_idx"),
-        F.col("x_min").cast("int").alias("x_min"),
-        F.col("y_min").cast("int").alias("y_min"),
-        F.col("x_max").cast("int").alias("x_max"),
-        F.col("y_max").cast("int").alias("y_max"),
-    )
-    # the memory sink table is session-lived; snapshot it so the driver
-    # can collect after further queries run, then drop BOTH the temp
-    # source dir and the uuid-named sink view (review r7: repeated
-    # sweeps in one session would otherwise accumulate stale in-memory
-    # sink tables)
-    out = spark.createDataFrame(got.collect(), schema=got.schema)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
+    try:
+        synth.repartition(4).write.mode("overwrite").parquet(src_dir)
+        stream_src = (
+            spark.readStream.format("parquet")
+            .schema(read_parquet(spark, src_dir).schema)
+            .option("maxFilesPerTrigger", 2)
+            .load(src_dir)
+        )
+        q = (
+            masking_stream(stream_src)
+            .writeStream.format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        got = spark.table(name).select(
+            F.col("doc_id").cast("bigint").alias("doc_id"),
+            F.col("region_idx").cast("int").alias("region_idx"),
+            F.col("x_min").cast("int").alias("x_min"),
+            F.col("y_min").cast("int").alias("y_min"),
+            F.col("x_max").cast("int").alias("x_max"),
+            F.col("y_max").cast("int").alias("y_max"),
+        )
+        # the memory sink table is session-lived; snapshot it so the
+        # driver can collect after further queries run
+        return spark.createDataFrame(got.collect(), schema=got.schema)
+    finally:
+        # drop BOTH the temp source dir and the uuid-named sink view, on
+        # failure too (review r7: repeated sweeps in one session would
+        # otherwise accumulate stale in-memory sink tables)
+        if spark.catalog.tableExists(name):
+            spark.catalog.dropTempView(name)
+        shutil.rmtree(src_dir, ignore_errors=True)
 
 
 _STREAM_MASK_SQL = """
@@ -1549,39 +1552,131 @@ SELECT id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, cosine FROM (
 """
 
 
-def _write_expected_bpe(sf_dir: str) -> None:
-    """Driver-side replica of the TRUE merge-rank BPE count (the regex
-    estimate stays direct SQL; the merge loop isn't SQL-expressible, so
-    it takes the expected-parquet pattern)."""
-    import os
+# --- expected-value oracles --------------------------------------------------
+# Nine queries run a kernel that SQL cannot express (the two extraction
+# queries, the PDF and HTML round trips, three image queries, BPE and
+# k-means).  Their oracle is a parquet file of expected rows that the same
+# kernel computes on the driver: _write_expected writes it, _expected_sql
+# reads it back in DuckDB, and _EXPECTED (next to queries()) says how each
+# kind's rows are computed.  Distributed execution must therefore equal the
+# driver's run of the same code row for row.
 
-    if ("bpe", sf_dir) in _EXPECTED_DONE:
+_EXPECTED_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "dist", "oracle_expected")
+# expected files are keyed per-SF (filename suffix + corpus_key column), so
+# interleaved SFs never clobber each other; memoize successful writes per
+# (kind, sf_dir) so repeated calls for one SF run the driver-side kernel once
+_EXPECTED_DONE: set[tuple[str, str]] = set()
+
+
+def _sf_tag(sf_dir: str) -> str:
+    import re
+
+    base = os.path.basename(os.path.normpath(sf_dir))
+    return re.sub(r"[^A-Za-z0-9._-]", "_", base) or "default"
+
+
+def _corpus_key(texts) -> int:
+    """Total character count of the documents table — distinguishes every
+    test SF (153156 / 149174 / 1485576) and is computable identically in
+    DuckDB as sum(length(text)); NULL texts are skipped on both sides."""
+    return int(texts.str.len().sum())
+
+
+# the oracle SQL globs over every per-SF expected file and selects the one
+# whose corpus_key matches the registered documents view, so oracle and
+# query always agree even if the harness interleaves SFs
+_CORPUS_KEY_SQL = "(SELECT sum(length(text))::BIGINT FROM documents)"
+
+
+def _write_expected(kind: str, sf_dir: str) -> None:
+    """Write ``<kind>_expected_<sf>.parquet``: the rows ``_EXPECTED[kind]``
+    computes for ``sf_dir`` plus their ``corpus_key``.  Memoized only
+    after a successful write, so a failed attempt retries."""
+    if (kind, sf_dir) in _EXPECTED_DONE:
         return
+    frame, key = _EXPECTED[kind](sf_dir)
+    frame["corpus_key"] = key
+    os.makedirs(_EXPECTED_DIR, exist_ok=True)
+    frame.to_parquet(
+        os.path.join(_EXPECTED_DIR, f"{kind}_expected_{_sf_tag(sf_dir)}.parquet"), index=False
+    )
+    _EXPECTED_DONE.add((kind, sf_dir))
+
+
+def _expected_sql(kind: str, key_sql: str = _CORPUS_KEY_SQL) -> str:
+    """DuckDB source of ``kind``'s expected rows for the registered views:
+    the file whose corpus_key equals ``key_sql``."""
+    return (
+        f"(SELECT * FROM read_parquet('{_EXPECTED_DIR}/{kind}_expected_*.parquet', "
+        f"union_by_name=true) WHERE corpus_key = {key_sql})"
+    )
+
+
+def _per_document(bound: int | None, columns: Callable):
+    """Expected rows of a document-keyed kind: ``doc_id`` plus
+    ``columns(docs)`` over the documents with ``doc_id < bound`` (all of
+    them when None), sorted by doc_id and keyed on the whole corpus."""
+
+    def build(sf_dir: str):
+        import pyarrow.parquet as pq
+
+        docs = (
+            pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
+            .to_pandas()
+            .sort_values("doc_id")
+            .reset_index(drop=True)
+        )
+        key = _corpus_key(docs["text"])
+        if bound is not None:
+            docs = docs[docs["doc_id"] < bound].reset_index(drop=True)
+        frame = columns(docs)
+        frame.insert(0, "doc_id", docs["doc_id"].astype("int64"))
+        return frame, key
+
+    return build
+
+
+def _row_columns(row_fn: Callable, *names: str, **dtypes: str) -> Callable:
+    """Expected columns ``names`` from a per-document row function
+    ``row_fn(doc_id, text)``, the one its query runs through ``_row_udf``."""
+
+    def columns(docs):
+        import pandas as pd
+
+        rows = [row_fn(int(d), t) for d, t in zip(docs["doc_id"], docs["text"])]
+        return pd.DataFrame(rows, columns=list(names)).astype(dtypes)
+
+    return columns
+
+
+def _row_udf(row_fn: Callable, return_type):
+    """pandas UDF over ``(doc_id, text)`` that runs ``row_fn`` per
+    document on the executors: the driver's expected rows come from the
+    same function (``_row_columns``).  ``row_fn`` lives at module level,
+    so the UDF pickles it by reference."""
+    from pyspark.sql.pandas.functions import pandas_udf
+    from pyspark.sql.types import StructType
+
+    names = return_type.fieldNames() if isinstance(return_type, StructType) else None
+
+    def rows(doc_ids, texts):
+        import pandas as pd
+
+        out = [row_fn(int(d), t) for d, t in zip(doc_ids, texts)]
+        return pd.Series(out) if names is None else pd.DataFrame(out, columns=names)
+
+    return pandas_udf(rows, return_type)
+
+
+def _bpe_columns(docs):
+    """Driver-side replica of the TRUE merge-rank BPE count (the regex
+    estimate stays direct SQL; the merge loop isn't SQL-expressible)."""
     import pandas as pd
-    import pyarrow.parquet as pq
 
     from ocr_api_spark.kernels.bpe import BpeTokenizer
 
-    os.makedirs(_EXPECTED_DIR, exist_ok=True)
-    docs = (
-        pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
-        .to_pandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    key = _corpus_key(docs["text"])
-    docs = docs[docs["doc_id"] < 200]
     tok = BpeTokenizer()
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "bpe_merge_token_count": [tok.count(t) if t else 0 for t in docs["text"]],
-            "corpus_key": key,
-        }
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"bpe_expected_{_sf_tag(sf_dir)}.parquet"), index=False
-    )
-    _EXPECTED_DONE.add(("bpe", sf_dir))
+    return pd.DataFrame({"bpe_merge_token_count": [tok.count(t) if t else 0 for t in docs["text"]]})
 
 
 def _doc_bpe_tokens(spark, sf_dir):
@@ -1594,7 +1689,7 @@ def _doc_bpe_tokens(spark, sf_dir):
         with_token_count,
     )
 
-    _write_expected_bpe(sf_dir)
+    _write_expected("bpe", sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     return with_bpe_merge_token_count(with_bpe_token_count(with_token_count(docs))).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1604,15 +1699,13 @@ def _doc_bpe_tokens(spark, sf_dir):
     )
 
 
-def _doc_bpe_sql() -> str:
-    return rf"""
+_DOC_BPE_SQL = rf"""
 SELECT d.doc_id::BIGINT AS doc_id,
        len(string_split(d.text, ' '))::BIGINT AS token_count,
        len(regexp_extract_all(d.text, '[A-Za-z]+|[0-9]{{1,3}}|[^A-Za-z0-9\s]'))::BIGINT AS bpe_token_count,
        e.bpe_merge_token_count::BIGINT AS bpe_merge_token_count
 FROM documents d
-JOIN read_parquet('{_EXPECTED_DIR}/bpe_expected_*.parquet', union_by_name=true) e
-  ON e.doc_id = d.doc_id AND e.corpus_key = {_CORPUS_KEY_SQL}
+JOIN {_expected_sql("bpe")} e ON e.doc_id = d.doc_id
 WHERE d.doc_id < 200
 """
 
@@ -1668,55 +1761,17 @@ def _image_payload(doc_id: int, text: str) -> bytes:
 
 
 def _image_feature_row(doc_id: int, text: str) -> tuple:
-    from ocr_api_spark.operators.multimodal import _Decoder
-
-    payload = _image_payload(doc_id, text)
-    feature, status = _Decoder.get().decode(payload)
-    return status, [float(v) for v in feature]
-
-
-def _feature_sig(feature: list) -> str:
-    """Canonical scalar for an array<double> feature: md5 of the
-    repr-joined values. The driver's pandas canonicalizer sorts result
-    columns, and list-valued cells are unhashable there — the gate
-    compares this digest instead (same pattern as img_preocr_chain's
-    pixel md5); the raw array stays available to pytest via
-    _image_feature_row."""
+    """(decode_status, feature_sig) of the document's image payload.
+    The signature is the md5 of the repr-joined feature values: the
+    driver's pandas canonicalizer sorts result columns, and list-valued
+    cells are unhashable there, so the gate compares this digest (same
+    pattern as img_preocr_chain's pixel md5)."""
     import hashlib
 
-    return hashlib.md5(",".join(repr(v) for v in feature).encode()).hexdigest()
+    from ocr_api_spark.operators.multimodal import _Decoder
 
-
-def _write_expected_img_features(sf_dir: str) -> None:
-    import os
-
-    if ("img_features", sf_dir) in _EXPECTED_DONE:
-        return
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    os.makedirs(_EXPECTED_DIR, exist_ok=True)
-    docs = (
-        pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
-        .to_pandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    key = _corpus_key(docs["text"])
-    docs = docs[docs["doc_id"] < 40]
-    rows = [_image_feature_row(int(d), t) for d, t in zip(docs["doc_id"], docs["text"])]
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "decode_status": [r[0] for r in rows],
-            "feature_sig": [_feature_sig(r[1]) for r in rows],
-            "corpus_key": key,
-        }
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"img_features_expected_{_sf_tag(sf_dir)}.parquet"),
-        index=False,
-    )
-    _EXPECTED_DONE.add(("img_features", sf_dir))
+    feature, status = _Decoder.get().decode(_image_payload(doc_id, text))
+    return status, hashlib.md5(",".join(repr(float(v)) for v in feature).encode()).hexdigest()
 
 
 def _img_decode_features(spark, sf_dir):
@@ -1725,43 +1780,24 @@ def _img_decode_features(spark, sf_dir):
     every row filter) decoded by the pure-numpy codecs inside the
     distributed UDF; statistics must equal the driver-side run of the
     same code bit-for-bit."""
-    from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import StringType, StructField, StructType
 
-    _write_expected_img_features(sf_dir)
+    _write_expected("img_features", sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40)
-
-    schema = StructType(
-        [
-            StructField("decode_status", StringType()),
-            StructField("feature_sig", StringType()),
-        ]
+    feats = _row_udf(
+        _image_feature_row,
+        StructType(
+            [StructField("decode_status", StringType()), StructField("feature_sig", StringType())]
+        ),
     )
-
-    @pandas_udf(schema)
-    def feats(doc_ids, texts):
-        import pandas as pd
-
-        rows = [_image_feature_row(int(d), t) for d, t in zip(doc_ids, texts)]
-        return pd.DataFrame(
-            {
-                "decode_status": [r[0] for r in rows],
-                "feature_sig": [_feature_sig(r[1]) for r in rows],
-            }
-        )
-
-    out = docs.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        feats("doc_id", "text").alias("__f"),
-    )
-    return out.select("doc_id", "__f.decode_status", "__f.feature_sig")
+    return docs.select(
+        F.col("doc_id").cast("bigint").alias("doc_id"), feats("doc_id", "text").alias("__f")
+    ).select("doc_id", "__f.*")
 
 
-def _img_features_sql() -> str:
-    return f"""
+_IMG_FEATURES_SQL = f"""
 SELECT doc_id::BIGINT AS doc_id, decode_status, feature_sig
-FROM read_parquet('{_EXPECTED_DIR}/img_features_expected_*.parquet', union_by_name=true)
-WHERE corpus_key = {_CORPUS_KEY_SQL}
+FROM {_expected_sql("img_features")}
 """
 
 
@@ -1830,63 +1866,19 @@ def _pdf_raster_row(doc_id: int, text: str) -> tuple:
     )
 
 
-def _write_expected_pdf_raster(sf_dir: str) -> None:
-    import os
-
-    if ("pdf_raster", sf_dir) in _EXPECTED_DONE:
-        return
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    os.makedirs(_EXPECTED_DIR, exist_ok=True)
-    docs = (
-        pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
-        .to_pandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    key = _corpus_key(docs["text"])
-    docs = docs[docs["doc_id"] < 40]
-    rows = [_pdf_raster_row(int(d), t) for d, t in zip(docs["doc_id"], docs["text"])]
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "n_pages": pd.array([r[0] for r in rows], dtype="Int32"),
-            "raster_status": [r[1] for r in rows],
-            "out_h": pd.array([r[2] for r in rows], dtype="Int32"),
-            "out_w": pd.array([r[3] for r in rows], dtype="Int32"),
-            "pixel_md5": [r[4] for r in rows],
-            "corpus_key": key,
-        }
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"pdf_raster_expected_{_sf_tag(sf_dir)}.parquet"),
-        index=False,
-    )
-    _EXPECTED_DONE.add(("pdf_raster", sf_dir))
-
-
 def _img_pdf_raster(spark, sf_dir):
     """S3 in the exact gate: deterministic scanned-document PDFs
     rasterized by the REAL ``pdf_raster`` operator (mapInPandas over
     the pure-numpy codec stack) with the reference's 1/2-page merge and
     reject logic; distributed output pixels must md5-match the
     driver-side run bit-for-bit (reference app.py:419-443)."""
-    from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import BinaryType
 
     from ocr_api_spark.operators.multimodal import pdf_raster
 
-    _write_expected_pdf_raster(sf_dir)
+    _write_expected("pdf_raster", sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40)
-
-    @pandas_udf(BinaryType())
-    def payload(doc_ids, texts):
-        import pandas as pd
-
-        return pd.Series(
-            [_pdf_raster_payload(int(d), t) for d, t in zip(doc_ids, texts)]
-        )
-
+    payload = _row_udf(_pdf_raster_payload, BinaryType())
     with_payload = docs.select(
         F.col("doc_id").cast("string").alias("url"),
         payload("doc_id", "text").alias("payload"),
@@ -1901,12 +1893,10 @@ def _img_pdf_raster(spark, sf_dir):
     )
 
 
-def _pdf_raster_sql() -> str:
-    return f"""
+_PDF_RASTER_SQL = f"""
 SELECT doc_id::BIGINT AS doc_id, n_pages::INT AS n_pages, raster_status,
        out_h::INT AS out_h, out_w::INT AS out_w, pixel_md5
-FROM read_parquet('{_EXPECTED_DIR}/pdf_raster_expected_*.parquet', union_by_name=true)
-WHERE corpus_key = {_CORPUS_KEY_SQL}
+FROM {_expected_sql("pdf_raster")}
 """
 
 
@@ -1940,79 +1930,34 @@ def _preocr_row(doc_id: int, text: str) -> tuple:
     )
 
 
-def _write_expected_preocr(sf_dir: str) -> None:
-    import os
-
-    if ("preocr", sf_dir) in _EXPECTED_DONE:
-        return
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    os.makedirs(_EXPECTED_DIR, exist_ok=True)
-    docs = (
-        pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
-        .to_pandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    key = _corpus_key(docs["text"])
-    docs = docs[docs["doc_id"] < 24]
-    rows = [_preocr_row(int(d), t) for d, t in zip(docs["doc_id"], docs["text"])]
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "osd_angle": [r[0] for r in rows],
-            "out_h": [r[1] for r in rows],
-            "out_w": [r[2] for r in rows],
-            "pixels_md5": [r[3] for r in rows],
-            "corpus_key": key,
-        }
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"preocr_expected_{_sf_tag(sf_dir)}.parquet"), index=False
-    )
-    _EXPECTED_DONE.add(("preocr", sf_dir))
-
-
 def _img_preocr_chain(spark, sf_dir):
     """The numpy image-processing chain itself in the exact gate:
     codec decode → rotation warp → INTER_CUBIC upscale → CLAHE +
     unsharp, distributed, byte-hashed against the driver-side run."""
-    from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-    _write_expected_preocr(sf_dir)
+    _write_expected("preocr", sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 24)
-
-    schema = StructType(
-        [
-            StructField("osd_angle", IntegerType()),
-            StructField("out_h", IntegerType()),
-            StructField("out_w", IntegerType()),
-            StructField("pixels_md5", StringType()),
-        ]
+    chain = _row_udf(
+        _preocr_row,
+        StructType(
+            [
+                StructField("osd_angle", IntegerType()),
+                StructField("out_h", IntegerType()),
+                StructField("out_w", IntegerType()),
+                StructField("pixels_md5", StringType()),
+            ]
+        ),
     )
-
-    @pandas_udf(schema)
-    def chain(doc_ids, texts):
-        import pandas as pd
-
-        rows = [_preocr_row(int(d), t) for d, t in zip(doc_ids, texts)]
-        return pd.DataFrame(
-            rows, columns=["osd_angle", "out_h", "out_w", "pixels_md5"]
-        )
-
-    out = docs.select(
+    return docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"), chain("doc_id", "text").alias("__c")
-    )
-    return out.select("doc_id", "__c.osd_angle", "__c.out_h", "__c.out_w", "__c.pixels_md5")
+    ).select("doc_id", "__c.*")
 
 
-def _img_preocr_sql() -> str:
-    return f"""
+_IMG_PREOCR_SQL = f"""
 SELECT doc_id::BIGINT AS doc_id, osd_angle::INT AS osd_angle,
        out_h::INT AS out_h, out_w::INT AS out_w, pixels_md5
-FROM read_parquet('{_EXPECTED_DIR}/preocr_expected_*.parquet', union_by_name=true)
-WHERE corpus_key = {_CORPUS_KEY_SQL}
+FROM {_expected_sql("preocr")}
 """
 
 
@@ -2060,29 +2005,21 @@ def _kmeans_replica(ids, vectors, k=4, iters=3):
     return [assign(vectors[i]) for i in range(len(ids))], cents
 
 
-def _write_expected_kmeans(sf_dir: str) -> None:
-    import os
-
-    if ("kmeans", sf_dir) in _EXPECTED_DONE:
-        return
+def _kmeans_expected(sf_dir: str):
+    """Expected ``(vec_id, ivf_list)`` rows of emb_ivf_kmeans, keyed on
+    ``count(*) * 10000 + sum(label)`` of the embeddings table."""
     import pandas as pd
     import pyarrow.parquet as pq
 
-    os.makedirs(_EXPECTED_DIR, exist_ok=True)
     t = pq.read_table(
         os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding", "label"]
     ).to_pandas()
     ids = [int(v) for v in t["vec_id"]]
-    vectors = [list(v) for v in t["embedding"]]
-    labels, _cents = _kmeans_replica(ids, vectors, k=4, iters=3)
-    key = int(len(ids)) * 10000 + int(t["label"].sum())
-    pd.DataFrame(
-        {"vec_id": pd.Series(ids, dtype="int64"), "ivf_list": pd.Series(labels, dtype="int32"),
-         "corpus_key": key}
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"kmeans_expected_{_sf_tag(sf_dir)}.parquet"), index=False
+    labels, _cents = _kmeans_replica(ids, [list(v) for v in t["embedding"]], k=4, iters=3)
+    frame = pd.DataFrame(
+        {"vec_id": pd.Series(ids, dtype="int64"), "ivf_list": pd.Series(labels, dtype="int32")}
     )
-    _EXPECTED_DONE.add(("kmeans", sf_dir))
+    return frame, len(ids) * 10000 + int(t["label"].sum())
 
 
 def _emb_ivf_kmeans(spark, sf_dir):
@@ -2093,7 +2030,7 @@ def _emb_ivf_kmeans(spark, sf_dir):
     decimal replica bit-for-bit."""
     from ocr_api_spark.operators.ivf import kmeans_lloyd
 
-    _write_expected_kmeans(sf_dir)
+    _write_expected("kmeans", sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     assigned, _cents = kmeans_lloyd(emb, k=4, iters=3)
     return assigned.select(
@@ -2102,12 +2039,9 @@ def _emb_ivf_kmeans(spark, sf_dir):
     )
 
 
-def _emb_kmeans_sql() -> str:
-    # built lazily: _EXPECTED_DIR is defined further down the module
-    return f"""
+_EMB_KMEANS_SQL = f"""
 SELECT vec_id::BIGINT AS vec_id, ivf_list::INT AS ivf_list
-FROM read_parquet('{_EXPECTED_DIR}/kmeans_expected_*.parquet', union_by_name=true)
-WHERE corpus_key = (SELECT count(*) * 10000 + sum(label) FROM embeddings)
+FROM {_expected_sql("kmeans", "(SELECT count(*) * 10000 + sum(label) FROM embeddings)")}
 """
 
 
@@ -2340,255 +2274,101 @@ ORDER BY cosine DESC, vec_id ASC LIMIT 10
 
 
 # --- kernel-backed: differential oracle via driver-side expected parquet ----
+# The extraction queries are exact value checks: the driver runs the SAME
+# parity-proven batch kernel (operators.extract.extract_batch, which the
+# pandas UDF wraps) over the documents table, and the kernel itself is
+# differentially parity-tested against the reference
+# (tests/test_reference_parity.py).
 
-_EXPECTED_DIR = "/root/repo/dist/oracle_expected"
 _BRANCH_TYPES = ["pan", "aadhaar", "bank", "financial", "dl", "passport"]
-# expected files are keyed per-SF (filename suffix + corpus_key column), so
-# interleaved SFs never clobber each other; memoize successful writes per
-# (kind, sf_dir) so repeated calls for one SF run the driver-side kernel once
-_EXPECTED_DONE: set[tuple[str, str]] = set()
 
 
-def _sf_tag(sf_dir: str) -> str:
-    import os
-    import re
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return re.sub(r"[^A-Za-z0-9._-]", "_", base) or "default"
-
-
-def _corpus_key(texts) -> int:
-    """Total character count of the documents table — distinguishes every
-    test SF (153156 / 149174 / 1485576) and is computable identically in
-    DuckDB as sum(length(text)); NULL texts are skipped on both sides."""
-    return int(texts.str.len().sum())
-
-
-# the oracle SQL globs over every per-SF expected file and selects the one
-# whose corpus_key matches the registered documents view, so oracle and
-# query always agree even if the harness interleaves SFs
-_CORPUS_KEY_SQL = "(SELECT sum(length(text))::BIGINT FROM documents)"
-
-
-def _write_expected_extractions(sf_dir: str) -> None:
-    """Turn the kernel-extraction queries into exact value checks: run the
-    SAME parity-proven batch kernel (operators.extract.extract_batch, which
-    the pandas UDF wraps) locally on the driver over the documents table and
-    persist the expected rows as parquet; the DuckDB oracle reads them back
-    with read_parquet.  Distributed execution must therefore equal local
-    kernel execution row-for-row — and the kernel itself is differentially
-    parity-tested against the reference (tests/test_reference_parity.py).
-    """
-    import os
-
-    if ("extractions", sf_dir) in _EXPECTED_DONE:
-        return
-
+def _pan_columns(docs):
     import pandas as pd
-    import pyarrow.parquet as pq
 
     from ocr_api_spark.operators.extract import extract_batch
 
-    os.makedirs(_EXPECTED_DIR, exist_ok=True)
-    docs = (
-        pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
-        .to_pandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-
-    pan_out = extract_batch(docs["text"], pd.Series(["pan"] * len(docs)))
-    pd.DataFrame(
+    out = extract_batch(docs["text"], pd.Series(["pan"] * len(docs)))
+    return pd.DataFrame(
         {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "status": pan_out["status"].astype(object),
-            "ocr_name": [(p or {}).get("ocr_name") for p in pan_out["pan"]],
-            "ocr_dob": [(p or {}).get("ocr_dob") for p in pan_out["pan"]],
-            "corpus_key": _corpus_key(docs["text"]),
+            "status": out["status"].astype(object),
+            "ocr_name": [(p or {}).get("ocr_name") for p in out["pan"]],
+            "ocr_dob": [(p or {}).get("ocr_dob") for p in out["pan"]],
         }
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"pan_expected_{_sf_tag(sf_dir)}.parquet"), index=False
     )
 
-    br = docs[docs["doc_id"] < 600].reset_index(drop=True)
-    types = pd.Series([_BRANCH_TYPES[int(d) % 6] for d in br["doc_id"]])
-    br_out = extract_batch(br["text"], types)
-    pd.DataFrame(
-        {
-            "doc_id": br["doc_id"].astype("int64"),
-            "doc_type": types.astype(object),
-            "status": br_out["status"].astype(object),
-            "corpus_key": _corpus_key(docs["text"]),
-        }
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"branches_expected_{_sf_tag(sf_dir)}.parquet"), index=False
-    )
-    # memoize only after a SUCCESSFUL write: a failed attempt must retry
-    _EXPECTED_DONE.add(("extractions", sf_dir))
 
-
-def _write_expected_pdf_roundtrip(sf_dir: str) -> None:
-    """Differential oracle for the PDF text layer (S4): lay every
-    document out as a deterministic one-page PDF and parse it back —
-    driver-side locally, Spark-side distributed; byte-equal or red."""
-    import os
-
-    if ("pdf_roundtrip", sf_dir) in _EXPECTED_DONE:
-        return
-
+def _branch_columns(docs):
     import pandas as pd
-    import pyarrow.parquet as pq
 
+    from ocr_api_spark.operators.extract import extract_batch
+
+    types = pd.Series([_BRANCH_TYPES[int(d) % 6] for d in docs["doc_id"]])
+    out = extract_batch(docs["text"], types)
+    return pd.DataFrame({"doc_type": types.astype(object), "status": out["status"].astype(object)})
+
+
+def _pdf_roundtrip_row(doc_id: int, text: str) -> str | None:
+    """The document laid out as a deterministic one-page PDF and parsed
+    back.  Odd doc_ids write /FlateDecode content streams, so the gate
+    covers the compressed parse path too."""
     from ocr_api_spark.sources.pdftext import pdf_from_text, pdf_text
 
-    os.makedirs(_EXPECTED_DIR, exist_ok=True)
-    docs = (
-        pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
-        .to_pandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    key = _corpus_key(docs["text"])
-    docs = docs[docs["doc_id"] < 50]
-    # odd doc_ids write /FlateDecode content streams (same rule in the
-    # Spark UDF), so the driver gate covers the compressed parse path too
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "pdf_text": [
-                pdf_text(pdf_from_text(t, compress=bool(d % 2)))
-                for d, t in zip(docs["doc_id"], docs["text"])
-            ],
-            "corpus_key": key,
-        }
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"pdf_roundtrip_expected_{_sf_tag(sf_dir)}.parquet"),
-        index=False,
-    )
-    # memoize only after a SUCCESSFUL write: a failed attempt must retry
-    _EXPECTED_DONE.add(("pdf_roundtrip", sf_dir))
-
-
-_PDF_ROUNDTRIP_SQL = f"""
-SELECT doc_id::BIGINT AS doc_id, pdf_text
-FROM read_parquet('{_EXPECTED_DIR}/pdf_roundtrip_expected_*.parquet', union_by_name=true)
-WHERE corpus_key = {_CORPUS_KEY_SQL}
-"""
+    return None if text is None else pdf_text(pdf_from_text(text, compress=bool(doc_id % 2)))
 
 
 def _doc_pdf_roundtrip(spark, sf_dir):
     """S4 in the driver gate: per-document deterministic PDF bytes →
     the distributed %PDF parse branch; compared against the driver-side
     run of the same writer+parser."""
-    from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import StringType
 
-    _write_expected_pdf_roundtrip(sf_dir)
+    _write_expected("pdf_roundtrip", sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
-
-    @pandas_udf(StringType())
-    def roundtrip(doc_ids, texts):
-        import pandas as pd
-
-        from ocr_api_spark.sources.pdftext import pdf_from_text, pdf_text
-
-        return pd.Series(
-            [
-                pdf_text(pdf_from_text(t, compress=bool(int(d) % 2))) if t is not None else None
-                for d, t in zip(doc_ids, texts)
-            ]
-        )
-
+    roundtrip = _row_udf(_pdf_roundtrip_row, StringType())
     return docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         roundtrip("doc_id", "text").alias("pdf_text"),
     )
 
 
-def _write_expected_html_roundtrip(sf_dir: str) -> None:
-    """Differential oracle for the HTML boilerplate branch (the north
-    rule's flagship capability): wrap each document's text in
-    deterministic page chrome and strip it back — locally here, on the
-    cluster in the query; byte-equal or red."""
-    import os
+_PDF_ROUNDTRIP_SQL = f"""
+SELECT doc_id::BIGINT AS doc_id, pdf_text FROM {_expected_sql("pdf_roundtrip")}
+"""
 
-    if ("html_roundtrip", sf_dir) in _EXPECTED_DONE:
-        return
 
-    import pandas as pd
-    import pyarrow.parquet as pq
-
+def _html_roundtrip_row(doc_id: int, text: str) -> str | None:
+    """The document's text wrapped in deterministic page chrome and
+    stripped back by the boilerplate kernel (the HTML branch)."""
     from ocr_api_spark.kernels.boilerplate import extract_main_text
     from ocr_api_spark.sources.doctexts import wrap_text_as_page
 
-    os.makedirs(_EXPECTED_DIR, exist_ok=True)
-    docs = (
-        pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
-        .to_pandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    key = _corpus_key(docs["text"])
-    docs = docs[docs["doc_id"] < 100]
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "main_text": [extract_main_text(wrap_text_as_page(t)) for t in docs["text"]],
-            "corpus_key": key,
-        }
-    ).to_parquet(
-        os.path.join(_EXPECTED_DIR, f"html_roundtrip_expected_{_sf_tag(sf_dir)}.parquet"),
-        index=False,
-    )
-    # memoize only after a SUCCESSFUL write: a failed attempt must retry
-    _EXPECTED_DONE.add(("html_roundtrip", sf_dir))
-
-
-_HTML_ROUNDTRIP_SQL = f"""
-SELECT doc_id::BIGINT AS doc_id, main_text
-FROM read_parquet('{_EXPECTED_DIR}/html_roundtrip_expected_*.parquet', union_by_name=true)
-WHERE corpus_key = {_CORPUS_KEY_SQL}
-"""
+    return None if text is None else extract_main_text(wrap_text_as_page(text))
 
 
 def _doc_html_roundtrip(spark, sf_dir):
     """Boilerplate strip in the driver gate: deterministic chrome wrap →
     the distributed boilerplate UDF; exact vs the driver-side run."""
-    from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import StringType
 
-    _write_expected_html_roundtrip(sf_dir)
+    _write_expected("html_roundtrip", sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-
-    @pandas_udf(StringType())
-    def roundtrip(texts):
-        from ocr_api_spark.kernels.boilerplate import extract_main_text
-        from ocr_api_spark.sources.doctexts import wrap_text_as_page
-
-        return texts.map(lambda t: extract_main_text(wrap_text_as_page(t)) if t is not None else None)
-
+    roundtrip = _row_udf(_html_roundtrip_row, StringType())
     return docs.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), roundtrip("text").alias("main_text")
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        roundtrip("doc_id", "text").alias("main_text"),
     )
 
 
-_PAN_EXPECTED_SQL = f"""
-SELECT doc_id::BIGINT AS doc_id, status, ocr_name, ocr_dob
-FROM read_parquet('{_EXPECTED_DIR}/pan_expected_*.parquet', union_by_name=true)
-WHERE corpus_key = {_CORPUS_KEY_SQL}
-"""
-
-_BRANCHES_EXPECTED_SQL = f"""
-SELECT doc_id::BIGINT AS doc_id, doc_type, status
-FROM read_parquet('{_EXPECTED_DIR}/branches_expected_*.parquet', union_by_name=true)
-WHERE corpus_key = {_CORPUS_KEY_SQL}
+_HTML_ROUNDTRIP_SQL = f"""
+SELECT doc_id::BIGINT AS doc_id, main_text FROM {_expected_sql("html_roundtrip")}
 """
 
 
 def _extract_pan_over_documents(spark, sf_dir):
     from ocr_api_spark.operators.extract import with_extraction
 
-    _write_expected_extractions(sf_dir)
+    _write_expected("pan", sf_dir)
     # no doc_type column: every document runs the PAN cascade
     return with_extraction(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -2604,7 +2384,7 @@ def _extract_all_branches(spark, sf_dir):
     exactly against the driver-side kernel run (differential oracle)."""
     from ocr_api_spark.operators.extract import with_extraction
 
-    _write_expected_extractions(sf_dir)
+    _write_expected("branches", sf_dir)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 600)
     doc_type = F.element_at(
         F.array(*[F.lit(t) for t in _BRANCH_TYPES]),
@@ -2615,6 +2395,15 @@ def _extract_all_branches(spark, sf_dir):
         "doc_type",
         F.col("extraction.status").alias("status"),
     )
+
+
+_PAN_EXPECTED_SQL = f"""
+SELECT doc_id::BIGINT AS doc_id, status, ocr_name, ocr_dob FROM {_expected_sql("pan")}
+"""
+
+_BRANCHES_EXPECTED_SQL = f"""
+SELECT doc_id::BIGINT AS doc_id, doc_type, status FROM {_expected_sql("branches")}
+"""
 
 
 def _doc_spans(spark, sf_dir):
@@ -2744,6 +2533,32 @@ GROUP BY 1, 2
 """
 
 
+# kind -> builder of its expected rows: sf_dir -> (rows, corpus key).  The
+# document-keyed kinds bound doc_id as their query does; kmeans keys on the
+# embeddings table, and its oracle hands that key's SQL to _expected_sql.
+_EXPECTED: dict[str, Callable] = {
+    "pan": _per_document(None, _pan_columns),
+    "branches": _per_document(600, _branch_columns),
+    "bpe": _per_document(200, _bpe_columns),
+    "img_features": _per_document(
+        40, _row_columns(_image_feature_row, "decode_status", "feature_sig")
+    ),
+    "pdf_raster": _per_document(
+        40,
+        _row_columns(
+            _pdf_raster_row, "n_pages", "raster_status", "out_h", "out_w", "pixel_md5",
+            n_pages="Int32", out_h="Int32", out_w="Int32",
+        ),
+    ),
+    "preocr": _per_document(
+        24, _row_columns(_preocr_row, "osd_angle", "out_h", "out_w", "pixels_md5")
+    ),
+    "pdf_roundtrip": _per_document(50, _row_columns(_pdf_roundtrip_row, "pdf_text")),
+    "html_roundtrip": _per_document(100, _row_columns(_html_roundtrip_row, "main_text")),
+    "kmeans": _kmeans_expected,
+}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Exactly 50 registered queries — the driver's correctness artifact
     records at most 50 rows (round-4 verdict: 57 registered left 7
@@ -2839,23 +2654,15 @@ def retired_oracle_sql() -> dict[str, str]:
 
 def oracle_sql() -> dict[str, str]:
     # The driver may run oracles before (or without) the Spark queries, so
-    # make sure the expected-extraction parquet exists for the correctness
-    # SF; the query functions regenerate it for whatever sf_dir they get.
-    import os
-
+    # write the expected files for the correctness SF; the query functions
+    # regenerate theirs for whatever sf_dir they get.
     default_sf = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     if os.path.isdir(default_sf):
-        try:
-            _write_expected_extractions(default_sf)
-            _write_expected_pdf_roundtrip(default_sf)
-            _write_expected_html_roundtrip(default_sf)
-            _write_expected_kmeans(default_sf)
-            _write_expected_img_features(default_sf)
-            _write_expected_pdf_raster(default_sf)
-            _write_expected_bpe(default_sf)
-            _write_expected_preocr(default_sf)
-        except Exception:
-            pass  # queries() regenerates for its own sf_dir anyway
+        for kind in _EXPECTED:
+            try:
+                _write_expected(kind, default_sf)
+            except Exception:
+                pass  # the query regenerates its own file
     return {
         "q1_pricing_summary": _Q1_SQL,
         "q3_top_revenue": _Q3_SQL,
@@ -2894,15 +2701,15 @@ def oracle_sql() -> dict[str, str]:
         "emb_pq_topk": _emb_pq_topk_sql(),
         "emb_ivf_topk": _emb_ivf_topk_sql(),
         "emb_ivfpq_topk": _emb_ivfpq_sql(),
-        "emb_ivf_kmeans": _emb_kmeans_sql(),
-        "img_decode_features": _img_features_sql(),
-        "img_pdf_raster": _pdf_raster_sql(),
-        "img_preocr_chain": _img_preocr_sql(),
+        "emb_ivf_kmeans": _EMB_KMEANS_SQL,
+        "img_decode_features": _IMG_FEATURES_SQL,
+        "img_pdf_raster": _PDF_RASTER_SQL,
+        "img_preocr_chain": _IMG_PREOCR_SQL,
         "emb_label_centroid": _EMB_CENTROID_SQL,
         "doc_simhash_bands": _DOC_SIMHASH_BANDS_SQL,
         "doc_winnowing": _DOC_WINNOW_SQL,
         "emb_near_dup_auto": _EMB_NEAR_DUP_AUTO_SQL,
-        "doc_bpe_tokens": _doc_bpe_sql(),
+        "doc_bpe_tokens": _DOC_BPE_SQL,
         "extract_pan_over_documents": _PAN_EXPECTED_SQL,
         "extract_all_branches": _BRANCHES_EXPECTED_SQL,
         "doc_pdf_roundtrip": _PDF_ROUNDTRIP_SQL,

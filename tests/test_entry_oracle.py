@@ -88,12 +88,26 @@ def test_entry_smoke(session):
     assert df.count() == 500
 
 
-def test_rows_only_queries_run(session):
+def test_every_query_has_an_oracle():
+    """A query registered without an oracle (or an oracle without its
+    query) fails here, for the driver's registry and the retired one."""
     import __spark_entry__ as entry
 
-    oracles = entry.oracle_sql()
-    for name, q in entry.queries().items():
-        if name in oracles:
-            continue
-        df = q(session, "/root/testdata/sf0.001")
-        assert df.count() >= 0, name
+    assert entry.queries().keys() == entry.oracle_sql().keys()
+    assert entry.retired_queries().keys() == entry.retired_oracle_sql().keys()
+
+
+def test_expected_dir_follows_checkout(tmp_path):
+    """The expected-value files live under the checkout the module was
+    loaded from, so two checkouts never share (or overwrite) them."""
+    import importlib.util
+    import shutil
+
+    import __spark_entry__ as entry
+
+    copy = tmp_path / "__spark_entry__.py"
+    shutil.copy(entry.__file__, copy)
+    spec = importlib.util.spec_from_file_location("spark_entry_copy", copy)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    assert os.path.commonpath([module._EXPECTED_DIR, str(tmp_path)]) == str(tmp_path)

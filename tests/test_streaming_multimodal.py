@@ -455,3 +455,32 @@ def test_near_dup_keyless_rows_pass_through(session):
     keys = [r["near_key"] for r in with_near_key(pages).select("near_key").collect()]
     assert len(set(keys)) == 3, keys  # per-row unique, nothing shared
     assert "" not in keys
+
+
+def test_near_key_equals_minhash_signatures(session):
+    """with_near_key's k min-hashes are minhash_signatures_arr's: for
+    every document with shingles, near_key is "|".join(mh0..mh3)."""
+    from pyspark.sql import functions as F
+
+    from ocr_api_spark.operators.dedup import minhash_signatures_arr
+    from ocr_api_spark.streaming.stream import with_near_key
+
+    short = session.createDataFrame(
+        [(-1, "two words"), (-2, "one"), (-3, ""), (-4, None)], "doc_id long, text string"
+    )
+    docs = (
+        session.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text")
+        .unionByName(short)
+    )
+    pages = docs.withColumn("url", F.col("doc_id").cast("string")).withColumn(
+        "html", F.lit(None).cast("binary")
+    )
+    keys = dict(map(tuple, with_near_key(pages).select("doc_id", "near_key").collect()))
+    sigs = {
+        r["doc_id"]: "|".join(r[f"mh{j}"] for j in range(4))
+        for r in minhash_signatures_arr(docs, "text", 3, 4).collect()
+    }
+    assert len(sigs) >= 500 and -1 in sigs and -2 in sigs
+    assert -3 not in sigs and -4 not in sigs  # no shingles, no signature
+    assert {d: keys[d] for d in sigs} == sigs
