@@ -82,13 +82,13 @@ def _steal_pct() -> float | None:
 def timed_best(
     fn, trials: int = 3, max_attempts: int | None = None, between=None
 ) -> tuple[float, list[float], int]:
-    """Best-of-``trials`` CLEAN wall-time samples of ``fn``, each trial
-    gated on its OWN /proc/stat steal window (the kernel-extras
-    discipline from r5, extended to the Spark-query section per the r5
-    verdict: q1 read +97% on UNCHANGED code because one noisy draw was
-    the record).  Dirty windows are re-run (bounded); if every window
-    was dirty the fastest dirty sample is the least-wrong answer (a
-    noisy neighbor only ever slows a query down).
+    """Fastest wall-time sample of ``fn``.  Each trial is gated on its
+    OWN /proc/stat steal window (the r5 verdict: q1 read +97% on
+    UNCHANGED code because one noisy draw was the record), and dirty
+    windows are re-run (bounded) until ``trials`` are clean.  Steal
+    only ever adds time, so the result is the minimum over every
+    sample, clean or dirty: a slow cold trial that happened to be clean
+    cannot outrank a faster dirty one.
 
     ``between`` (optional) runs after each sample OUTSIDE the timed
     window — inter-trial bookkeeping (cache clears, output deletion)
@@ -99,7 +99,6 @@ def timed_best(
     if max_attempts is None:
         max_attempts = trials * 2
     samples: list[float] = []
-    best_clean = best_any = float("inf")
     clean = attempts = 0
     while clean < trials and attempts < max_attempts:
         attempts += 1
@@ -111,15 +110,12 @@ def timed_best(
         if between is not None:
             between()
         samples.append(round(dt, 3))
-        best_any = min(best_any, dt)
         if s0 is not None and s1 is not None:
             jf, js = s1[0] - s0[0], s1[1] - s0[1]
             if jf > 0 and 100.0 * js / jf > 1.0:
                 continue  # dirty window: not comparable, try again
         clean += 1
-        best_clean = min(best_clean, dt)
-    best = best_clean if clean else best_any
-    return round(best, 3), samples, clean
+    return min(samples), samples, clean
 
 
 def run_bench(sf_dir: str, cpus: int) -> dict:

@@ -2,9 +2,12 @@
 gate) — the pre-OCR chain every live endpoint runs (app.py:5634
 passport, 5784 mask-aadhaar).
 
-The reference uses OpenCV; this container has none, so these are numpy
-re-implementations of the same algorithms with OpenCV's documented
-conventions (the pattern established by ``kernels/signature.py``):
+The reference uses OpenCV; these are numpy re-implementations of the
+same algorithms with OpenCV's documented conventions (the pattern
+established by ``kernels/signature.py``), and the only image engine:
+every process computes the same pixels whether or not OpenCV is
+installed.  The skip-if-absent OpenCV parity tests under ``tests/``
+compare the ports with cv2 where an OpenCV build exists:
 
 - ``rgb_to_gray`` / ``bgr_to_gray``: cv2's exact fixed-point weights
   (R2Y=4899, G2Y=9617, B2Y=1868, shift 14).
@@ -52,105 +55,8 @@ Chains (exact op order from the reference):
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
-
-# --- optional cv2 fast path --------------------------------------------------
-#
-# These kernels are parity-exact numpy ports OF cv2's own algorithms, so
-# where OpenCV is installed (production executors; not this container)
-# the hot chain functions route straight to cv2 — the same _try_cv2
-# pattern as the multimodal decoder (operators/multimodal.py).  The
-# numpy implementations remain the determinism reference and the
-# always-available fallback; tests/test_cv2_parity.py quantifies the
-# residual rounding differences where cv2 exists (cv2 quantizes
-# interpolation weights to fixed point where the ports accumulate in
-# float64 — documented ≤1-2 LSB divergences, see each docstring).
-# OCR_API_SPARK_DISABLE_CV2=1 forces the numpy path (set by the test
-# suite so golden pixel pins stay engine-independent).
-
-_CV2 = None
-_CV2_CHECKED = False
-
-# Spark local property carrying the DRIVER's engine resolution to every
-# task (ADVICE r5: per-process discovery on a heterogeneous fleet makes
-# per-row pixel output depend on worker placement).  run_extraction
-# stamps it; task-side _cv2() honors it — "numpy" pins the fallback
-# everywhere, "cv2" makes a worker WITHOUT OpenCV fail loudly instead
-# of silently producing ±1-2-LSB-different pixels.
-ENGINE_PROP = "ocr_api_spark.image_engine"
-
-
-def _task_engine_pin() -> str | None:
-    """The fleet-wide pin visible to THIS process, if any.  The
-    driver-stamped task property outranks a local env override (review
-    r6): if one node's environment carries a stale
-    OCR_API_SPARK_DISABLE_CV2 under a driver-resolved "cv2" run, env
-    precedence would have that worker silently emit ±1-2-LSB-different
-    pixels while the run metrics stamp cv2 — the exact divergence the
-    property exists to close.  With property precedence the worker
-    attempts cv2 and fails LOUDLY if it genuinely can't comply.  The
-    env var still pins processes with no stamped task (pure-kernel
-    use, the pytest suite, un-stamped jobs)."""
-    try:
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        if tc is not None:
-            prop = tc.getLocalProperty(ENGINE_PROP)
-            if prop:
-                return prop
-    except ImportError:  # pragma: no cover - pyspark absent in pure-kernel use
-        # review r7: ONLY the pyspark-absent case is recoverable here.
-        # A runtime error from TaskContext/getLocalProperty must
-        # propagate loudly — swallowing it would drop the driver stamp
-        # and reopen the mixed-engine divergence the property closes.
-        pass
-    if os.environ.get("OCR_API_SPARK_DISABLE_CV2"):
-        return "numpy"
-    return None
-
-
-def _import_cv2():
-    global _CV2, _CV2_CHECKED
-    if not _CV2_CHECKED:
-        _CV2_CHECKED = True
-        try:  # pragma: no cover - cv2 not in this container
-            import cv2 as _cv2_mod
-
-            _CV2 = _cv2_mod
-        except ImportError:
-            _CV2 = None
-    return _CV2
-
-
-def _cv2():
-    pin = _task_engine_pin()
-    if pin == "numpy":
-        return None
-    mod = _import_cv2()
-    if pin == "cv2" and mod is None:
-        raise RuntimeError(
-            "driver resolved image engine 'cv2' but this worker has no OpenCV — "
-            "a mixed fleet would make pixel output depend on worker placement; "
-            "install cv2 on every executor or pin numpy via "
-            "OCR_API_SPARK_DISABLE_CV2=1 in spark.executorEnv"
-        )
-    return mod
-
-
-def image_engine() -> str:
-    """Which engine this process's image kernels dispatch to: ``cv2``
-    or ``numpy``.  Bit-reproducibility contract (review r5): the two
-    engines differ by ≤1-2 LSB, so a MIXED fleet (some executors with
-    OpenCV, some without) makes per-row output depend on worker
-    placement.  ``run_extraction`` therefore resolves the engine on
-    the DRIVER and stamps it onto every task via the ``ENGINE_PROP``
-    local property: workers follow the stamp or raise (see ``_cv2``),
-    and the job-level metrics record the same value."""
-    return "cv2" if _cv2() is not None else "numpy"
-
 
 # --- grayscale ---------------------------------------------------------------
 
@@ -248,16 +154,13 @@ def resize_cubic(
 ) -> np.ndarray:
     """cv2.resize(..., interpolation=INTER_CUBIC).  ``dsize`` is (w, h)
     like cv2; when None, dims scale by fx/fy with cvRound semantics.
-    cv2 fast path where installed (≤1 LSB from the float64 port — cv2
-    quantizes the 4-tap weights to 2^-11 fixed point)."""
+    cv2 itself quantizes the 4-tap weights to 2^-11 fixed point (≤1 LSB
+    from this float64 port)."""
     h, w = img.shape[:2]
     if dsize is not None:
         out_w, out_h = dsize
     else:
         out_w, out_h = int(round(w * fx)), int(round(h * fy))
-    cv2 = _cv2()
-    if cv2 is not None:  # pragma: no cover - cv2 not in this container
-        return cv2.resize(img, (out_w, out_h), interpolation=cv2.INTER_CUBIC)
     out = img.astype(np.float64)
     out = _resize_cubic_axis(out, out_h, 0)
     out = _resize_cubic_axis(out, out_w, 1)
@@ -318,17 +221,13 @@ def gaussian_blur(
 ) -> np.ndarray:
     """cv2.GaussianBlur.  ``border``: numpy pad mode — "reflect" is
     cv2's BORDER_DEFAULT (REFLECT_101), "edge" is BORDER_REPLICATE
-    (what adaptiveThreshold uses internally).  cv2 fast path where
-    installed (≤1 LSB: cv2 runs fixed-point row/column filters on 8U)."""
+    (what adaptiveThreshold uses internally).  cv2 itself runs
+    fixed-point row/column filters on 8U (≤1 LSB from this port)."""
     kw, kh = ksize
     if kw <= 0:
         kw = _auto_ksize(sigma)
     if kh <= 0:
         kh = _auto_ksize(sigma)
-    cv2 = _cv2()
-    if cv2 is not None:  # pragma: no cover - cv2 not in this container
-        border_type = cv2.BORDER_REPLICATE if border == "edge" else cv2.BORDER_DEFAULT
-        return cv2.GaussianBlur(img, (kw, kh), sigma, borderType=border_type)
     kx = gaussian_kernel_1d(kw, sigma)
     ky = gaussian_kernel_1d(kh, sigma)
     out = _sep_conv(img.astype(np.float64), ky, axis=0, pad_mode=border)
@@ -346,17 +245,7 @@ def adaptive_threshold_gaussian(
     — app.py:1774.  Threshold surface = Gaussian-weighted neighborhood
     mean rounded to uint8, minus C.  cv2 conventions: the internal blur
     pads with BORDER_REPLICATE (not the blur default REFLECT_101), and
-    THRESH_BINARY uses cvCeil(C).  cv2 fast path where installed."""
-    cv2 = _cv2()
-    if cv2 is not None:  # pragma: no cover - cv2 not in this container
-        return cv2.adaptiveThreshold(
-            gray,
-            max_value,
-            cv2.ADAPTIVE_THRESH_GAUSSIAN_C,
-            cv2.THRESH_BINARY,
-            block_size,
-            C,
-        )
+    THRESH_BINARY uses cvCeil(C)."""
     mean = gaussian_blur(gray, (block_size, block_size), 0.0, border="edge")
     idelta = int(math.ceil(C))
     return np.where(
@@ -456,14 +345,11 @@ def clahe(
 ) -> np.ndarray:
     """cv2.createCLAHE(clipLimit, tileGridSize).apply — app.py:5387-5388.
     Grayscale only; cv2 raises on color input and so do we (the
-    ``preprocess_for_osd`` quirk relies on this).  cv2 fast path where
-    installed (same algorithm — this is a port of cv2's; cv2
-    interpolates between tile LUTs in fixed point, ≤1 LSB apart)."""
+    ``preprocess_for_osd`` quirk relies on this).  Same algorithm as
+    cv2's; cv2 interpolates between tile LUTs in fixed point, ≤1 LSB
+    from this port."""
     if gray.ndim != 2:
         raise ValueError("CLAHE requires a single-channel image (cv2 parity)")
-    cv2 = _cv2()
-    if cv2 is not None:  # pragma: no cover - cv2 not in this container
-        return cv2.createCLAHE(clipLimit=clip_limit, tileGridSize=tile_grid).apply(gray)
     tiles_x, tiles_y = tile_grid
     h, w = gray.shape
     pad_y = (-h) % tiles_y
@@ -555,27 +441,10 @@ def warp_affine(
     border_value: float | tuple = 255,
 ) -> np.ndarray:
     """cv2.warpAffine, INTER_LINEAR, BORDER_CONSTANT.  ``M`` maps src→dst
-    (cv2 convention); sampling inverts it.  cv2 fast path where
-    installed (cv2 samples with 5-bit fixed-point fractions — ≤2 LSB
-    from the float64 port on smooth gradients)."""
+    (cv2 convention); sampling inverts it.  cv2 itself samples with
+    5-bit fixed-point fractions (≤2 LSB from this float64 port on
+    smooth gradients)."""
     out_w, out_h = dsize
-    cv2 = _cv2()
-    if cv2 is not None:  # pragma: no cover - cv2 not in this container
-        # cv2 treats a scalar borderValue as Scalar(v, 0, 0, 0) — on a
-        # color image that fills only channel 0; replicate the scalar to
-        # all channels so the border matches the numpy reference
-        if np.isscalar(border_value):
-            bv = (float(border_value),) * 4
-        else:
-            bv = tuple(float(v) for v in border_value)
-        return cv2.warpAffine(
-            img,
-            np.asarray(M, dtype=np.float64),
-            (out_w, out_h),
-            flags=cv2.INTER_LINEAR,
-            borderMode=cv2.BORDER_CONSTANT,
-            borderValue=bv,
-        )
     full = np.vstack([M, [0.0, 0.0, 1.0]])
     inv = np.linalg.inv(full)
     # rtol MUST be 0: allclose's default relative term scales with entry

@@ -456,7 +456,9 @@ def connected_components(
     another edge's child), both checked, never assumed; ``max_iters``
     rounds without it raise ``ValueError``.  Every round's frame is
     localCheckpoint'd: the exceptAll fixpoint test would otherwise
-    double the lineage each iteration."""
+    double the lineage each iteration.  Each superseded round's blocks
+    are released as soon as the next round has been checked against
+    them, so only the returned frame stays persisted."""
     # an edge through an id missing from ``nodes`` must not join two
     # real nodes: restrict edges to the node universe before contracting
     universe = nodes.select(F.col(node_col).alias("__n")).distinct()
@@ -469,56 +471,69 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iters):
-        # large-star over the symmetric neighborhood: m = min(N(u) ∪ u),
-        # every neighbor v > u re-attaches as (v, m)
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-        # (no self-loop filter needed: the new edge is (old v, m) with
-        # m <= old u < old v, so its endpoints always differ)
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    # the finally releases whichever round is current when the call ends
+    try:
+        for _ in range(max_iters):
+            # large-star over the symmetric neighborhood: m = min(N(u) ∪ u),
+            # every neighbor v > u re-attaches as (v, m)
+            sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            mins = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
+            # (no self-loop filter needed: the new edge is (old v, m) with
+            # m <= old u < old v, so its endpoints always differ)
+            large = (
+                sym.join(mins, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .distinct()
+            )
+            # small-star on the (larger → smaller) orientation: every
+            # strictly-smaller neighbor and the center re-attach to the min
+            mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
+            small = (
+                large.join(mins2, "u")
+                .select(F.col("v").alias("n"), F.col("m"))
+                .unionByName(mins2.select(F.col("u").alias("n"), F.col("m")))
+                .where(F.col("n") != F.col("m"))
+                .select(F.greatest("n", "m").alias("u"), F.least("n", "m").alias("v"))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+            stable = small.exceptAll(e).count() == 0 and e.exceptAll(small).count() == 0
+            _release_checkpoint(e)
+            e = small
+            # star-shape check only when the edge set stopped moving — on
+            # intermediate rounds it cannot be decisive, so evaluating it
+            # would waste one join+count action per round (review r5)
+            if stable and (
+                small.alias("a").join(small.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi").count()
+                == 0
+            ):
+                break
+        else:
+            raise ValueError(
+                f"connected_components did not converge in {max_iters} rounds; raise max_iters"
+            )
+        labels = e.select(F.col("u").alias("id"), F.col("v").alias("lbl"))
+        out = (
+            nodes.select(F.col(node_col).alias("id"))
             .distinct()
+            .join(labels, "id", "left")
+            .select(
+                F.col("id").alias(node_col),
+                F.coalesce("lbl", F.col("id")).alias("cluster_id"),
+            )
         )
-        # small-star on the (larger → smaller) orientation: every
-        # strictly-smaller neighbor and the center re-attach to the min
-        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(mins2, "u")
-            .select(F.col("v").alias("n"), F.col("m"))
-            .unionByName(mins2.select(F.col("u").alias("n"), F.col("m")))
-            .where(F.col("n") != F.col("m"))
-            .select(F.greatest("n", "m").alias("u"), F.least("n", "m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        stable = small.exceptAll(e).count() == 0 and e.exceptAll(small).count() == 0
-        e = small
-        # star-shape check only when the edge set stopped moving — on
-        # intermediate rounds it cannot be decisive, so evaluating it
-        # would waste one join+count action per round (review r5)
-        if stable and (
-            small.alias("a").join(small.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi").count()
-            == 0
-        ):
-            break
-    else:
-        raise ValueError(
-            f"connected_components did not converge in {max_iters} rounds; raise max_iters"
-        )
-    labels = e.select(F.col("u").alias("id"), F.col("v").alias("lbl"))
-    out = (
-        nodes.select(F.col(node_col).alias("id"))
-        .distinct()
-        .join(labels, "id", "left")
-        .select(
-            F.col("id").alias(node_col),
-            F.coalesce("lbl", F.col("id")).alias("cluster_id"),
-        )
-    )
-    return out.localCheckpoint(eager=True)
+        return out.localCheckpoint(eager=True)
+    finally:
+        _release_checkpoint(e)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free a localCheckpoint'd frame's blocks now.  ``DataFrame.unpersist``
+    does not: the blocks belong to the checkpointed RDD under its plan,
+    which the ContextCleaner would otherwise drop at an arbitrary later
+    time."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def duplicated_substring_spans(

@@ -51,14 +51,12 @@ class _Decoder:
     Backends, in order:
     - ``numpy``: payloads that parse as ``.npy`` arrays (H×W or H×W×C
       uint8) — the decoded-pixel interchange format.
-    - ``cv2.imdecode`` where OpenCV is installed (production): the
-      ~20-50x fast path for PNG/JPEG bytes, same pixel conventions.
     - ``png``/``jpeg``: the pure-numpy codecs (``kernels/png.py``:
       zlib inflate + row unfiltering, all depths + Adam7;
-      ``kernels/jpeg.py``: T.81 baseline + progressive) — the tested
-      fallback in this container, decoding to the same cv2 BGR/BGRA
-      convention ``cv2.imdecode`` yields in the reference flow
-      (app.py:419-443, 5099).
+      ``kernels/jpeg.py``: T.81 baseline + progressive), decoding to
+      the same cv2 BGR/BGRA convention ``cv2.imdecode`` yields in the
+      reference flow (app.py:419-443, 5099).  They are the only PNG/JPEG
+      decoders, so every executor decodes the same pixels.
     All pixel paths run the REAL preprocessing kernels
     (``kernels/image.py``: alpha flatten → grayscale → the PAN pre-OCR
     chain) and emit real image statistics as the feature vector.
@@ -73,14 +71,6 @@ class _Decoder:
         if cls._instance is None:
             cls._instance = cls()
         return cls._instance
-
-    def __init__(self) -> None:
-        try:  # pragma: no cover - not present in this container
-            import cv2  # noqa: F401
-
-            self.has_cv2 = True
-        except ImportError:
-            self.has_cv2 = False
 
     @staticmethod
     def _try_npy(payload: bytes):
@@ -131,33 +121,6 @@ class _Decoder:
         return arr
 
     @classmethod
-    def _try_cv2(cls, payload: bytes):
-        """cv2.imdecode fast path where OpenCV is installed (production
-        executors): ~20-50x the pure-numpy codecs on the same bytes,
-        same BGR/BGRA/gray conventions.  Absent in this container —
-        the numpy codecs below are the tested fallback and the
-        determinism reference (skip-if-absent parity test).
-
-        Engine policy is shared with the image kernels (review r5):
-        ``OCR_API_SPARK_DISABLE_CV2`` disables this path too, so
-        pinning the fleet to the numpy engine pins the DECODER as well
-        and ``image_engine()``'s provenance stamp covers both."""
-        from ocr_api_spark.kernels.image import _cv2
-
-        cv2 = _cv2()
-        if cv2 is None:
-            return None
-        import numpy as np  # pragma: no cover - cv2 not in this container
-        if payload is None or not (
-            payload.startswith(b"\x89PNG\r\n\x1a\n") or payload.startswith(b"\xff\xd8")
-        ):
-            return None
-        arr = cv2.imdecode(np.frombuffer(payload, dtype=np.uint8), cv2.IMREAD_UNCHANGED)
-        if arr is None or arr.ndim not in (2, 3) or arr.dtype != np.uint8 or arr.size == 0:
-            return None
-        return arr
-
-    @classmethod
     def _try_pixels(cls, payload: bytes):
         """(array, kind) for any decodable payload — 'numpy' | 'png' |
         'jpeg' — else (None, None).  Arrays follow the cv2 convention
@@ -165,9 +128,6 @@ class _Decoder:
         arr = cls._try_npy(payload)
         if arr is not None:
             return arr, "numpy"
-        cv2_arr = cls._try_cv2(payload)
-        if cv2_arr is not None:  # pragma: no cover - cv2 not in container
-            return cv2_arr, "png" if payload.startswith(b"\x89PNG") else "jpeg"
         arr = cls._try_png(payload)
         if arr is not None:
             return arr, "png"

@@ -350,16 +350,6 @@ def run_extraction(
     those buckets, the empty ones included).  ``run_extraction_chunked``
     uses this to bound the blast radius of a mid-flight failure."""
     t0 = time.time()
-    from ocr_api_spark.kernels.image import ENGINE_PROP, image_engine
-
-    # resolve the image engine ON THE DRIVER and stamp it onto every
-    # task of this run (local property ships with each task): a
-    # heterogeneous fleet can no longer mix cv2 and numpy pixels by
-    # worker placement — a "numpy" stamp pins the fallback everywhere,
-    # a "cv2" stamp makes an OpenCV-less worker raise instead of
-    # silently diverging (ADVICE r5; see kernels.image._cv2)
-    driver_engine = image_engine()
-    spark.sparkContext.setLocalProperty(ENGINE_PROP, driver_engine)
     pages = read_parquet(spark, pages_path)
     claims = read_parquet(spark, claims_path) if claims_path else None
 
@@ -476,11 +466,6 @@ def run_extraction(
         "wall_s": round(wall, 3),
         "docs_per_sec": round(n_rows / wall, 2) if wall > 0 else None,
         "buckets_skipped": len(done),
-        # reproducibility stamp (review r5): which engine the DRIVER
-        # resolved — and, since the run stamped it onto every task as a
-        # local property, which engine every worker either used or
-        # refused to substitute (see kernels.image._cv2)
-        "image_engine": driver_engine,
     }
 
 

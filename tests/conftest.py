@@ -19,14 +19,6 @@ from datetime import datetime
 
 import pytest
 
-# Golden pixel pins and md5-based driver-gate replicas must exercise the
-# deterministic numpy kernels regardless of whether the host has OpenCV:
-# the cv2 fast paths (kernels/image.py) are ≤1-2 LSB off the float64
-# ports, enough to break byte-exact pins.  test_cv2_parity.py compares
-# the two engines explicitly (calling cv2 directly, unaffected by this
-# switch).
-os.environ.setdefault("OCR_API_SPARK_DISABLE_CV2", "1")
-
 REFERENCE_APP = "/root/reference/app.py"
 
 # Integrity pin: parity tests exec source lifted from the (untrusted,

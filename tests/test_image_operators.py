@@ -328,49 +328,26 @@ def test_pdf_raster_operator_statuses(session):
     assert out["bad"]["raster_status"] == "bad_pdf" and out["bad"]["n_pages"] is None
 
 
-def test_cv2_fast_path_parity_when_installed():
-    """Where OpenCV exists (production executors), _Decoder routes
-    PNG/JPEG bytes through cv2.imdecode; lossless PNG must decode
-    pixel-identical to the numpy codec, and JPEG within IDCT rounding.
-    Skips in containers without cv2 (this one)."""
-    import importlib
-    import os
-
-    import numpy as np
-    import pytest
-
+def test_png_jpeg_decoders_match_opencv():
+    """Reference check for the numpy codecs where OpenCV is installed:
+    a lossless PNG decodes pixel-identical to ``cv2.imdecode``, a JPEG
+    within IDCT rounding.  Skips where cv2 is absent."""
     cv2 = pytest.importorskip("cv2")
 
-    from ocr_api_spark.kernels import image as im
     from ocr_api_spark.kernels.jpeg import decode_jpeg, encode_jpeg
-    from ocr_api_spark.kernels.png import encode_png
-    from ocr_api_spark.operators.multimodal import _Decoder
+    from ocr_api_spark.kernels.png import decode_png, encode_png
 
-    # the decoder shares the image kernels' engine switch (review r5);
-    # conftest pins the numpy engine for golden stability, so observe
-    # the cv2 branch by reloading with the switch cleared
-    old = os.environ.pop("OCR_API_SPARK_DISABLE_CV2", None)
-    try:
-        importlib.reload(im)
-        img = np.random.default_rng(5).integers(0, 256, (64, 96, 3), dtype=np.uint8)
-        png_arr, kind = _Decoder._try_pixels(encode_png(img))
-        assert kind == "png" and np.array_equal(png_arr, img)
+    def imdecode(payload):
+        return cv2.imdecode(np.frombuffer(payload, dtype=np.uint8), cv2.IMREAD_UNCHANGED)
 
-        jb = encode_jpeg(img, quality=90)
-        jpg_arr, kind = _Decoder._try_pixels(jb)
-        assert kind == "jpeg" and jpg_arr.shape == img.shape
-        ours = decode_jpeg(jb)
-        assert np.abs(jpg_arr.astype(int) - ours.astype(int)).mean() < 3.0  # IDCT rounding only
-        # and the kill switch really does reach the decoder
-        os.environ["OCR_API_SPARK_DISABLE_CV2"] = "1"
-        importlib.reload(im)
-        assert np.array_equal(_Decoder._try_pixels(jb)[0], ours)
-    finally:
-        if old is not None:
-            os.environ["OCR_API_SPARK_DISABLE_CV2"] = old
-        else:
-            os.environ.pop("OCR_API_SPARK_DISABLE_CV2", None)
-        importlib.reload(im)
+    img = np.random.default_rng(5).integers(0, 256, (64, 96, 3), dtype=np.uint8)
+    png = encode_png(img)
+    assert np.array_equal(decode_png(png), imdecode(png))
+
+    jb = encode_jpeg(img, quality=90)
+    ours, ref = decode_jpeg(jb), imdecode(jb)
+    assert ours.shape == ref.shape
+    assert np.abs(ours.astype(int) - ref.astype(int)).mean() < 3.0  # IDCT rounding only
 
 
 def test_pdf_raster_chains_into_preocr(session):
@@ -410,91 +387,3 @@ def test_pdf_raster_null_payload_is_bad_pdf(session):
     )
     out = {r["url"]: r["raster_status"] for r in pdf_raster(df).collect()}
     assert out == {"ok": "ok", "null": "bad_pdf"}
-
-
-def test_engine_pin_propagates_to_tasks(session):
-    """ADVICE r5: the driver's image-engine resolution must reach every
-    task.  The ENGINE_PROP local property ships with each task; a
-    worker told "cv2" that has no OpenCV must raise (fail loudly), a
-    worker told "numpy" must dispatch numpy even if its env override is
-    cleared."""
-    from ocr_api_spark.kernels.image import ENGINE_PROP
-
-    sc = session.sparkContext
-
-    def probe(batches):
-        import os
-
-        import pandas as pd
-
-        # the conftest env pin would mask the task property — drop it
-        # INSIDE the worker so the property is the only pin in effect
-        os.environ.pop("OCR_API_SPARK_DISABLE_CV2", None)
-        try:
-            from ocr_api_spark.kernels.image import image_engine
-
-            for b in batches:
-                try:
-                    engine = image_engine()
-                    err = ""
-                except RuntimeError as e:
-                    engine, err = "raised", str(e)[:60]
-                yield pd.DataFrame({"n": b["id"], "engine": engine, "err": err})
-        finally:
-            os.environ["OCR_API_SPARK_DISABLE_CV2"] = "1"
-
-    df = session.range(4).repartition(2)
-    try:
-        sc.setLocalProperty(ENGINE_PROP, "numpy")
-        out = set(
-            r["engine"]
-            for r in df.mapInPandas(probe, "n long, engine string, err string").collect()
-        )
-        assert out == {"numpy"}
-
-        # driver said cv2, this fleet has none: divergence must be loud
-        sc.setLocalProperty(ENGINE_PROP, "cv2")
-        out = set(
-            r["engine"]
-            for r in df.mapInPandas(probe, "n long, engine string, err string").collect()
-        )
-        assert out == {"raised"}
-
-        # review r6: a worker-local env override must NOT silently beat
-        # a driver "cv2" stamp — the property outranks the env var, so
-        # even with OCR_API_SPARK_DISABLE_CV2 still set (conftest; NOT
-        # popped here) the worker attempts cv2 and raises loudly
-        def probe_env_kept(batches):
-            import pandas as pd
-
-            from ocr_api_spark.kernels.image import image_engine
-
-            for b in batches:
-                try:
-                    engine = image_engine()
-                except RuntimeError:
-                    engine = "raised"
-                yield pd.DataFrame({"n": b["id"], "engine": engine, "err": ""})
-
-        out = set(
-            r["engine"]
-            for r in df.mapInPandas(probe_env_kept, "n long, engine string, err string").collect()
-        )
-        assert out == {"raised"}
-    finally:
-        sc.setLocalProperty(ENGINE_PROP, None)
-
-
-def test_run_extraction_stamps_engine_property(session, tmp_path):
-    """run_extraction resolves the engine driver-side and stamps it as
-    the task-local property for the whole run."""
-    from ocr_api_spark.kernels.image import ENGINE_PROP
-    from ocr_api_spark.plans.pipeline import run_extraction
-    from ocr_api_spark.sources.pages import write_pages
-
-    d = str(tmp_path / "pages")
-    paths = write_pages(d, n_rows=40, seed=7)
-    out = str(tmp_path / "out")
-    stats = run_extraction(session, paths["pages"], paths["claims"], out, n_buckets=4, n_salts=2)
-    assert stats["image_engine"] == "numpy"  # conftest pins numpy
-    assert session.sparkContext.getLocalProperty(ENGINE_PROP) == "numpy"

@@ -121,8 +121,9 @@ def near_dup_run(session, near_dup_docs, tmp_path_factory):
     )
     out = str(tmp_path_factory.mktemp("near_dup") / "pairs")
     # start from nothing persisted: a local checkpoint that an earlier
-    # module left for the JVM's garbage collector (connected_components'
-    # rounds) can otherwise be cleaned during the call and read as a change
+    # module left for the JVM's garbage collector (the frame
+    # connected_components returns) can otherwise be cleaned during the
+    # call and read as a change
     for rdd in session.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist()
     before = _persisted_rdds(session)
@@ -731,6 +732,26 @@ def test_star_cc_converges_on_pathological_chain(session):
 
     with pytest.raises(ValueError, match="did not converge"):
         connected_components(pairs, nodes, max_iters=2)
+
+
+def test_star_cc_releases_superseded_rounds(session):
+    """Every round is localCheckpoint'd; only the returned frame may stay
+    persisted after a call, and nothing after a call that raises."""
+    from ocr_api_spark.operators.dedup import connected_components
+
+    n = 100
+    pairs = session.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a int, id_b int")
+    nodes = session.createDataFrame([(i,) for i in range(n)], "doc_id int")
+
+    before = _persisted_rdds(session)
+    out = connected_components(pairs, nodes)
+    out_id = out._jdf.queryExecution().analyzed().rdd().id()
+    assert _persisted_rdds(session) - before == {out_id}
+
+    before = _persisted_rdds(session)
+    with pytest.raises(ValueError, match="did not converge"):
+        connected_components(pairs, nodes, max_iters=2)
+    assert _persisted_rdds(session) - before == set()
 
 
 def test_star_cc_ignores_phantom_pair_ids(session):
