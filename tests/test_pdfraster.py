@@ -275,3 +275,53 @@ def test_inline_image_bytes_do_not_perturb_ctm():
     )[0]
     assert (page[30:40, 20:30] == 0).all()
     assert (page[:30] == 255).all() and (page[40:] == 255).all()
+
+
+# sha256 of each writer's output for the fixed inputs below, recorded
+# with the writers as they stood before the PDF object layer was shared
+# between sources/pdftext.py and sources/pdfraster.py.  The round-trip
+# tests and the oracles compute their expected bytes with the writer
+# under test, so only these digests catch a change to the bytes
+# themselves (zlib level 6 is deterministic for one zlib build).
+_WRITER_PINS = {
+    "pdf_from_text raw": "c506f57b3b2c4c84b0086af1a0082df1c30a6d2d58d0e2cbf1eb79ff5acbd52f",
+    "pdf_from_text flate": "7fde41329bb014739e42314e8e1baf81a879cfebed2b5ea05f1f8cd04d9d5cc0",
+    "write_minimal_pdf raw": "e1fec94bbd812c12320118d9a378758b72b7be00d760440a663c9b749db79e99",
+    "write_minimal_pdf flate": "6c9360d6eda352795cfc5c9340e4411418b08e3fd14a4b28b343b97c35572777",
+    "write_image_pdf jpeg 1": "e2b366ced06fc2a687ac918af869cbbaf6eb121e9a223353681fe64b73bb3529",
+    "write_image_pdf jpeg 2": "15df309eac105ca25ded60ef10456bb3a07ec37ad928654e7eccf3874b3e8321",
+    "write_image_pdf flate 1": "9680e45a8c6fa0bcd42fe488b62c623d2b2def36196c3fdc84354b417e6782e5",
+    "write_image_pdf flate 2": "1b1e9681f3682739d990fe94aefa94046638b98742c9d22cda1a9d282957dde1",
+    "write_image_pdf lzw 1": "7630cdc14f35c0257b75d50da1003dd119376324dd06ea4b1228505c98f54ee2",
+    "write_image_pdf lzw 2": "d3eb56e3157f1f1106d12cfec01679c54ac229ec6a5be5227d1c5ca60f773c12",
+}
+
+
+def test_writer_bytes_pinned():
+    """Both fixture writers, raw and compressed, one and two pages,
+    against digests recorded once: every PDF fixture, golden and
+    round-trip oracle in the repo is built from these bytes."""
+    import hashlib
+
+    from ocr_api_spark.sources.pdftext import pdf_from_text, write_minimal_pdf
+
+    text = (
+        "Permanent Account Number ABCPS1234F Name RAVI KUMAR Father "
+        "SURESH KUMAR 01/02/1985 (copy) back\\slash"
+    )
+    spans = [
+        [(72.0, 72.0, 12.0, "Name: Ravi (R) \\ Kumar"), (300.5, 100.25, 9.5, "café Ω")],
+        [(10.0, 20.0, 14.0, "page two")],
+    ]
+    one = [_img(12, 16, seed=41)]
+    two = [_img(12, 16, seed=42), _img(9, 7, seed=43, gray=True)]
+    got = {
+        "pdf_from_text raw": pdf_from_text(text),
+        "pdf_from_text flate": pdf_from_text(text, compress=True),
+        "write_minimal_pdf raw": write_minimal_pdf(spans, page_width=595.0, page_height=842.0),
+        "write_minimal_pdf flate": write_minimal_pdf(spans, compress=True),
+    }
+    for codec in ("jpeg", "flate", "lzw"):
+        for imgs in (one, two):
+            got[f"write_image_pdf {codec} {len(imgs)}"] = write_image_pdf(imgs, dpi=150, codec=codec)
+    assert {k: hashlib.sha256(v).hexdigest() for k, v in got.items()} == _WRITER_PINS
