@@ -9,61 +9,53 @@ module load.  We pin both and name the effective ones plainly.
 
 from __future__ import annotations
 
+import codecs as _codecs
 import re
 
-try:  # ftfy is not a hard dependency; for ASCII input fix_text is identity
-    import ftfy
-
-    def _fix_text(text: str) -> str:
-        return ftfy.fix_text(text)
-
-except ImportError:
-    import codecs as _codecs
-
-    def _sloppy1252_errors(err):
-        # cp1252 leaves 0x81/0x8D/0x8F/0x90/0x9D undefined; mojibake
-        # produced by a latin-1 mis-decode carries those C1 controls
-        # verbatim, so map them back to their raw byte (ftfy's
-        # "sloppy-windows-1252" idea)
-        ch = err.object[err.start : err.start + 1]
-        if "\x80" <= ch <= "\x9f":
-            return bytes([ord(ch)]), err.start + 1
-        raise err
-
-    _codecs.register_error("ocr_api_sloppy1252", _sloppy1252_errors)
-
-    def _fix_text(text: str) -> str:
-        """Minimal ftfy stand-in: repairs the dominant real-world
-        mojibake class — UTF-8 bytes mis-decoded as cp1252/latin-1
-        (possibly more than once: 'Ã©'→'é', 'â€™'→'’', 'ÃƒÂ©'→'é').
-        Identity on ASCII (all deterministic fixtures) and on genuine
-        single-encoded text ('café', 'naïve'): re-encoding those to
-        cp1252 yields bytes that are NOT valid UTF-8, so the repair
-        round-trip fails closed and the input passes through.  That
-        accept-only-if-it-decodes rule is the same reasoning ftfy's
-        badness heuristic encodes for this class."""
-        fixed = text
-        for _ in range(3):  # double-encoding happens; triple is the cap
-            if fixed.isascii():
-                break
-            try:
-                raw = fixed.encode("cp1252", errors="ocr_api_sloppy1252")
-            except UnicodeEncodeError:
-                break
-            try:
-                decoded = raw.decode("utf-8")
-            except UnicodeDecodeError:
-                break
-            if decoded == fixed:
-                break
-            fixed = decoded
-        return fixed
+from dateutil import parser as _dateutil_parser
 
 
-try:
-    from dateutil import parser as _dateutil_parser
-except ImportError:  # pragma: no cover
-    _dateutil_parser = None
+def _sloppy1252_errors(err):
+    # cp1252 leaves 0x81/0x8D/0x8F/0x90/0x9D undefined; mojibake
+    # produced by a latin-1 mis-decode carries those C1 controls
+    # verbatim, so map them back to their raw byte (ftfy's
+    # "sloppy-windows-1252" idea)
+    ch = err.object[err.start : err.start + 1]
+    if "\x80" <= ch <= "\x9f":
+        return bytes([ord(ch)]), err.start + 1
+    raise err
+
+
+_codecs.register_error("ocr_api_sloppy1252", _sloppy1252_errors)
+
+
+def _fix_text(text: str) -> str:
+    """The one ``ftfy.fix_text`` stand-in, used whether or not ftfy is
+    installed, so a row's text never depends on the executor's
+    packages.  Repairs the dominant real-world mojibake class — UTF-8
+    bytes mis-decoded as cp1252/latin-1 (possibly more than once:
+    'Ã©'→'é', 'â€™'→'’', 'ÃƒÂ©'→'é').  Identity on ASCII (all
+    deterministic fixtures) and on genuine single-encoded text ('café',
+    'naïve'): re-encoding those to cp1252 yields bytes that are NOT
+    valid UTF-8, so the repair round-trip fails closed and the input
+    passes through.  That accept-only-if-it-decodes rule is the same
+    reasoning ftfy's badness heuristic encodes for this class."""
+    fixed = text
+    for _ in range(3):  # double-encoding happens; triple is the cap
+        if fixed.isascii():
+            break
+        try:
+            raw = fixed.encode("cp1252", errors="ocr_api_sloppy1252")
+        except UnicodeEncodeError:
+            break
+        try:
+            decoded = raw.decode("utf-8")
+        except UnicodeDecodeError:
+            break
+        if decoded == fixed:
+            break
+        fixed = decoded
+    return fixed
 
 
 # --- sanitizers -----------------------------------------------------------
@@ -117,8 +109,6 @@ def split_lines(text: str) -> list[str]:
 
 def convert_to_ddmmyyyy(date_str: str) -> str:
     """Lenient date canonicalization via dateutil (app.py:122-127)."""
-    if _dateutil_parser is None:  # pragma: no cover
-        return "Invalid date format"
     try:
         parsed_date = _dateutil_parser.parse(date_str)
         return parsed_date.strftime("%d-%m-%Y")

@@ -395,10 +395,10 @@ def run_extraction(
     plan = extraction_plan(pages, claims, n_buckets, n_salts, n_parts=n_parts)
 
     # Metrics ride on the write with ZERO extra Spark jobs over the data:
-    # - two global observe() aggregates (rows/failed) — measured free
-    #   (a per-bucket observe with 2×n_buckets conditional sums costs ~75%
+    # - one global observe() aggregate (rows out) — measured free (a
+    #   per-bucket observe with 2×n_buckets conditional sums costs ~75%
     #   of the whole job: the observe accumulator evaluates every expr per
-    #   row, interpreted);
+    #   row, interpreted); it cross-checks the footer counts below;
     # - per-bucket counts from the parquet FOOTERS of only THIS run's new
     #   files (the ones it published from its staging dir), and per-bucket
     #   failed counts from a pyarrow read of just the dictionary-encoded
@@ -413,11 +413,7 @@ def run_extraction(
     # unique name: two runs in flight on one session (the chunked
     # window) must never share an observation
     obs = Observation(f"run_metrics_{uuid.uuid4().hex}")
-    plan = plan.observe(
-        obs,
-        F.expr("count(1) AS rows_out"),
-        F.expr("sum(CASE WHEN status = 'Failed' THEN 1 ELSE 0 END) AS rows_failed"),
-    )
+    plan = plan.observe(obs, F.expr("count(1) AS rows_out"))
 
     # Write, then publish: the write goes to a staging dir only this run
     # knows, so its files are exactly what the dir holds — no walk of the

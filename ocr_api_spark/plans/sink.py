@@ -20,9 +20,10 @@ resumable mid-flight").
 - ``compact_bucket``: the small-file problem.  A long-running
   append-per-run sink collects many sub-target files per bucket;
   compaction rewrites one bucket to ~``target_mb`` files and records a
-  replacement snapshot.  The swap is directory-rename based — Iceberg
-  swaps a metadata pointer atomically instead; the emulation documents
-  its (small) non-atomic window rather than pretending otherwise.
+  replacement snapshot.  The rewrite stages under ``_staging/`` like a
+  run's write and its files are renamed in — Iceberg swaps a metadata
+  pointer atomically instead; the emulation documents its (small)
+  non-atomic window rather than pretending otherwise.
 
 Everything here is driver-side bookkeeping over file metadata; only
 ``compact_bucket`` runs a (single-bucket-scoped) Spark job.
@@ -134,7 +135,8 @@ def _newest_mtime(path: str) -> float:
 def verify_sink(out_dir: str) -> dict:
     """Reconcile manifests vs the directory.  Orphans = on disk but in
     no live snapshot (crashed/zombie writers); missing = committed but
-    gone (out-of-band deletion); staging = unpublished run write dirs.
+    gone (out-of-band deletion); staging = unpublished write dirs
+    (runs and compactions).
     All three lists are the GC/repair input."""
     from ocr_api_spark.plans.pipeline import _data_files
 
@@ -159,17 +161,21 @@ def compact_bucket(
     as resume).
 
     Commit order makes every crash window recoverable (ADVICE r2):
-    the replacement snapshot is PUBLISHED BEFORE the replaced originals
-    are deleted, so a crash mid-delete leaves replaced-but-present
-    files that ``verify_sink`` reports as orphans and ``gc_orphans``
-    reclaims — manifests never point at deleted files.  A per-bucket
-    lock file (O_EXCL) serializes concurrent compactions of one bucket;
-    the remaining non-atomic window — a reader listing files while both
-    generations are live sees duplicate rows for one listing — is what
-    Iceberg's metadata-pointer swap removes; documented emulation
-    limit (readers that go through ``snapshot_files`` are unaffected)."""
+    the rewrite stages under ``_staging/<uuid>/`` like a run's write
+    (table readers skip it; a kill before the publish leaves it to
+    ``verify_sink``/``gc_orphans``), and the replacement snapshot is
+    PUBLISHED BEFORE the replaced originals are deleted, so a crash
+    mid-delete leaves replaced-but-present files that ``verify_sink``
+    reports as orphans and ``gc_orphans`` reclaims — manifests never
+    point at deleted files.  A per-bucket lock file (O_EXCL, broken by
+    age after ``lock_ttl_sec``) serializes concurrent compactions of
+    one bucket; the remaining non-atomic window — a reader listing
+    files while both generations are live sees duplicate rows for one
+    listing — is what Iceberg's metadata-pointer swap removes;
+    documented emulation limit (readers that go through
+    ``snapshot_files`` are unaffected)."""
     from ocr_api_spark.plans import locks
-    from ocr_api_spark.plans.pipeline import _bucket_stats, _data_files
+    from ocr_api_spark.plans.pipeline import _bucket_stats, _data_files, _publish
 
     base = os.path.join(out_dir, "extracted")
     bucket_dir = os.path.join(base, f"bucket={bucket}")
@@ -190,23 +196,16 @@ def compact_bucket(
         # concurrent run_extraction may append new files to this bucket at
         # any moment, and they must survive untouched
         df = spark.read.parquet(*old)
-        tmp_dir = f"{bucket_dir}.compact-tmp-{uuid.uuid4().hex[:8]}"
-        df.coalesce(n_out).write.mode("overwrite").parquet(tmp_dir)
-
-        new_rel = []
-        # promote compacted files in (uuid names: a re-run after a crash
-        # can never collide with a previous attempt's survivors)
-        gen = uuid.uuid4().hex[:8]
-        for src in _data_files(tmp_dir):
-            name = f"compact-{gen}-{os.path.basename(src)}"
-            os.rename(src, os.path.join(bucket_dir, name))
-            new_rel.append(os.path.join(f"bucket={bucket}", name))
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+        # write, then publish, as run_extraction does: Spark's part names
+        # carry the write job's UUID, so they never collide in the bucket
+        staging = os.path.join(out_dir, "_staging", uuid.uuid4().hex)
+        df.coalesce(n_out).write.parquet(os.path.join(staging, f"bucket={bucket}"))
+        new_files = _publish(staging, base)
 
         # row/failed counts of the compacted files from their footers/stats
-        stats_rows = _bucket_stats({os.path.join(base, f) for f in new_rel}, 0.0)
+        stats_rows = _bucket_stats(new_files, 0.0)
         # PUBLISH, then delete: from here the old files are logically gone
-        write_snapshot(out_dir, set(new_rel), stats_rows, replaces=set(old), compaction=True)
+        write_snapshot(out_dir, new_files, stats_rows, replaces=set(old), compaction=True)
         for f in old:
             try:
                 os.remove(f)
@@ -216,7 +215,7 @@ def compact_bucket(
             "bucket": bucket,
             "compacted": True,
             "files_before": len(old),
-            "files_after": len(new_rel),
+            "files_after": len(new_files),
         }
     finally:
         locks.release(lock_path, lock_token)

@@ -3,9 +3,10 @@
 The reference converts PDFs to images with poppler (``convert_from_bytes``
 at 300 dpi, app.py:419-443) before the OCR branch.  Its real inputs are
 scanned documents — each page is one embedded image XObject placed over
-the full page — so rasterization here means: walk the already-parsed
-object graph (``sources/pdftext.py``), decode each page's image
-XObjects with the pure-numpy codecs (``kernels/jpeg.py`` for
+the full page — so rasterization here means: walk the pages through
+the text reader's object layer (``sources/pdftext._pdf_pages``: object
+scan, object streams, page-tree order, MediaBox), decode each page's
+image XObjects with the pure-numpy codecs (``kernels/jpeg.py`` for
 /DCTDecode, zlib/LZW via the shared stream decoder for raw samples),
 and composite them onto a white page canvas at the requested dpi.
 
@@ -35,29 +36,25 @@ import numpy as np
 
 from ocr_api_spark.sources.pdftext import (
     MiniPdfError,
-    _CONTENTS_RE,
+    _BPC_RE,
+    _FILTER_RE,
+    _NAME_RE,
     _decode_stream,
-    _expand_object_streams,
-    _page_order,
-    _scan_objects,
+    _pdf_pages,
+    _read_literal_string,
+    _serialize,
+    _skip_inline_image,
+    _stream_obj,
+    lzw_encode,
 )
 
-# all four MediaBox coordinates, sign included: the box may have a
-# nonzero (even negative) origin, and assuming [0 0 w h] shifts every
-# placement in the y-flip (review r4)
-_MEDIABOX4_RE = re.compile(
-    rb"/MediaBox\s*\[\s*(-?[\d.]+)\s+(-?[\d.]+)\s+(-?[\d.]+)\s+(-?[\d.]+)\s*\]"
-)
 _RESOURCES_REF_RE = re.compile(rb"/Resources\s+(\d+)\s+\d+\s+R")
 _PARENT_RE = re.compile(rb"/Parent\s+(\d+)\s+\d+\s+R")
 _XOBJ_DICT_RE = re.compile(rb"/XObject\s*<<(.*?)>>", re.S)
 _NAME_REF_RE = re.compile(rb"/([^\s/\[\]()<>]+)\s+(\d+)\s+\d+\s+R")
 _WIDTH_RE = re.compile(rb"/Width\s+(\d+)")
 _HEIGHT_RE = re.compile(rb"/Height\s+(\d+)")
-_BPC_RE = re.compile(rb"/BitsPerComponent\s+(\d+)")
 _CS_RE = re.compile(rb"/ColorSpace\s*/([A-Za-z0-9]+)")
-_FILTER_NAMES_RE = re.compile(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
-_FNAME_RE = re.compile(rb"/([A-Za-z0-9]+)")
 
 _MAX_SAMPLES = 64_000_000  # decoded image samples (w*h*channels)
 _MAX_CANVAS_PIXELS = 64_000_000  # per-page canvas, dpi-derived
@@ -82,8 +79,8 @@ def _decode_image_xobject(header: bytes, raw: bytes) -> np.ndarray:
     if width * height * channels > _MAX_SAMPLES:
         raise MiniPdfError(f"image {width}x{height}x{channels} exceeds the sample cap")
 
-    fm = _FILTER_NAMES_RE.search(header)
-    names = _FNAME_RE.findall(fm.group(1)) if fm else []
+    fm = _FILTER_RE.search(header)
+    names = _NAME_RE.findall(fm.group(1)) if fm else []
     if names and names[-1] == b"DCTDecode":
         if len(names) > 1:
             raise MiniPdfError("filter chains before /DCTDecode are unsupported")
@@ -144,13 +141,7 @@ def _interp_placements(stream: bytes) -> list[tuple[str, tuple[float, ...]]]:
     stack mid-stream — misplacing images or tripping the
     non-axis-aligned raise and degrading the document to bad_pdf.  The
     escape/nesting rules are the sibling text tokenizer's
-    (pdftext._read_literal_string)."""
-    from ocr_api_spark.sources.pdftext import (
-        _INLINE_IMG_END_FALLBACK_RE,
-        _INLINE_IMG_END_RE,
-        _INLINE_IMG_ID_RE,
-        _read_literal_string,
-    )
+    (pdftext._read_literal_string, pdftext._skip_inline_image)."""
 
     ident = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
@@ -184,12 +175,7 @@ def _interp_placements(stream: bytes) -> list[tuple[str, tuple[float, ...]]]:
             _, i = _read_literal_string(stream, tok.start(4))
             continue
         if tok.group(5):  # BI..ID..EI inline image: skip wholesale
-            idm = _INLINE_IMG_ID_RE.search(stream, i)
-            start = idm.end() if idm else i
-            em = _INLINE_IMG_END_RE.search(stream, start)
-            if em is None:
-                em = _INLINE_IMG_END_FALLBACK_RE.search(stream, start)
-            i = em.end() if em else len(stream)
+            i = _skip_inline_image(stream, i)
             operands = []
             continue
         if tok.group(1):
@@ -261,41 +247,19 @@ def _xobjects_of(objects: dict, page_num: int, hdr: bytes) -> dict[str, int]:
 
 
 def _rasterize(data: bytes, dpi: int) -> list[np.ndarray]:
-    if not data.startswith(b"%PDF"):
-        raise MiniPdfError("not a PDF payload")
-    objects = _scan_objects(data)
-    _expand_object_streams(objects)
-    page_nums = [
-        num
-        for num, (hdr, _) in sorted(objects.items())
-        if b"/Type" in hdr and b"/Page" in hdr and b"/Pages" not in hdr
-    ]
+    objects, page_iter = _pdf_pages(data)
     scale = dpi / 72.0
     pages: list[np.ndarray] = []
-    for num in _page_order(objects, page_nums):
-        hdr, _ = objects[num]
-        mb = _MEDIABOX4_RE.search(hdr)
-        if mb:
-            mb_x0, mb_y0, mb_x1, mb_y1 = (float(mb.group(i)) for i in range(1, 5))
-        else:
-            mb_x0, mb_y0, mb_x1, mb_y1 = 0.0, 0.0, 612.0, 792.0
-        mb_w, mb_h = mb_x1 - mb_x0, mb_y1 - mb_y0
-        if mb_w <= 0 or mb_h <= 0:
-            raise MiniPdfError("degenerate /MediaBox")
-        cw, ch = max(1, round(mb_w * scale)), max(1, round(mb_h * scale))
+    for num, hdr, (mb_x0, mb_y0, mb_x1, mb_y1), content in page_iter:
+        cw = max(1, round((mb_x1 - mb_x0) * scale))
+        ch = max(1, round((mb_y1 - mb_y0) * scale))
         if cw * ch > _MAX_CANVAS_PIXELS:
             raise MiniPdfError(f"page canvas {cw}x{ch} exceeds the pixel cap")
         canvas = np.full((ch, cw, 3), 255, dtype=np.uint8)
 
         xobjects = _xobjects_of(objects, num, hdr)
-        cm_match = _CONTENTS_RE.search(hdr)
-        if cm_match and int(cm_match.group(1)) in objects and xobjects:
-            content_hdr, content_raw = objects[int(cm_match.group(1))]
-            stream = (
-                _decode_stream(content_hdr, content_raw)
-                if content_raw is not None
-                else b""
-            )
+        if content is not None and xobjects:
+            stream = _decode_stream(*content) if content[1] is not None else b""
             for name, ctm in _interp_placements(stream):
                 ref = xobjects.get(name)
                 if ref is None or ref not in objects:
@@ -369,7 +333,6 @@ def write_image_pdf(
     decoder is the same T.81 math), 'flate' (raw samples), or 'lzw'.
     Images follow the repo convention: 2-D gray or H×W×3 BGR uint8."""
     from ocr_api_spark.kernels.jpeg import encode_jpeg
-    from ocr_api_spark.sources.pdftext import lzw_encode
 
     objs: list[bytes] = []
     n = len(images)
@@ -404,31 +367,13 @@ def write_image_pdf(
                 f"<< /Im0 {img_id} 0 R >> >> >>"
             ).encode()
         )
-        content = f"q {wpt:.4f} 0 0 {hpt:.4f} 0 0 cm /Im0 Do Q".encode()
+        objs.append(_stream_obj(f"q {wpt:.4f} 0 0 {hpt:.4f} 0 0 cm /Im0 Do Q".encode()))
         objs.append(
-            f"<< /Length {len(content)} >>\nstream\n".encode() + content + b"\nendstream"
-        )
-        objs.append(
-            (
-                f"<< /Type /XObject /Subtype /Image /Width {w} /Height {h} "
-                f"/ColorSpace {cs} /BitsPerComponent 8 /Filter {filt} "
-                f"/Length {len(payload)} >>\nstream\n"
-            ).encode()
-            + payload
-            + b"\nendstream"
+            _stream_obj(
+                payload,
+                head=f"/Type /XObject /Subtype /Image /Width {w} /Height {h} "
+                f"/ColorSpace {cs} /BitsPerComponent 8 /Filter {filt} ",
+            )
         )
 
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_pos = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R >>\nstartxref\n{xref_pos}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
+    return _serialize(objs)

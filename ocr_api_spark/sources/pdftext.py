@@ -37,6 +37,7 @@ lines top-down, words left-to-right, single-space joined.
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 
@@ -133,6 +134,19 @@ _INLINE_IMG_END_RE = re.compile(rb"(?<=[\s])EI(?=\s|$)")
 _INLINE_IMG_END_FALLBACK_RE = re.compile(rb"EI(?=\s|$)")
 
 
+def _skip_inline_image(stream: bytes, i: int) -> int:
+    """``i`` is just past a ``BI`` token: return the offset just past
+    the inline image's ``EI``, or the end of the stream when none
+    closes it.  Its binary body can spell anything (fake strings or
+    operators), so both content-stream tokenizers skip it wholesale."""
+    idm = _INLINE_IMG_ID_RE.search(stream, i)
+    start = idm.end() if idm else i
+    em = _INLINE_IMG_END_RE.search(stream, start)
+    if em is None:  # spec-legal EI abutting the image data
+        em = _INLINE_IMG_END_FALLBACK_RE.search(stream, start)
+    return em.end() if em else len(stream)
+
+
 def _tokenize_spans(
     stream: bytes, page_height: float, origin_x: float = 0.0, origin_y: float = 0.0
 ) -> list[Span]:
@@ -165,14 +179,8 @@ def _tokenize_spans(
         if not m:
             break
         i = m.end()
-        if m.group(8):  # BI: inline image — its binary body can spell
-            # anything (fake strings/ops); skip wholesale past ID → EI
-            idm = _INLINE_IMG_ID_RE.search(stream, i)
-            start = idm.end() if idm else i
-            em = _INLINE_IMG_END_RE.search(stream, start)
-            if em is None:  # spec-legal EI abutting the image data
-                em = _INLINE_IMG_END_FALLBACK_RE.search(stream, start)
-            i = em.end() if em else len(stream)
+        if m.group(8):  # BI: inline image, skipped past ID → EI
+            i = _skip_inline_image(stream, i)
             stack.clear()
             continue
         if m.group(1):  # literal string
@@ -618,7 +626,12 @@ def parse_pdf(data: bytes) -> list[PdfPage]:
         raise MiniPdfError(f"malformed PDF: {type(e).__name__}: {e}") from e
 
 
-def _parse_pdf(data: bytes) -> list[PdfPage]:
+def _pdf_pages(data: bytes) -> tuple[dict, Iterator[tuple]]:
+    """The object map and a lazy iterator of ``(num, page dict,
+    (x0, y0, x1, y1) MediaBox, content object or None)`` in document
+    order — the page walk the text and raster readers share.  Lazy, so
+    a reader's per-page errors surface in page order: the MediaBox is
+    checked only when its page is reached."""
     if not data.startswith(b"%PDF"):
         raise MiniPdfError("not a PDF payload")
     objects = _scan_objects(data)
@@ -628,32 +641,39 @@ def _parse_pdf(data: bytes) -> list[PdfPage]:
         for num, (hdr, _) in sorted(objects.items())
         if b"/Type" in hdr and b"/Page" in hdr and b"/Pages" not in hdr
     ]
+
+    def walk(order: list[int]):
+        for num in order:
+            hdr, _ = objects[num]
+            mb = _MEDIABOX_RE.search(hdr)
+            if mb:
+                box = tuple(float(mb.group(i)) for i in range(1, 5))
+            else:  # US Letter when the page dict names no box
+                box = (0.0, 0.0, 612.0, 792.0)
+            if box[2] - box[0] <= 0 or box[3] - box[1] <= 0:
+                raise MiniPdfError("degenerate /MediaBox")
+            cm = _CONTENTS_RE.search(hdr)
+            yield num, hdr, box, objects.get(int(cm.group(1))) if cm else None
+
+    return objects, walk(_page_order(objects, page_nums))
+
+
+def _parse_pdf(data: bytes) -> list[PdfPage]:
     pages = []
-    for num in _page_order(objects, page_nums):
-        hdr, _ = objects[num]
-        mb = _MEDIABOX_RE.search(hdr)
-        if mb:
-            bx0, by0, bx1, by1 = (float(mb.group(i)) for i in range(1, 5))
-        else:
-            bx0, by0, bx1, by1 = 0.0, 0.0, 612.0, 792.0
+    for _num, _hdr, (bx0, by0, bx1, by1), content in _pdf_pages(data)[1]:
         width, height = bx1 - bx0, by1 - by0
-        if width <= 0 or height <= 0:
-            raise MiniPdfError("degenerate /MediaBox")
-        cm = _CONTENTS_RE.search(hdr)
         spans: list[Span] = []
-        if cm and int(cm.group(1)) in objects:
-            content_hdr, content_raw = objects[int(cm.group(1))]
-            if content_raw is not None:
-                stream = _decode_stream(content_hdr, content_raw)
-                try:
-                    spans = _tokenize_spans(stream, height, origin_x=bx0, origin_y=by0)
-                except Exception as e:
-                    # a malformed-but-real PDF must be a MiniPdfError, not a
-                    # poison pill: callers route MiniPdfError to the OCR
-                    # fallback / None clip instead of failing the Spark task
-                    raise MiniPdfError(
-                        f"unparseable content stream: {type(e).__name__}: {e}"
-                    ) from e
+        if content is not None and content[1] is not None:
+            stream = _decode_stream(*content)
+            try:
+                spans = _tokenize_spans(stream, height, origin_x=bx0, origin_y=by0)
+            except Exception as e:
+                # a malformed-but-real PDF must be a MiniPdfError, not a
+                # poison pill: callers route MiniPdfError to the OCR
+                # fallback / None clip instead of failing the Spark task
+                raise MiniPdfError(
+                    f"unparseable content stream: {type(e).__name__}: {e}"
+                ) from e
         pages.append(PdfPage(spans, width, height))
     return pages
 
@@ -738,25 +758,32 @@ def write_minimal_pdf(
             import zlib
 
             content = zlib.compress(content, 6)
-            objs.append(
-                f"<< /Length {len(content)} /Filter /FlateDecode >>\nstream\n".encode()
-                + content
-                + b"\nendstream"
-            )
-        else:
-            objs.append(
-                f"<< /Length {len(content)} >>\nstream\n".encode() + content + b"\nendstream"
-            )
+        objs.append(_stream_obj(content, tail=" /Filter /FlateDecode" if compress else ""))
+    return _serialize(objs)
 
+
+def _stream_obj(payload: bytes, head: str = "", tail: str = "") -> bytes:
+    """A stream object's body: its dict (``head`` and ``tail`` are the
+    entries before and after /Length), then the payload."""
+    return (
+        f"<< {head}/Length {len(payload)}{tail} >>\nstream\n".encode()
+        + payload
+        + b"\nendstream"
+    )
+
+
+def _serialize(objs: list[bytes]) -> bytes:
+    """A PDF 1.4 file of ``objs`` numbered from 1: header, objects,
+    cross-reference table, trailer with object 1 as the catalog."""
     out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
+    offsets = []
     for i, body in enumerate(objs, start=1):
         offsets.append(len(out))
         out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
     xref_pos = len(out)
     out += f"xref\n0 {len(objs) + 1}\n".encode()
     out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
+    for off in offsets:
         out += f"{off:010d} 00000 n \n".encode()
     out += (
         f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R >>\nstartxref\n{xref_pos}\n%%EOF\n"

@@ -277,6 +277,30 @@ def test_inline_image_bytes_do_not_perturb_ctm():
     assert (page[:30] == 255).all() and (page[40:] == 255).all()
 
 
+@pytest.mark.parametrize(
+    "inline",
+    [
+        b"BI /W 2 /H 2 /BPC 8 /CS /G ID \x00\x01\x02)EI\n",  # EI abuts ')'
+        b"BI /W 2 /H 2 /BPC 8 /CS /G ID \x00\x01\x02AEI\n",  # 'A' abuts EI
+    ],
+    ids=["after-paren", "after-word-char"],
+)
+def test_inline_image_ei_abutting_data_keeps_placement(inline):
+    """The text reader's abutting-EI fallbacks, ahead of a placement:
+    with no whitespace-delimited EI the skip must still end at the
+    abutting one, not eat the ``q … cm /Im0 Do Q`` that follows."""
+    img = _img(10, 10, seed=31)
+    place = b"q 10 0 0 10 20 60 cm /Im0 Do Q"
+
+    def page(content):
+        pdf = _raw_pdf(mediabox="0 0 100 100", content=content, img=img)
+        return rasterize_pdf_pages(pdf, dpi=72)[0]
+
+    want = page(place)
+    assert np.array_equal(want[30:40, 20:30], img)
+    assert np.array_equal(page(inline + place), want)
+
+
 # sha256 of each writer's output for the fixed inputs below, recorded
 # with the writers as they stood before the PDF object layer was shared
 # between sources/pdftext.py and sources/pdfraster.py.  The round-trip

@@ -427,6 +427,37 @@ def test_kill_at_each_commit_step_resumes(session, synth, tmp_path, monkeypatch,
     assert sink.verify_sink(out)["staging"] == []
 
 
+def test_compaction_killed_before_publish_leaves_table_unchanged(session, synth, tmp_path, monkeypatch):
+    """A compaction killed between its write and its publish (here the
+    first rename raises) leaves ``extracted/`` as it was for a reader of
+    the directory: the same rows, and ``bucket`` still an int.  The
+    rewrite waits under ``_staging/`` for gc_orphans, outside the table."""
+    import os
+
+    from ocr_api_spark.plans import pipeline, sink
+
+    out = str(tmp_path / "out")
+    pipeline.run_extraction(session, synth["pages"], synth["claims"], out, n_buckets=4, n_salts=2)
+    base = os.path.join(out, "extracted")
+    n_rows = session.read.parquet(base).count()
+    files = {b: len(pipeline._data_files(os.path.join(base, f"bucket={b}"))) for b in range(4)}
+    bucket = max(files, key=files.get)
+    assert files[bucket] > 1  # more files than the target: compact_bucket rewrites
+
+    def rename(*_a, **_kw):
+        raise _Killed("rename")
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(_Killed):
+        sink.compact_bucket(session, out, bucket)
+    monkeypatch.undo()
+
+    after = session.read.parquet(base)
+    assert dict(after.dtypes)["bucket"] == "int"
+    assert after.count() == n_rows
+    assert len(sink.verify_sink(out)["staging"]) == 1
+
+
 @pytest.mark.filterwarnings("error")
 def test_concurrent_writers_on_disjoint_buckets(session, synth, tmp_path, one_job_8):
     """Two run_extraction calls into one out_dir at once, on disjoint
@@ -508,7 +539,9 @@ def test_chunked_groups_inherit_the_callers_job_group(session, synth, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert totals["groups_run"] == 2 and totals["rows"] == 300
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    # no new ungrouped job; old ones may drop out meanwhile (the status
+    # store evicts its oldest 100 jobs each time it passes 1,000)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
     # each group runs at least its write job
     assert len(tracker.getJobIdsForGroup("chunked-caller")) >= totals["groups_run"]
 
