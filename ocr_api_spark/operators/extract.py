@@ -334,13 +334,21 @@ def fused_extract_udf(
     payload crosses the JVM↔Python boundary once.  Wire it with
     ``with_extraction``."""
 
-    def resolve(text, html):
+    errors = {}
+
+    def resolve(i, text, html):
         if text:
             return text
-        return _payload_to_text(html)
+        try:  # the per-row Failed contract, as in extract_batch
+            return _payload_to_text(html)
+        except Exception as e:  # noqa: BLE001
+            errors[i] = f"{type(e).__name__}: {e}"
+            return None
 
-    resolved = pd.Series([resolve(t, h) for t, h in zip(texts, htmls)])
+    resolved = pd.Series([resolve(i, t, h) for i, (t, h) in enumerate(zip(texts, htmls))])
     out = extract_batch(resolved, doc_types)
+    for i, error in errors.items():  # a row with no text is Failed: name why
+        out.at[i, "error"] = error
     # one column→records pass instead of per-row .iloc lookups (which pay
     # a full row materialization per cell on wide Arrow batches)
     match_in = out[["pan", "aadhaar", "bank", "financial"]].to_dict("records")

@@ -4,11 +4,13 @@ Spark job — SURVEY.md §3) with the scale contract of the north_rule:
 - **url-hash bucketing**: every row gets ``bucket = pmod(xxhash64(url),
   n_buckets)``; the output is partitioned by bucket, and a completed
   bucket is the unit of resume.
-- **skew salting**: hot hosts would skew a host-keyed shuffle; the
-  repartition key is ``(bucket, salt)`` with ``salt = pmod(xxhash64(url),
-  n_salts)`` so one hot bucket spreads over many tasks.  The salt only
-  affects placement — extraction is pure per-row, so content is
-  deterministic regardless of layout.
+- **placement by (bucket, salt)**: ``salt = pmod(xxhash64(url, 1),
+  n_salts)`` cuts each bucket into cells, and a row goes to the
+  partition that holds its cell's equal-width share of the buckets a
+  run writes (``extraction_plan``), with no sample and no hash.  A
+  partition holds whole, consecutive buckets, or the salt cells of
+  one.  Placement only decides which file a row lands in: extraction
+  is pure per-row, so content is deterministic regardless of layout.
 - **lineage + metrics in one commit record**: a run commits by writing
   one ``_snapshots/`` manifest (``plans/sink.py``) naming its files and,
   per committed bucket, rows out, failures and wall seconds.  The
@@ -186,6 +188,7 @@ def extraction_plan(
     n_salts: int,
     n_parts: int | None = None,
     broadcast_claims: bool = True,
+    buckets: list[int] | None = None,
 ) -> DataFrame:
     """Build the logical plan: bucket+salt, repartition the *raw* pages
     (parallelism for the UDF stage + alignment for the bucket-partitioned
@@ -194,30 +197,56 @@ def extraction_plan(
     lazy), extract and match in one Arrow stage.  Without claims,
     ``doc_type`` and every match are null.
 
+    ``buckets``: the buckets this plan writes (None: all of them).  The
+    scan keeps only their rows; the filter tests the bucket expression
+    itself, so the optimizer pushes it to the scan.
+
+    ``n_parts``: each row goes to partition ``pid`` by id
+    (``repartitionById``: no sample, no hash), where ``pid`` is the
+    equal-width share of the row's (bucket rank, salt) cell over the
+    ``len(buckets) * n_salts`` cells this plan writes; the rank is the
+    bucket's index in ``sorted(buckets)``.  Each partition then holds
+    whole, consecutive buckets (one file per bucket when ``n_parts``
+    divides the bucket count), and a bucket spreads over partitions at
+    salt boundaries when there are more partitions than buckets.  Bucket
+    and salt are hashes of the url, so the cells hold equal rows in
+    expectation, and placement is the same on every build.
+
+    The trade against the range partitioner this replaces (which ran a
+    sampling job per plan): equal-width cells cannot see skew that only
+    adversarial url hashes create.  On 8,000 rows over 16 buckets and 8
+    salts, max/mean rows per partition at 4 and 8 parts, range → by id:
+    uniform urls 1.06 / 1.12 → 1.02 / 1.04; 2,000 *distinct* urls that
+    all hash to one bucket 1.04 / 1.13 → 1.75 / 2.73, since that bucket's
+    cells stay in their partitions; one url repeated 2,000 times
+    1.55 / 3.00 → 1.75 / 2.72, one cell that neither can split.
+    Extraction is pure per-row, so placement moves rows between files,
+    never their content.
+
     ``broadcast_claims``: claims are per-url facts, joined through
     ``F.broadcast`` by default; at 10^12 scale disable this and
     co-bucket both tables so the join is shuffle-free."""
+    n_buckets, n_salts = int(n_buckets), int(n_salts)
+    ranked = None if buckets is None else sorted({int(b) for b in buckets})
+    if ranked == list(range(n_buckets)):
+        ranked = None  # every bucket: no filter, and the rank is the bucket
+    if ranked is not None:
+        listed = ", ".join(map(str, ranked))
+        # IN () is not SQL: an empty bucket set keeps no row
+        pages = pages.where(f"{_BUCKET_SQL.format(n_buckets)} IN ({listed})" if ranked else "false")
     pages = pages.withColumns(
         {
-            "bucket": F.expr(_BUCKET_SQL.format(int(n_buckets))),
-            "salt": F.expr(_SALT_SQL.format(int(n_salts))),
+            "bucket": F.expr(_BUCKET_SQL.format(n_buckets)),
+            "salt": F.expr(_SALT_SQL.format(n_salts)),
         }
     )
     if n_parts:
-        # r8 (guide §6 file sizing + §2.5): RANGE partition on (bucket,
-        # salt) instead of hash.  Hash scattered every bucket's n_salts
-        # salt groups across random partitions, so each task wrote ~8
-        # bucket directories — 481 files of ~250 rows at the sf1.0 bench
-        # (and a per-file writer/commit cost that dominated the write).
-        # Range keeps each partition on 1-2 consecutive buckets → 111
-        # files, measured 4.21 → 3.79 s for the same write INCLUDING
-        # range sampling's extra pass.  Skew posture is equal-or-better:
-        # the sampler balances partitions by row count, so a hot bucket
-        # is split at salt boundaries instead of hashing whole into one
-        # task.  Row placement stays deterministic (fixed sampling
-        # seed), and extraction is pure per-row, so output content is
-        # unchanged — only file layout improves.
-        pages = pages.repartitionByRange(n_parts, "bucket", "salt")
+        if ranked:  # either rank is a BIGINT, so the product cannot overflow
+            rank, n_ranked = f"(array_position(array({listed}), bucket) - 1)", len(ranked)
+        else:
+            rank, n_ranked = "CAST(bucket AS BIGINT)", n_buckets
+        pid = f"CAST(({rank} * {n_salts} + salt) * {int(n_parts)} DIV {n_ranked * n_salts} AS INT)"
+        pages = pages.repartitionById(int(n_parts), F.expr(pid))
     if claims is not None:
         right = F.broadcast(claims) if broadcast_claims else claims
         pages = pages.join(right, "url", "left")
@@ -353,22 +382,11 @@ def run_extraction(
     pages = read_parquet(spark, pages_path)
     claims = read_parquet(spark, claims_path) if claims_path else None
 
-    # the resume filter tests the bucket expression itself: extraction_plan
-    # derives the column, and the optimizer pushes the filter to the scan
-    done = read_completed_buckets(spark, out_dir)
-    bucket = _BUCKET_SQL.format(int(n_buckets))
-    keep = []
-    if buckets is not None:
-        keep.append(f"{bucket} IN ({', '.join(str(int(b)) for b in buckets)})" if buckets else "false")
-    if done:
-        keep.append(f"NOT {bucket} IN ({', '.join(str(int(b)) for b in done)})")
-    if keep:
-        pages = pages.where(" AND ".join(keep))
-
     # No manifest names a bucket in todo, so nothing in its directory is
     # committed: it holds only files a killed run published before its
     # manifest.  Clear them, or this run's rows would land beside theirs.
     # Runs in flight together own disjoint buckets.
+    done = read_completed_buckets(spark, out_dir)
     out_path = os.path.join(out_dir, "extracted")
     todo = set(range(n_buckets) if buckets is None else map(int, buckets)) - set(done)
     for b in todo:
@@ -380,19 +398,20 @@ def run_extraction(
     # UDF stage: it sets UDF parallelism (a compressed-byte-sized scan
     # would otherwise under-partition a compute-heavy stage), moves raw
     # input bytes instead of extracted structs, and aligns tasks with the
-    # bucket-partitioned sink (n_parts files, not n_tasks × n_buckets).
-    # One partition per core, not two: each Python task pays a fixed
-    # set-up whatever its row count, and a second wave of tasks buys no
-    # balance (the range sampler keeps partitions within ~4% of the
-    # mean).  That set-up was ~0.3 s of a core per task while workers
-    # imported PySpark from pyspark.zip, and is ~0.08 s under
+    # bucket-partitioned sink (max(n_parts, len(todo)) files when one
+    # divides the other, not n_tasks × n_buckets).  One partition per
+    # core, not two: each Python task pays a fixed set-up whatever its
+    # row count, and a second wave of tasks buys no balance (placement
+    # keeps 8,000 uniform urls over 16 buckets within ~4% of the mean at
+    # 4 and 8 parts).  That set-up was ~0.3 s of a core per task while
+    # workers imported PySpark from pyspark.zip, and is ~0.08 s under
     # plans.worker_daemon (a pass-through pandas UDF over 4,000 rows,
     # 16 tasks against 4, local[4]).  Two per core still lost: perfbench
     # on 4 vCPUs, local[4], medians, resume_chunked 5,716 → 4,958
     # docs/s (6 pairs, all lost), crawl_mixed 2,063 → 2,050 (4 pairs,
     # 1 won).
     n_parts = repartition or spark.sparkContext.defaultParallelism
-    plan = extraction_plan(pages, claims, n_buckets, n_salts, n_parts=n_parts)
+    plan = extraction_plan(pages, claims, n_buckets, n_salts, n_parts=n_parts, buckets=sorted(todo))
 
     # Metrics ride on the write with ZERO extra Spark jobs over the data:
     # - one global observe() aggregate (rows out) — measured free (a
@@ -467,9 +486,10 @@ def run_extraction(
 
 # Bucket groups run_extraction_chunked keeps in flight.  Each group
 # spends ~half its wall in set-up with the cores idle (plan building,
-# the claims broadcast, the range sample), and a second group's
-# UDF/write job fills that window: perfbench resume_chunked on
-# 4 vCPUs, local[4], medians of 10 seeds, 3,364 → 4,355 docs/s.  Two is
+# the claims broadcast, the shuffle map; when these figures were taken,
+# also a range sample), and a second group's UDF/write job fills that
+# window: perfbench resume_chunked on 4 vCPUs, local[4], medians of 10
+# seeds, 3,364 → 4,355 docs/s.  Two is
 # the smallest width that overlaps one group's set-up with another's
 # run; a wider window adds in-flight broadcasts, memory and
 # redo-on-kill for idle time two already covers.  Re-measured with the

@@ -588,25 +588,21 @@ def _page_order(objects: dict[int, tuple[bytes, bytes | None]], page_nums: list[
     top = [n for n in roots if n not in referenced] or roots
     ordered: list[int] = []
     seen: set[int] = set()
-
-    def walk(num: int) -> None:
+    # an explicit stack, not recursion: a tree may nest deeper than
+    # Python's recursion limit.  Kids go on reversed, so they pop in order.
+    stack = sorted(top, reverse=True)
+    while stack:
+        num = stack.pop()
         if num in seen:  # cycle guard
-            return
+            continue
         seen.add(num)
         if num in page_set:
-            if num not in ordered:
-                ordered.append(num)
-            return
+            ordered.append(num)
+            continue
         entry = objects.get(num)
-        if entry is None:
-            return
-        km = _KIDS_RE.search(entry[0])
+        km = _KIDS_RE.search(entry[0]) if entry is not None else None
         if km:
-            for ref in _REF_RE.findall(km.group(1)):
-                walk(int(ref))
-
-    for root in sorted(top):
-        walk(root)
+            stack += [int(ref) for ref in reversed(_REF_RE.findall(km.group(1)))]
     if set(ordered) == page_set:
         return ordered
     # incomplete tree: keep what the tree ordered, append strays by number

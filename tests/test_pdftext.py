@@ -164,6 +164,36 @@ def test_kids_order_beats_object_number_order():
     assert pdf_text(pdf) == "FIRST\nSECOND\n"
 
 
+def deep_page_tree_pdf(depth: int) -> bytes:
+    """Two pages: FIRST at the end of a chain of ``depth`` nested
+    /Pages nodes, listed first in the root's /Kids, and SECOND directly
+    under the root with a lower object number.  At depth 1,500 the file
+    is ~92 KB, and the chain is deeper than Python's recursion limit."""
+    first = b"BT /F1 12 Tf 72 700 Td (FIRST) Tj ET"
+    second = b"BT /F1 12 Tf 72 700 Td (SECOND) Tj ET"
+    chain, deep_page = 5, 5 + depth
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [%d 0 R 3 0 R] /Count 2 >>" % chain,
+        3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
+        4: b"<< /Length %d >>\nstream\n%s\nendstream" % (len(second), second),
+        deep_page: b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R >>" % (deep_page - 1, deep_page + 1),
+        deep_page + 1: b"<< /Length %d >>\nstream\n%s\nendstream" % (len(first), first),
+    }
+    for k in range(chain, deep_page):
+        objs[k] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % (k + 1)
+    body = b"".join(b"%d 0 obj\n%s\nendobj\n" % (n, objs[n]) for n in sorted(objs))
+    return b"%PDF-1.4\n" + body + b"%%EOF\n"
+
+
+@pytest.mark.parametrize("depth", [1, 1500])
+def test_deep_page_tree_keeps_kids_order(depth):
+    """The /Kids walk takes any depth (an explicit stack, not recursion)
+    and stays depth-first: the deep page comes first, as its chain is the
+    root's first kid, although its object number is higher."""
+    assert pdf_text(deep_page_tree_pdf(depth)) == "FIRST\nSECOND\n"
+
+
 def test_asciihex_filter():
     content = b"BT /F1 12 Tf 72 700 Td (hexed) Tj ET"
     hexed = content.hex().encode() + b">"

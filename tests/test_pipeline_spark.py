@@ -131,6 +131,52 @@ def test_failed_rows_do_not_kill_partition(session, tmp_path):
     assert (df["status"] == "Failed").any()
 
 
+def test_resolve_failure_is_a_failed_row(monkeypatch):
+    """An exception out of text resolve fails its row, with ``error``
+    naming the class, and leaves the batch's other rows alone."""
+    import pandas as pd
+
+    from ocr_api_spark.operators import extract
+
+    def boom(payload):
+        raise RecursionError("too deep")
+
+    monkeypatch.setattr(extract, "_payload_to_text", boom)
+    none = pd.Series([None, None])
+    out = extract.fused_extract_udf.func(
+        pd.Series([None, "PAN ABCPS1234F"]), pd.Series([b"%PDF-1.4", None]), *[none] * 10
+    )
+    assert out["status"].tolist() == ["Failed", "Completed"]
+    assert out["error"].tolist() == ["RecursionError: too deep", None]
+    assert out["extracted_text"][0] is None and out["match"][0]["percentages"] is None
+
+
+def test_deep_pdf_page_tree_does_not_fail_the_run(session, synth, tmp_path):
+    """A %PDF row whose page tree nests deeper than Python's recursion
+    limit, beside ordinary rows: the run commits every bucket, and every
+    row ends Completed, or Failed with its error set."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_api_spark.plans import pipeline
+    from tests.test_pdftext import deep_page_tree_pdf
+
+    pages = pq.read_table(synth["pages"])
+    deep = {c: [None] for c in pages.column_names}
+    deep.update(url=["https://deep.example/tree.pdf"], warc_ts=pages.column("warc_ts")[:1].to_pylist(),
+                html=[deep_page_tree_pdf(1500)], lang=["en"])
+    path = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.concat_tables([pages, pa.Table.from_pydict(deep, schema=pages.schema)]), path)
+    out = str(tmp_path / "out")
+    stats = pipeline.run_extraction(session, path, synth["claims"], out, n_buckets=4, n_salts=2)
+    assert stats["rows"] == pages.num_rows + 1
+    assert pipeline.read_completed_buckets(session, out) == [0, 1, 2, 3]
+    got = pq.read_table(out + "/extracted").to_pandas().set_index("url")
+    assert set(got["status"]) <= {"Completed", "Failed"}
+    assert got.loc[got["status"] == "Failed", "error"].notna().all()
+    assert got.loc["https://deep.example/tree.pdf", "extracted_text"].split() == ["FIRST", "SECOND"]
+
+
 def test_salt_affects_placement_not_content(session, synth, tmp_path):
     """north_rule: salting must never change per-url output bytes."""
     from ocr_api_spark.plans.pipeline import run_extraction
@@ -143,6 +189,90 @@ def test_salt_affects_placement_not_content(session, synth, tmp_path):
     b = session.read.parquet(out_b + "/extracted").select("url", "extracted_text").toPandas().set_index("url")["extracted_text"]
     assert len(a) == len(b)
     assert all(a[u] == b[u] for u in a.index)
+
+
+def _placement(plan):
+    """url, bucket and partition of every row of an extraction plan (the
+    UDF column is pruned, so no Python task runs)."""
+    from pyspark.sql import functions as F
+
+    return plan.select("url", "bucket", F.spark_partition_id().alias("part")).toPandas()
+
+
+def test_placement_keeps_whole_consecutive_buckets(session, synth, tmp_path):
+    """With n_parts dividing the bucket count, each partition holds whole,
+    consecutive buckets, so a run writes exactly one file per bucket."""
+    import glob
+
+    from ocr_api_spark.plans.pipeline import extraction_plan, run_extraction
+
+    got = _placement(extraction_plan(session.read.parquet(synth["pages"]), None, 8, 4, n_parts=4))
+    parts = got.groupby("bucket")["part"].unique().map(list).to_dict()
+    assert parts == {b: [b // 2] for b in range(8)}
+
+    out = str(tmp_path / "out")
+    run_extraction(session, synth["pages"], synth["claims"], out, n_buckets=8, n_salts=4, repartition=4)
+    files = glob.glob(out + "/extracted/bucket=*/*.parquet")
+    assert len(files) == 8 and len({f.rsplit("/", 1)[0] for f in files}) == 8
+
+
+def test_placement_of_a_noncontiguous_bucket_set(session, synth):
+    """A resume set with gaps ranks its buckets, so it still fills every
+    partition; an empty set keeps no row."""
+    from ocr_api_spark.plans.pipeline import extraction_plan
+
+    pages = session.read.parquet(synth["pages"])
+    got = _placement(extraction_plan(pages, None, 16, 8, n_parts=4, buckets=[11, 1, 6, 5]))
+    assert got.groupby("bucket")["part"].unique().map(list).to_dict() == {1: [0], 5: [1], 6: [2], 11: [3]}
+    assert extraction_plan(pages, None, 16, 8, n_parts=4, buckets=[]).count() == 0
+
+
+def test_placement_is_the_same_on_every_build(session, synth):
+    """Placement is a function of the url: two builds of the plan, claims
+    joined, put every url in the same partition."""
+    from ocr_api_spark.plans.pipeline import extraction_plan
+
+    def build():
+        pages, claims = (session.read.parquet(synth[k]) for k in ("pages", "claims"))
+        got = _placement(extraction_plan(pages, claims, 16, 8, n_parts=8))
+        return sorted(zip(got["url"], got["part"]))
+
+    first = build()
+    assert len({p for _, p in first}) == 8
+    assert build() == first
+
+
+@pytest.fixture(scope="module")
+def crawl(tmp_path_factory):
+    """4,000 crawl-shaped pages, and the same table with its first 1,000
+    rows replaced by copies of one url (25% of the rows)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("crawl")
+    pages = write_pages(str(d / "uniform"), n_rows=4000, seed=5)["pages"]
+    t = pq.read_table(pages)
+    hot = str(d / "hot.parquet")
+    pq.write_table(pa.concat_tables([t.take([0] * 1000), t.slice(1000)]), hot)
+    return {"uniform": pages, "hot": hot}
+
+
+@pytest.mark.parametrize("n_parts", [4, 8])
+def test_placement_balance(session, crawl, n_parts):
+    """Urls hash uniformly into (bucket, salt) cells, so equal-width
+    placement keeps partitions within 15% of the mean.  One url repeated
+    as 25% of the rows is one cell: its partition holds those rows plus
+    no more than a fair share of the rest."""
+    from ocr_api_spark.plans.pipeline import extraction_plan
+
+    def rows_per_part(path):
+        got = _placement(extraction_plan(session.read.parquet(path), None, 64, 8, n_parts=n_parts))
+        return got["part"].value_counts().reindex(range(n_parts), fill_value=0)
+
+    uniform = rows_per_part(crawl["uniform"])
+    assert uniform.max() / uniform.mean() <= 1.15
+    hot = rows_per_part(crawl["hot"])
+    assert hot.sum() == 4000 and hot.max() <= 1000 + 1.15 * 3000 / n_parts
 
 
 def test_dedupe_stage(session, tmp_path):
@@ -437,7 +567,8 @@ def test_compaction_killed_before_publish_leaves_table_unchanged(session, synth,
     from ocr_api_spark.plans import pipeline, sink
 
     out = str(tmp_path / "out")
-    pipeline.run_extraction(session, synth["pages"], synth["claims"], out, n_buckets=4, n_salts=2)
+    # 8 partitions over 4 buckets: each bucket is written as 2 files
+    pipeline.run_extraction(session, synth["pages"], synth["claims"], out, n_buckets=4, n_salts=2, repartition=8)
     base = os.path.join(out, "extracted")
     n_rows = session.read.parquet(base).count()
     files = {b: len(pipeline._data_files(os.path.join(base, f"bucket={b}"))) for b in range(4)}
@@ -672,9 +803,10 @@ def test_udf_stage_runs_one_task_per_core(session, synth, tmp_path):
     stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
     write_stage = tracker.getStageInfo(max(stages))  # the last stage run is the write
     assert write_stage.numTasks == sc.defaultParallelism
-    # the claims broadcast, the range sample, the shuffle map and the
-    # write: reading the inputs runs no schema-inference job
-    assert len(jobs) == 4, sorted(jobs)
+    # the claims broadcast, the shuffle map and the write: placement by
+    # partition id runs no sampling job, and reading the inputs no
+    # schema-inference job
+    assert len(jobs) == 3, sorted(jobs)
 
 
 def test_web_only_corpus_runs(session, tmp_path):

@@ -23,7 +23,9 @@ def sink(session, tmp_path):
 
     paths = write_pages(str(tmp_path / "synth"), n_rows=120, seed=9)
     out = str(tmp_path / "out")
-    stats = run_extraction(session, paths["pages"], paths["claims"], out, n_buckets=4, n_salts=2)
+    # 8 partitions over 4 buckets: each bucket is written as 2 files,
+    # which gives compaction something to merge
+    stats = run_extraction(session, paths["pages"], paths["claims"], out, n_buckets=4, n_salts=2, repartition=8)
     return out, stats
 
 
