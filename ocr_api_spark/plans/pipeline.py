@@ -23,8 +23,8 @@ Spark job — SURVEY.md §3) with the scale contract of the north_rule:
   ``out_dir/_staging/<uuid>/`` and renames its files into
   ``extracted/``, so its new files are known without diffing the
   table, and runs on disjoint buckets can commit side by side.
-  ``run_extraction_chunked`` keeps two bucket groups in flight; a kill
-  redoes at most those two groups.
+  ``run_extraction_chunked`` keeps two bucket groups in flight, each
+  on its share of the cores; a kill redoes at most those two groups.
 - **claims join**: left join on url.  ``extraction_plan`` broadcasts
   the claims (``F.broadcast``) unless told not to; at production scale
   they are bucketed the same way as the pages and joined without a
@@ -43,7 +43,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType, TimestampType
+from pyspark.sql.types import IntegerType, StructField, StructType, TimestampType
 
 # CLAIM_COLS is also imported from here (perfbench)
 from ocr_api_spark.operators.extract import CLAIM_COLS, with_extraction  # noqa: F401
@@ -92,9 +92,10 @@ def _footer_file(path: str) -> str | None:
 
 def _same_in_spark(t) -> bool:
     """Whether Spark's parquet reader types a column of arrow type ``t``
-    as ``from_arrow_type`` does.  INT96 is decided apart (``_footer_schema``);
-    an ns timestamp is illegal to Spark, and the types left out map
-    differently (duration, unsigned ints) or not at all."""
+    as ``from_arrow_type`` does.  INT96 and a top-level null column are
+    decided apart (``_footer_schema``); an ns timestamp is illegal to
+    Spark, and the types left out map differently (duration, unsigned
+    ints, a null nested in another type) or not at all."""
     import pyarrow.types as pt
 
     if pt.is_dictionary(t):
@@ -119,9 +120,13 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     footer on the driver; None where only Spark's inference can tell.
     A Spark-written file carries its schema as JSON, which is what Spark
     uses; otherwise the arrow schema maps as Spark types the parquet
-    columns, with INT96 (Spark's legacy timestamp) taken from the
-    physical type."""
+    columns.  Two top-level columns take their type from the physical
+    column: INT96 (Spark's legacy timestamp), and an all-null column,
+    which arrow writes as INT32 with the Null annotation and Spark reads
+    as an int (a document-only pages table's ``html``).  A null field
+    inside a nested type is left to Spark."""
     import pyarrow.parquet as pq
+    import pyarrow.types as pt
     from pyspark.sql.pandas.types import from_arrow_type
 
     footer = _footer_file(path)
@@ -132,16 +137,17 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
         spark_json = (pf.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
         if spark_json is not None:
             return StructType.fromJson(json.loads(spark_json))
-        int96 = {
-            pf.schema.column(i).path
+        physical = {
+            pf.schema.column(i).path: pf.schema.column(i).physical_type
             for i in range(pf.metadata.num_columns)
-            if pf.schema.column(i).physical_type == "INT96"
         }
         ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
         fields = []
         for f in pf.schema_arrow:
-            if f.name in int96:
+            if physical.get(f.name) == "INT96":
                 t = TimestampType()
+            elif pt.is_null(f.type) and physical.get(f.name) == "INT32":
+                t = IntegerType()
             elif _same_in_spark(f.type):
                 t = from_arrow_type(f.type, prefer_timestamp_ntz=ntz)
             else:
@@ -155,8 +161,10 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without its schema-inference job: the
     schema comes from one footer on the driver (``_footer_schema``) and
-    equals the inferred one; Spark still discovers hive partition
-    columns.  Where the footer cannot decide, Spark infers as before."""
+    equals the inferred one, an all-null top-level column included;
+    Spark still discovers hive partition columns.  Where the footer
+    cannot decide (a nested null field, an unsigned int, a summary file,
+    mergeSchema on), Spark infers as before, at the cost of one job."""
     schema = _footer_schema(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
@@ -409,7 +417,9 @@ def run_extraction(
     # 16 tasks against 4, local[4]).  Two per core still lost: perfbench
     # on 4 vCPUs, local[4], medians, resume_chunked 5,716 → 4,958
     # docs/s (6 pairs, all lost), crawl_mixed 2,063 → 2,050 (4 pairs,
-    # 1 won).
+    # 1 won).  The same rule holds across runs that share the cores:
+    # run_extraction_chunked passes each group in flight its share of
+    # them as ``repartition``.
     n_parts = repartition or spark.sparkContext.defaultParallelism
     plan = extraction_plan(pages, claims, n_buckets, n_salts, n_parts=n_parts, buckets=sorted(todo))
 
@@ -492,9 +502,17 @@ def run_extraction(
 # seeds, 3,364 → 4,355 docs/s.  Two is
 # the smallest width that overlaps one group's set-up with another's
 # run; a wider window adds in-flight broadcasts, memory and
-# redo-on-kill for idle time two already covers.  Re-measured with the
-# workers on plans.worker_daemon, against two: one in flight 5,759 →
-# 4,447 docs/s (4 pairs, all lost), three 5,974 → 5,865 (6 pairs, 2 won).
+# redo-on-kill.  Re-measured with the workers on plans.worker_daemon,
+# against two: one in flight 5,759 → 4,447 docs/s (4 pairs, all lost),
+# three 5,974 → 5,865 (6 pairs, 2 won).  The groups in flight share the
+# cores (``repartition`` below), each taking ceil(cores / groups in
+# flight) partitions.  With that split, three against two on local[4]
+# (8 alternating fresh chunked runs, one session): 20,000 document rows
+# in 16 groups 4.28 → 4.09 s (6 won), 8,000 crawl pages in 8 groups
+# 2.37 → 2.09 s (8 won), which oversubscribes 6 tasks on 4 cores.
+# perfbench's resume_chunked runs two groups, so it cannot show the
+# difference, and three widens the redo of a kill to three groups:
+# two stays until a benchmark with more groups shows the gain.
 _GROUPS_IN_FLIGHT = 2
 
 
@@ -527,8 +545,10 @@ def run_extraction_chunked(
 
     Group size trades scheduler overhead (one job per group) against
     redo bound; with bucket = hash(url) % n_buckets the groups are
-    statistically even, and each group's job internally repartitions to
-    full cluster parallelism, so chunking costs extra scans of the
+    statistically even.  Unless ``repartition`` is given, each group's
+    UDF stage takes ``ceil(defaultParallelism / groups in flight)``
+    tasks, so the groups in flight together run one Python task per
+    core (``_GROUPS_IN_FLIGHT``); chunking costs extra scans of the
     (pruned) input, not idle executors."""
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
     from itertools import islice
@@ -548,6 +568,11 @@ def run_extraction_chunked(
             groups.append(group)
         else:
             totals["groups_skipped"] += 1
+
+    if not kw.get("repartition"):
+        # the groups in flight share the cores: each takes its share
+        width = min(_GROUPS_IN_FLIGHT, len(groups)) or 1
+        kw["repartition"] = -(-spark.sparkContext.defaultParallelism // width)
 
     def run_group(group: list[int]) -> dict:
         # the module attribute, looked up per call: each group is one

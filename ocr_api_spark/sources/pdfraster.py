@@ -210,7 +210,7 @@ def rasterize_pdf_pages(data: bytes, dpi: int = 300) -> list[np.ndarray]:
         return _rasterize(data, dpi)
     except MiniPdfError:
         raise
-    except (IndexError, KeyError, ValueError, OverflowError) as e:
+    except Exception as e:  # any parse failure on untrusted bytes
         raise MiniPdfError(f"malformed PDF: {type(e).__name__}: {e}") from e
 
 

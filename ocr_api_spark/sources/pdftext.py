@@ -618,7 +618,7 @@ def parse_pdf(data: bytes) -> list[PdfPage]:
         return _parse_pdf(data)
     except MiniPdfError:
         raise
-    except (IndexError, KeyError, ValueError, OverflowError) as e:
+    except Exception as e:  # any parse failure on untrusted bytes
         raise MiniPdfError(f"malformed PDF: {type(e).__name__}: {e}") from e
 
 

@@ -135,6 +135,22 @@ def test_pdf_flate_bomb_rejected():
         parse_pdf(pdf)
 
 
+@pytest.mark.parametrize("reader", ["parse_pdf", "rasterize_pdf_pages"])
+def test_any_parse_failure_is_a_pdf_error(monkeypatch, reader):
+    """A parse failure of any class surfaces as MiniPdfError, which
+    pdf_raster reports as bad_pdf and clip_all as no pages, instead of
+    escaping and failing their task."""
+    from ocr_api_spark.sources import pdfraster, pdftext
+
+    def broken(data):
+        raise TypeError("unexpected object layout")
+
+    monkeypatch.setattr(pdftext, "_scan_objects", broken)
+    read = pdftext.parse_pdf if reader == "parse_pdf" else pdfraster.rasterize_pdf_pages
+    with pytest.raises(MiniPdfError, match="TypeError: unexpected object layout"):
+        read(pdf_from_text("hello world"))
+
+
 def test_pdfraster_corruption_never_escapes():
     """The raster path walks object graphs, filter chains, AND image
     codecs — corruption anywhere must surface as MiniPdfError or decode

@@ -32,6 +32,14 @@ def synth(tmp_path_factory):
     return paths
 
 
+@pytest.fixture(scope="module")
+def docs_only(tmp_path_factory):
+    """Document rows only: arrow writes the all-null ``html`` column with
+    the null type (parquet INT32, Null annotation)."""
+    d = tmp_path_factory.mktemp("docs_only")
+    return write_pages(str(d), n_rows=300, seed=42, web_fraction=0.0)
+
+
 def test_extracted_text_byte_identical(session, synth, tmp_path):
     from ocr_api_spark.plans.pipeline import run_extraction
 
@@ -786,27 +794,70 @@ def test_lineage_read_failures(session, tmp_path):
         pipeline.read_completed_buckets(session, str(out))
 
 
-def test_udf_stage_runs_one_task_per_core(session, synth, tmp_path):
+@pytest.mark.parametrize("table", ["synth", "docs_only"])
+def test_udf_stage_runs_one_task_per_core(session, tmp_path, request, table):
     """run_extraction's UDF/write stage defaults to defaultParallelism
     tasks: every Python task pays a fixed worker setup whatever its row
     count, so the default is one task per core, not two."""
     from ocr_api_spark.plans.pipeline import run_extraction
 
+    paths = request.getfixturevalue(table)
     sc = session.sparkContext
-    sc.setJobGroup("one-task-per-core", "run_extraction task count")
+    group = f"one-task-per-core-{table}"
+    sc.setJobGroup(group, "run_extraction task count")
     try:
-        run_extraction(session, synth["pages"], synth["claims"], str(tmp_path / "out"), n_buckets=16, n_salts=4)
+        run_extraction(session, paths["pages"], paths["claims"], str(tmp_path / "out"), n_buckets=16, n_salts=4)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup("one-task-per-core")
+    jobs = tracker.getJobIdsForGroup(group)
     stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
     write_stage = tracker.getStageInfo(max(stages))  # the last stage run is the write
     assert write_stage.numTasks == sc.defaultParallelism
     # the claims broadcast, the shuffle map and the write: placement by
     # partition id runs no sampling job, and reading the inputs no
-    # schema-inference job
+    # schema-inference job, an all-null html column included
     assert len(jobs) == 3, sorted(jobs)
+
+
+@pytest.mark.parametrize(
+    "per_commit, repartition, width",
+    [(2, None, "shared"), (8, None, "all"), (2, 3, "given")],
+)
+def test_chunked_groups_share_the_cores(session, synth, tmp_path, per_commit, repartition, width):
+    """The groups of a chunked run in flight share the cores: each group's
+    UDF/write stage takes ceil(defaultParallelism / groups in flight)
+    tasks.  A run of one group takes them all, and an explicit
+    ``repartition`` is used as given."""
+    import math
+
+    from ocr_api_spark.plans import pipeline
+
+    sc = session.sparkContext
+    group = f"chunked-width-{per_commit}-{repartition}"
+    sc.setJobGroup(group, "chunked run task counts")
+    try:
+        totals = pipeline.run_extraction_chunked(
+            session, synth["pages"], synth["claims"], str(tmp_path / "out"),
+            n_buckets=8, buckets_per_commit=per_commit, n_salts=4, repartition=repartition,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert totals["rows"] == 300
+    tracker = sc.statusTracker()
+    # a write job runs the shuffle's (skipped) map stage and the write
+    # stage; the claims broadcast and the shuffle map are one stage each
+    writes = [
+        tracker.getStageInfo(max(info.stageIds)).numTasks
+        for info in map(tracker.getJobInfo, tracker.getJobIdsForGroup(group))
+        if len(info.stageIds) > 1
+    ]
+    expected = {
+        "shared": math.ceil(sc.defaultParallelism / pipeline._GROUPS_IN_FLIGHT),
+        "all": sc.defaultParallelism,
+        "given": repartition,
+    }[width]
+    assert writes == [expected] * totals["groups_run"], writes
 
 
 def test_web_only_corpus_runs(session, tmp_path):
@@ -873,6 +924,8 @@ def _parquet_input(kind: str, session, d) -> str:
         return path + ".parquet"
     if kind == "web_only_claims":
         return write_pages(str(d), n_rows=40, seed=7, web_fraction=1.0)["claims"]
+    if kind == "docs_only_pages":  # html is all null: arrow's null type
+        return write_pages(str(d), n_rows=40, seed=7, web_fraction=0.0)["pages"]
     raise ValueError(kind)
 
 
@@ -885,6 +938,7 @@ def _parquet_input(kind: str, session, d) -> str:
         "pyarrow_hive",
         "int96_no_spark_metadata",
         "web_only_claims",
+        "docs_only_pages",
     ],
 )
 def test_read_parquet_schema_equals_inferred(session, tmp_path, kind):
@@ -903,6 +957,25 @@ def test_read_parquet_schema_equals_inferred(session, tmp_path, kind):
     if kind == "int96_no_spark_metadata":
         # arrow reads INT96 as a naive timestamp; Spark's is LTZ
         assert from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True) != inferred
+
+
+@pytest.mark.parametrize("nested", ["struct", "list"])
+def test_read_parquet_leaves_a_nested_null_to_spark(session, tmp_path, nested):
+    """Only a top-level null column is typed from the footer; a null
+    field inside a nested type goes to Spark's inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_api_spark.plans.pipeline import _footer_schema, read_parquet
+
+    if nested == "struct":
+        col = pa.array([{"x": None}], pa.struct([("x", pa.null())]))
+    else:
+        col = pa.array([[None]], pa.list_(pa.null()))
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"n": [1], "nested": col}), path)
+    assert _footer_schema(session, path) is None
+    assert read_parquet(session, path).schema == session.read.parquet(path).schema
 
 
 @pytest.mark.parametrize("kind", ["empty_dir", "ns_timestamp"])
