@@ -2,8 +2,10 @@
 
 One Arrow-batched ``pandas_udf`` (``fused_extract_udf``) wraps the pure
 kernels: text resolve, field extraction and match, one Python↔JVM
-crossing amortized per batch.  ``with_extraction`` is the one place a
-frame is wired into it (batch pipeline, stream, entry queries).  Regexes
+crossing amortized per batch.  A frame is wired into it in one place,
+``_with_inputs``: ``with_extraction`` calls the UDF through Spark (the
+batch plan, stream, entry queries), and ``extraction_inputs`` feeds
+``run_extraction``'s bucket writer, which calls its body.  Regexes
 compile once per Python worker at module import (the per-executor
 singleton pattern; contrast the reference's per-request PaddleOCR
 construction, app.py:2163 — the single biggest throughput lever noted
@@ -389,23 +391,42 @@ CLAIM_COLS = [
 ]
 
 
+# fused_extract_udf's arguments, in call order
+UDF_INPUTS = ["text", "html", "doc_type", *CLAIM_COLS[:9]]
+_HTML_WHEN_NEEDED = "CASE WHEN text IS NULL OR length(text) = 0 THEN html END"
+
+
+def _with_inputs(df: DataFrame) -> DataFrame:
+    """``df`` with every input column it lacks as a null string."""
+    # SQL strings, and columns taken from the frame: fewer Py4J calls
+    # than the Column builders, for the same plan
+    missing = [f"CAST(NULL AS STRING) AS {c}" for c in UDF_INPUTS[1:] if c not in df.columns]
+    return df.selectExpr("*", *missing) if missing else df
+
+
 def with_extraction(df: DataFrame) -> DataFrame:
     """``df`` plus an ``extraction`` struct (``FULL_SCHEMA``) from one
-    ``fused_extract_udf`` call: the single way a frame feeds the fused
-    stage, for the batch pipeline, the stream and the entry queries.
+    ``fused_extract_udf`` call: the way a frame feeds the fused stage
+    through Spark, for the batch plan, the stream and the entry queries
+    (``run_extraction`` calls the same body from its writer, on
+    ``extraction_inputs``).
 
     ``html`` reaches the UDF only where ``text`` is null or empty (the
     C4-style lazy fallback), so the HTML parse runs only for rows
     without text.  An input column ``df`` lacks (``html``, ``doc_type``,
     a claim) is added to it as a null string: a null ``doc_type`` runs
     the PAN cascade, and a null claim scores no match."""
-    inputs = ["html", "doc_type", *CLAIM_COLS[:9]]
-    # SQL strings, and columns taken from the frame: fewer Py4J calls
-    # than the Column builders, for the same plan
-    missing = [f"CAST(NULL AS STRING) AS {c}" for c in inputs if c not in df.columns]
-    if missing:
-        df = df.selectExpr("*", *missing)
-    html_when_needed = F.expr("CASE WHEN text IS NULL OR length(text) = 0 THEN html END")
+    df = _with_inputs(df)
     return df.withColumn(
-        "extraction", fused_extract_udf(df["text"], html_when_needed, *[df[c] for c in inputs[1:]])
+        "extraction",
+        fused_extract_udf(df["text"], F.expr(_HTML_WHEN_NEEDED), *[df[c] for c in UDF_INPUTS[2:]]),
     )
+
+
+def extraction_inputs(df: DataFrame, keep: list[str]) -> DataFrame:
+    """The ``keep`` columns of ``df``, then ``UDF_INPUTS``: what
+    ``with_extraction`` hands ``fused_extract_udf``, with the same lazy
+    ``html`` and the same null-string defaults, for a body that calls
+    ``fused_extract_udf.func`` itself (``plans.bucket_writer``)."""
+    df = _with_inputs(df)
+    return df.selectExpr(*keep, "text", f"{_HTML_WHEN_NEEDED} AS html", *UDF_INPUTS[2:])

@@ -19,7 +19,11 @@ Spark job — SURVEY.md §3) with the scale contract of the north_rule:
   source), and clears whatever an uncommitted run left in the buckets
   it is about to write, making a kill at any point resumable without
   duplicates.
-- **write, then publish**: each run writes into a private
+- **write, then publish**: the fused Arrow stage writes each task's
+  bucket files itself (``plans/bucket_writer.py``: pyarrow, Spark's
+  footer metadata, one file per (partition, bucket), retried attempts
+  overwrite their own), driven by a ``noop`` write, so the extracted
+  rows never return to the JVM.  Each run writes into a private
   ``out_dir/_staging/<uuid>/`` and renames its files into
   ``extracted/``, so its new files are known without diffing the
   table, and runs on disjoint buckets can commit side by side.
@@ -46,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType, TimestampType
 
 # CLAIM_COLS is also imported from here (perfbench)
-from ocr_api_spark.operators.extract import CLAIM_COLS, with_extraction  # noqa: F401
+from ocr_api_spark.operators.extract import CLAIM_COLS, extraction_inputs, with_extraction  # noqa: F401
 
 
 # The bucket and salt of a row, as SQL: one parsed expression is one
@@ -189,7 +193,7 @@ def read_completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
     )
 
 
-def extraction_plan(
+def placed_inputs(
     pages: DataFrame,
     claims: DataFrame | None,
     n_buckets: int,
@@ -198,12 +202,12 @@ def extraction_plan(
     broadcast_claims: bool = True,
     buckets: list[int] | None = None,
 ) -> DataFrame:
-    """Build the logical plan: bucket+salt, repartition the *raw* pages
-    (parallelism for the UDF stage + alignment for the bucket-partitioned
-    sink — and the shuffle moves input bytes, not extracted structs),
-    left-join claims, then ``with_extraction``: resolve text (HTML branch
-    lazy), extract and match in one Arrow stage.  Without claims,
-    ``doc_type`` and every match are null.
+    """The pages a run extracts, placed and joined: bucket+salt,
+    repartition the *raw* pages (parallelism for the extraction stage +
+    alignment for the bucket-partitioned sink — and the shuffle moves
+    input bytes, not extracted structs), then left-join claims.  The
+    one code path for placement, bucket filter and claims join, under
+    ``extraction_plan`` and ``run_extraction`` both.
 
     ``buckets``: the buckets this plan writes (None: all of them).  The
     scan keeps only their rows; the filter tests the bucket expression
@@ -258,8 +262,27 @@ def extraction_plan(
     if claims is not None:
         right = F.broadcast(claims) if broadcast_claims else claims
         pages = pages.join(right, "url", "left")
+    return pages
+
+
+def extraction_plan(
+    pages: DataFrame,
+    claims: DataFrame | None,
+    n_buckets: int,
+    n_salts: int,
+    n_parts: int | None = None,
+    broadcast_claims: bool = True,
+    buckets: list[int] | None = None,
+) -> DataFrame:
+    """The extracted rows as a Spark plan: ``placed_inputs``, then
+    ``with_extraction``: resolve text (HTML branch lazy), extract and
+    match in one Arrow stage.  Without claims, ``doc_type`` and every
+    match are null.  The stream and the benchmarks build on it;
+    ``run_extraction`` writes the same rows from its own Arrow stage
+    (``plans.bucket_writer``)."""
+    placed = placed_inputs(pages, claims, n_buckets, n_salts, n_parts, broadcast_claims, buckets)
     # FULL_SCHEMA's field order is the output order after doc_type
-    return with_extraction(pages).selectExpr(
+    return with_extraction(placed).selectExpr(
         "url", "warc_ts", "lang", "bucket", "salt", "doc_type", "extraction.*"
     )
 
@@ -351,13 +374,14 @@ def _bucket_stats(new_files: set[str], wall_s: float) -> list[tuple]:
 def _publish(staging: str, out_path: str) -> set[str]:
     """Move a finished write's data files from its staging dir into the
     table, keeping their ``bucket=N/`` directories, then drop the
-    staging dir (Spark's ``_SUCCESS`` and ``.crc`` siblings go with it).
-    Spark's part names carry the write job's UUID, so they never
-    collide with files already in the table.  Rename is atomic on one
-    filesystem.  Published files are not yet committed: until the run's
-    manifest names them, a kill leaves them in buckets no manifest
-    lists, and the next run on those buckets deletes them before it
-    writes; a kill part-way also leaves the rest in staging
+    staging dir (hidden files go with it: a killed task attempt's temp
+    files, Spark's ``_SUCCESS`` and ``.crc``).  Part names carry the
+    write's UUID (the run's, or Spark's write job's for a compaction),
+    so they never collide with files already in the table.  Rename is
+    atomic on one filesystem.  Published files are not yet committed:
+    until the run's manifest names them, a kill leaves them in buckets
+    no manifest lists, and the next run on those buckets deletes them
+    before it writes; a kill part-way also leaves the rest in staging
     (``gc_orphans``)."""
     published = set()
     for src in _data_files(staging):
@@ -421,13 +445,15 @@ def run_extraction(
     # run_extraction_chunked passes each group in flight its share of
     # them as ``repartition``.
     n_parts = repartition or spark.sparkContext.defaultParallelism
-    plan = extraction_plan(pages, claims, n_buckets, n_salts, n_parts=n_parts, buckets=sorted(todo))
+    placed = placed_inputs(pages, claims, n_buckets, n_salts, n_parts=n_parts, buckets=sorted(todo))
+    inputs = extraction_inputs(placed, ["url", "warc_ts", "lang", "bucket", "salt"])
 
     # Metrics ride on the write with ZERO extra Spark jobs over the data:
-    # - one global observe() aggregate (rows out) — measured free (a
-    #   per-bucket observe with 2×n_buckets conditional sums costs ~75%
-    #   of the whole job: the observe accumulator evaluates every expr per
-    #   row, interpreted); it cross-checks the footer counts below;
+    # - one global observe() aggregate (rows in, one output row each) —
+    #   measured free (a per-bucket observe with 2×n_buckets conditional
+    #   sums costs ~75% of the whole job: the observe accumulator
+    #   evaluates every expr per row, interpreted); it cross-checks the
+    #   footer counts below;
     # - per-bucket counts from the parquet FOOTERS of only THIS run's new
     #   files (the ones it published from its staging dir), and per-bucket
     #   failed counts from a pyarrow read of just the dictionary-encoded
@@ -439,19 +465,29 @@ def run_extraction(
 
     from pyspark.sql import Observation
 
+    from ocr_api_spark.plans.bucket_writer import BucketWriter
+
     # unique name: two runs in flight on one session (the chunked
     # window) must never share an observation
-    obs = Observation(f"run_metrics_{uuid.uuid4().hex}")
-    plan = plan.observe(obs, F.expr("count(1) AS rows_out"))
+    run_id = uuid.uuid4().hex
+    obs = Observation(f"run_metrics_{run_id}")
+    inputs = inputs.observe(obs, F.expr("count(1) AS rows_out"))
 
-    # Write, then publish: the write goes to a staging dir only this run
-    # knows, so its files are exactly what the dir holds — no walk of the
-    # whole table, and a concurrent run on other buckets cannot leak into
-    # this run's commit.  Leading "_": table readers skip the dir, and a
-    # killed run's leftover is sink.verify_sink's "staging" (gc_orphans
-    # reclaims it).
-    staging = os.path.join(out_dir, "_staging", uuid.uuid4().hex)
-    plan.write.partitionBy("bucket").parquet(staging)
+    # Write, then publish: the tasks write the bucket files into a
+    # staging dir only this run knows, so its files are exactly what the
+    # dir holds — no walk of the whole table, and a concurrent run on
+    # other buckets cannot leak into this run's commit.  Leading "_":
+    # table readers skip the dir, and a killed run's leftover is
+    # sink.verify_sink's "staging" (gc_orphans reclaims it).  The fused
+    # stage writes its own output (plans/bucket_writer.py), and the noop
+    # sink only drives its tasks: the rows never return to the JVM.  No
+    # collect(): the driver finds the files in the staging dir, and
+    # PySpark leaves a collect's result socket to the garbage collector
+    # (a ResourceWarning in the caller).
+    staging = os.path.join(out_dir, "_staging", run_id)
+    writer = BucketWriter(spark, inputs.schema, staging, run_id)
+    os.makedirs(staging)
+    inputs.mapInArrow(writer, "bucket INT").write.format("noop").mode("overwrite").save()
     new_files = _publish(staging, out_path)
 
     m = obs.get
@@ -474,9 +510,10 @@ def run_extraction(
 
     footer_rows = sum(r[1] for r in stats_rows)
     if footer_rows != n_rows:
-        # the staging dir is private, so a mismatch means a data file was
-        # lost or added between the write and the publish; the rows are
-        # already committed, so surface it instead of failing the job
+        # the staging dir is private, so a mismatch means the writer lost
+        # rows, or a data file was lost or added between the write and
+        # the publish; the rows are already committed, so surface it
+        # instead of failing the job
         import warnings
 
         warnings.warn(
@@ -495,11 +532,14 @@ def run_extraction(
 
 
 # Bucket groups run_extraction_chunked keeps in flight.  Each group
-# spends ~half its wall in set-up with the cores idle (plan building,
-# the claims broadcast, the shuffle map; when these figures were taken,
-# also a range sample), and a second group's UDF/write job fills that
-# window: perfbench resume_chunked on 4 vCPUs, local[4], medians of 10
-# seeds, 3,364 → 4,355 docs/s.  Two is
+# spends about half its wall in set-up with the cores idle (plan
+# building, the claims broadcast, the shuffle map): its write job starts
+# 0.19 s into a 0.39 s group (4 of 16 buckets of 20,000 document rows,
+# 2 tasks, local[4], medians of 15; 0.23 of 0.66 s while Spark's parquet
+# writer wrote the files, and a range sample added to the set-up when
+# the figures below were taken).  A second group's UDF/write job fills
+# that window: perfbench resume_chunked on 4 vCPUs, local[4], medians
+# of 10 seeds, 3,364 → 4,355 docs/s.  Two is
 # the smallest width that overlaps one group's set-up with another's
 # run; a wider window adds in-flight broadcasts, memory and
 # redo-on-kill.  Re-measured with the workers on plans.worker_daemon,

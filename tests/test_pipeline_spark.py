@@ -659,6 +659,117 @@ def test_concurrent_writers_on_disjoint_buckets(session, synth, tmp_path, one_jo
     assert not os.listdir(os.path.join(out, "_staging"))
 
 
+def test_bucket_writer_retry_replaces_its_files(session, synth, tmp_path, monkeypatch):
+    """A retried attempt of a partition writes the same files over the
+    first attempt's, and a killed attempt's hidden temp file is neither
+    a data file nor published: staging holds one complete file per
+    (partition, bucket), and the published table no url twice.  The
+    retry cuts a row group per batch (a bucket larger than the
+    row-group size), and its files still hold every row."""
+    import pyarrow.parquet as pq
+
+    from ocr_api_spark.plans import bucket_writer, pipeline
+    from ocr_api_spark.plans.bucket_writer import BucketWriter
+
+    pages = pipeline.read_parquet(session, synth["pages"])
+    claims = pipeline.read_parquet(session, synth["claims"])
+    inputs = pipeline.extraction_inputs(
+        pipeline.placed_inputs(pages, claims, 8, 4), ["url", "warc_ts", "lang", "bucket", "salt"]
+    )
+    table = inputs.toArrow()
+    staging = tmp_path / "_staging" / "run"
+    writer = BucketWriter(session, inputs.schema, str(staging), "run")
+
+    first = writer.write(iter(table.to_batches(max_chunksize=64)), 3)
+    killed = staging / "bucket=0" / ".part-00003-run.parquet.0badc0de.tmp"
+    killed.write_bytes(b"PAR1 a torn row group")
+    monkeypatch.setattr(bucket_writer, "_ROW_GROUP_BYTES", 1)
+    second = writer.write(iter(table.to_batches(max_chunksize=100)), 3)
+
+    assert sorted(first) == sorted(second)
+    assert sorted(pipeline._data_files(str(staging))) == sorted(second)
+    buckets = table.column("bucket").to_pylist()
+    for path in second:
+        bucket = int(path.split("bucket=")[1].split("/")[0])
+        assert path.endswith("/part-00003-run.parquet")
+        footer = pq.ParquetFile(path).metadata
+        assert footer.num_rows == buckets.count(bucket) and footer.num_row_groups > 1
+
+    out = tmp_path / "extracted"
+    published = pipeline._publish(str(staging), str(out))
+    assert len(published) == len(set(buckets)) and not staging.exists()
+    urls = pq.read_table(str(out)).column("url").to_pylist()
+    assert len(urls) == len(set(urls)) == 300
+
+
+@pytest.fixture(scope="module")
+def every_branch(tmp_path_factory, synth):
+    """synth's HTML and OCR-text rows, plus %PDF rows (a text layer, a
+    compressed one, and one with no objects) and document rows whose
+    extractor fails."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_api_spark.sources.pdftext import pdf_from_text
+
+    d = tmp_path_factory.mktemp("every_branch")
+    pages, claims = pq.read_table(synth["pages"]), pq.read_table(synth["claims"])
+    ts = pages.column("warc_ts")[:1].to_pylist()
+    extra = [
+        ("https://pdf.example/a.pdf", pdf_from_text("PERMANENT ACCOUNT NUMBER ABCPS1234F NAME RAVI KUMAR"), None),
+        ("https://pdf.example/b.pdf", pdf_from_text("INCOME TAX DEPARTMENT GOVT OF INDIA", compress=True), None),
+        ("https://pdf.example/bad.pdf", b"%PDF-1.4 no objects here", None),
+        ("https://doc.example/dl1", None, "DRIVING LICENCE\nnothing"),
+        ("https://doc.example/dl2", None, "NAME: X\nno address"),
+    ]
+    rows = {c: [None] * len(extra) for c in pages.column_names}
+    rows.update(url=[u for u, _, _ in extra], html=[h for _, h, _ in extra],
+                text=[t for _, _, t in extra], warc_ts=ts * len(extra), lang=["en"] * len(extra))
+    failing = {c: [None] * 2 for c in claims.column_names}
+    failing.update(url=["https://doc.example/dl1", "https://doc.example/dl2"], doc_type=["dl", "dl"])
+    paths = {"pages": str(d / "pages.parquet"), "claims": str(d / "claims.parquet")}
+    pq.write_table(pa.concat_tables([pages, pa.Table.from_pydict(rows, schema=pages.schema)]), paths["pages"])
+    pq.write_table(pa.concat_tables([claims, pa.Table.from_pydict(failing, schema=claims.schema)]), paths["claims"])
+    return paths
+
+
+def test_run_extraction_rows_equal_extraction_plan(session, every_branch, tmp_path):
+    """The two sinks agree: the rows run_extraction publishes equal
+    extraction_plan's, every column, on HTML, %PDF, OCR-text and Failed
+    rows; Spark reads the files with the schema its own writer gives
+    the plan, and their footers carry Spark's row metadata and version
+    and the session's codec."""
+    import pyarrow.parquet as pq
+
+    from ocr_api_spark.plans import pipeline
+
+    out = str(tmp_path / "out")
+    pipeline.run_extraction(session, every_branch["pages"], every_branch["claims"], out, n_buckets=8, n_salts=4)
+    pages = pipeline.read_parquet(session, every_branch["pages"])
+    claims = pipeline.read_parquet(session, every_branch["claims"])
+    plan = pipeline.extraction_plan(pages, claims, 8, 4, n_parts=4)
+    spark_written = str(tmp_path / "spark_written")
+    plan.write.partitionBy("bucket").parquet(spark_written)
+
+    published = _sorted_rows(out + "/extracted")
+    expected = _sorted_rows(spark_written)
+    assert published.num_rows == 305
+    assert published.select(expected.column_names).to_pylist() == expected.to_pylist()
+    statuses = dict(zip(published.column("url").to_pylist(), published.column("status").to_pylist()))
+    assert statuses["https://pdf.example/a.pdf"] == statuses["https://pdf.example/b.pdf"] == "Completed"
+    assert "Failed" in {statuses["https://doc.example/dl1"], statuses["https://doc.example/dl2"]}
+    assert session.read.parquet(out + "/extracted").schema == session.read.parquet(spark_written).schema
+
+    ours = pq.ParquetFile(pipeline._data_files(out + "/extracted").pop())
+    theirs = pq.ParquetFile(pipeline._data_files(spark_written).pop())
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    assert ours.metadata.metadata[key] == theirs.metadata.metadata[key]
+    assert ours.metadata.metadata[b"org.apache.spark.version"] == session.version.encode()
+    assert ours.metadata.num_row_groups == 1
+    codec = session.conf.get("spark.sql.parquet.compression.codec").upper()
+    assert {ours.metadata.row_group(0).column(i).compression for i in range(ours.metadata.num_columns)} == {codec}
+
+
 def test_chunked_groups_inherit_the_callers_job_group(session, synth, tmp_path):
     """The caller's local properties reach every group's jobs: with a job
     group set, each job the chunked run starts belongs to that group,
