@@ -12,10 +12,12 @@ codec/shuffle costs, so the input is production-shaped: web-dominant
 Common-Crawl pages are tens of KB; the tiny doc fixtures would invert
 the Python/JVM cost ratio).  A small seeded base is generated once and
 replicated with distinct urls via Spark (per-row work identical).
-The timed job is the extraction plan → bucket-partitioned parquet sink,
-i.e. exactly the production dataflow (scan → broadcast claims join →
-boilerplate branch → extract UDF → match UDF → shuffle on
-(bucket, salt) → write).
+The timed job (mode ``full``, the default) is ``run_extraction`` with
+its defaults, the production dataflow: scan → placement shuffle on
+(bucket, salt) → broadcast claims join → the fused Arrow stage, which
+writes the bucket files → publish and commit.  Mode ``compute``
+(``SPARK_GRAFT_SCALE_MODE=compute``) aggregates ``extraction_plan``'s
+rows instead of writing them.
 
 Usage: python BENCH/scaling.py [n_base_rows] [replicate]
 Env: SPARK_GRAFT_SCALE_N (default 4) — compares local[N] vs local[4N].
@@ -33,7 +35,7 @@ import tempfile
 WORKER = r"""
 import json, os, shutil, sys, tempfile, time
 sys.path.insert(0, os.environ["SPARK_GRAFT_REPO"])
-from ocr_api_spark.plans.pipeline import extraction_plan
+from ocr_api_spark.plans.pipeline import extraction_plan, run_extraction
 from ocr_api_spark.plans.session import build_session
 
 cpus = int(sys.argv[1])
@@ -47,25 +49,27 @@ spark.sparkContext.setLogLevel("ERROR")
 mode = os.environ.get("SPARK_GRAFT_SCALE_MODE", "full")
 
 def job(out):
+    if mode != "compute":
+        return run_extraction(spark, pages_path, claims_path, out, n_buckets=32, n_salts=8)["rows"]
     pages = spark.read.parquet(pages_path)
     claims = spark.read.parquet(claims_path)
     plan = extraction_plan(pages, claims, 32, 8, n_parts=cpus * 4)
-    if mode == "compute":
-        # consume every extracted row WITHOUT the parquet sink: isolates
-        # UDF-compute scaling from the single-box codec/commit tail.
-        # (sum(length(...)) forces the UDF column; a bare count() would
-        # let Spark prune the extraction entirely.)
-        from pyspark.sql import functions as F
-        plan.agg(F.sum(F.length("extracted_text")), F.count("status")).collect()
-    else:
-        plan.write.mode("overwrite").partitionBy("bucket").parquet(out)
+    # consume every extracted row WITHOUT the parquet sink: isolates
+    # UDF-compute scaling from the single-box codec/commit tail.
+    # (sum(length(...)) forces the UDF column; a bare count() would
+    # let Spark prune the extraction entirely.)
+    from pyspark.sql import functions as F
+    plan.agg(F.sum(F.length("extracted_text")), F.count("status")).collect()
 
 # warmup on a slice: JVM stages + Python worker pool
 warm = tempfile.mkdtemp(prefix="scale_warm_", dir="/dev/shm")
-pages = spark.read.parquet(pages_path).limit(20000)
-claims = spark.read.parquet(claims_path)
-extraction_plan(pages, claims, 32, 8, n_parts=cpus) \
-    .write.mode("overwrite").partitionBy("bucket").parquet(warm + "/x")
+if mode == "compute":
+    pages = spark.read.parquet(pages_path).limit(20000)
+    claims = spark.read.parquet(claims_path)
+    extraction_plan(pages, claims, 32, 8, n_parts=cpus) \
+        .write.mode("overwrite").partitionBy("bucket").parquet(warm + "/x")
+else:  # one bucket of 32
+    run_extraction(spark, pages_path, claims_path, warm, n_buckets=32, n_salts=8, buckets=[0])
 shutil.rmtree(warm, ignore_errors=True)
 
 def cpu_stat():
@@ -74,15 +78,16 @@ def cpu_stat():
     vals = [int(x) for x in parts[1:]]
     return sum(vals), vals[7] if len(vals) > 7 else 0  # total ticks, steal ticks
 
-out = tempfile.mkdtemp(prefix=f"scale_out_{cpus}_", dir="/dev/shm") + "/extracted"
+out = tempfile.mkdtemp(prefix=f"scale_out_{cpus}_", dir="/dev/shm")
 tot0, steal0 = cpu_stat()
 t0 = time.time()
-job(out)
+n = job(out)
 wall = time.time() - t0
 tot1, steal1 = cpu_stat()
 steal_pct = round(100.0 * (steal1 - steal0) / max(tot1 - tot0, 1), 2)
-n = spark.read.parquet(out).count() if mode != "compute" else spark.read.parquet(pages_path).count()
-shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+if mode == "compute":
+    n = spark.read.parquet(pages_path).count()
+shutil.rmtree(out, ignore_errors=True)
 print(json.dumps({"cpus": cpus, "rows": n, "wall_s": round(wall, 3),
                   "docs_per_sec": round(n / wall, 2), "host_steal_pct": steal_pct}))
 spark.stop()

@@ -35,9 +35,12 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructT
 
 from ocr_api_spark.operators.extract import FULL_SCHEMA, UDF_INPUTS, fused_extract_udf
 
-# the input columns a file keeps, before the fused stage's fields;
-# ``bucket`` is the directory, as Spark's partitionBy writes it
-PASSED = ["url", "warc_ts", "lang", "salt", "doc_type"]
+# The input columns the output keeps, in order, before the fused
+# stage's fields: ``extraction_plan``'s columns, and ``run_extraction``'s
+# inputs.  A file holds all but ``bucket``, which is its directory, as
+# Spark's partitionBy writes it.
+PASSED = ["url", "warc_ts", "lang", "bucket", "salt", "doc_type"]
+_IN_FILE = [c for c in PASSED if c != "bucket"]
 
 # Spark's codec names → pyarrow's (Spark's "lz4" is Hadoop's framing,
 # which pyarrow writes as LZ4_RAW; Spark reads both)
@@ -103,26 +106,18 @@ def spark_row_metadata(schema: StructType) -> str:
 # adds ``ARROW:schema``: the arrow schema, Spark's JSON inside it, base64
 # encoded, ~9 KB more per file here (pyarrow 18 adds
 # ``ParquetWriter.add_key_value_metadata``).  So the footer is written
-# without it, and the two keys are put into the footer's thrift
+# without it, and the two keys are appended to the footer's thrift
 # ``FileMetaData`` as its field 5, ``key_value_metadata: list<KeyValue>``,
-# in the compact protocol (the parquet format's encoding).
+# in the compact protocol (the parquet format's encoding).  A compact
+# struct may hold its fields in any order, since readers dispatch on the
+# field id, so the field goes after pyarrow's, just before the struct's
+# closing stop byte, with the long-form header that names its id.
 
-_STOP, _TRUE, _FALSE, _BYTE, _DOUBLE, _BINARY, _LIST, _SET, _MAP, _STRUCT = 0, 1, 2, 3, 7, 8, 9, 10, 11, 12
+_LIST, _STRUCT = 9, 12
 _KEY_VALUE_METADATA = 5
 
 
-def _varint(buf: bytes, pos: int) -> tuple[int, int]:
-    value = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        value |= (b & 0x7F) << shift
-        if b < 0x80:
-            return value, pos
-        shift += 7
-
-
-def _encode_varint(n: int) -> bytes:
+def _varint(n: int) -> bytes:
     out = bytearray()
     while n >= 0x80:
         out.append(n & 0x7F | 0x80)
@@ -131,84 +126,22 @@ def _encode_varint(n: int) -> bytes:
     return bytes(out)
 
 
-def _skip(buf: bytes, pos: int, ttype: int, in_field: bool) -> int:
-    """The position after one value of compact type ``ttype``.  A bool
-    field holds its value in the field header; a bool element takes a
-    byte."""
-    if ttype in (_TRUE, _FALSE):
-        return pos if in_field else pos + 1
-    if ttype == _BYTE:
-        return pos + 1
-    if ttype == _DOUBLE:
-        return pos + 8
-    if ttype == _BINARY:
-        n, pos = _varint(buf, pos)
-        return pos + n
-    if ttype in (_LIST, _SET):
-        size, etype = buf[pos] >> 4, buf[pos] & 0x0F
-        pos += 1
-        if size == 15:
-            size, pos = _varint(buf, pos)
-        for _ in range(size):
-            pos = _skip(buf, pos, etype, False)
-        return pos
-    if ttype == _MAP:
-        size, pos = _varint(buf, pos)
-        if size:
-            ktype, vtype = buf[pos] >> 4, buf[pos] & 0x0F
-            pos += 1
-            for _ in range(size):
-                pos = _skip(buf, _skip(buf, pos, ktype, False), vtype, False)
-        return pos
-    if ttype == _STRUCT:
-        while True:
-            header = buf[pos]
-            pos += 1
-            if header == _STOP:
-                return pos
-            if header >> 4 == 0:  # long form: the field id follows
-                _, pos = _varint(buf, pos)
-            pos = _skip(buf, pos, header & 0x0F, True)
-    # i16, i32, i64: zigzag varints
-    return _varint(buf, pos)[1]
-
-
-def _field_header(field_id: int, last: int, ttype: int) -> bytes:
-    delta = field_id - last
-    if 0 < delta <= 15:
-        return bytes([delta << 4 | ttype])
-    return bytes([ttype]) + _encode_varint(field_id << 1)  # zigzag of a positive i16
-
-
 def _with_key_value_metadata(footer: bytes, metadata: dict[str, str]) -> bytes:
-    """``footer`` (a thrift ``FileMetaData``) with ``metadata`` as its
-    key-value metadata, which it must not already have."""
+    """``footer`` (a thrift ``FileMetaData`` without key-value metadata)
+    with the fewer than 15 entries of ``metadata`` appended as field 5."""
+    if footer[-1:] != b"\x00" or len(metadata) >= 15:
+        raise ValueError("not a footer, or more entries than a short list header holds")
+    # the long-form field header (the type, then the id as a zigzag
+    # varint), then the list header (the size, then the element type)
+    head = bytes([_LIST]) + _varint(_KEY_VALUE_METADATA << 1) + bytes([len(metadata) << 4 | _STRUCT])
+    # a KeyValue: binary fields 1 (key) and 2 (value), each one id past
+    # the last, then the stop byte
     entries = b"".join(
-        b"\x18" + _encode_varint(len(k)) + k + b"\x18" + _encode_varint(len(v)) + v + b"\x00"
+        b"\x18" + _varint(len(k)) + k + b"\x18" + _varint(len(v)) + v + b"\x00"
         for k, v in ((k.encode(), v.encode()) for k, v in metadata.items())
     )
-    n = len(metadata)
-    list_header = bytes([n << 4 | _STRUCT]) if n < 15 else bytes([0xF0 | _STRUCT]) + _encode_varint(n)
-    pos = last = 0
-    while True:
-        header = footer[pos]
-        ttype, start = header & 0x0F, pos
-        pos += 1
-        if header == _STOP:
-            field_id = None
-        elif header >> 4:
-            field_id = last + (header >> 4)
-        else:
-            zigzag, pos = _varint(footer, pos)
-            field_id = zigzag >> 1
-        if field_id == _KEY_VALUE_METADATA:
-            raise ValueError("the footer already holds key-value metadata")
-        if field_id is None or field_id > _KEY_VALUE_METADATA:
-            inserted = _field_header(_KEY_VALUE_METADATA, last, _LIST) + list_header + entries
-            following = bytes([_STOP]) if field_id is None else _field_header(field_id, _KEY_VALUE_METADATA, ttype)
-            return footer[:start] + inserted + following + footer[pos:]
-        pos = _skip(footer, pos, ttype, True)
-        last = field_id
+    # in place of the footer's stop byte, then the stop byte back
+    return footer[:-1] + head + entries + b"\x00"
 
 
 def add_footer_metadata(path: str, metadata: dict[str, str]) -> None:
@@ -275,8 +208,8 @@ class _BucketFile:
 
 class BucketWriter:
     """The ``mapInArrow`` body of a run: built on the driver from the
-    session and the schema of the frame it maps (``PASSED`` columns,
-    ``bucket`` and ``UDF_INPUTS``), called per task with its batches.
+    session and the schema of the frame it maps (``PASSED`` columns
+    and ``UDF_INPUTS``), called per task with its batches.
     It writes files and yields no rows."""
 
     def __init__(self, spark, schema: StructType, staging: str, run_id: str):
@@ -292,7 +225,7 @@ class BucketWriter:
             "write_statistics": _STATISTICS,
             "store_schema": False,
         }
-        data_schema = StructType([schema[c] for c in PASSED] + list(FULL_SCHEMA.fields))
+        data_schema = StructType([schema[c] for c in _IN_FILE] + list(FULL_SCHEMA.fields))
         self.metadata = {
             "org.apache.spark.sql.parquet.row.metadata": spark_row_metadata(data_schema),
             "org.apache.spark.version": spark.version,
@@ -330,8 +263,8 @@ class BucketWriter:
                 args = [ser.arrow_to_pandas(batch.column(c), i) for i, c in enumerate(UDF_INPUTS)]
                 result = ser._create_batch((fused_extract_udf.func(*args), return_type)).column(0)
                 table = pa.Table.from_arrays(
-                    [batch.column(c) for c in PASSED] + result.flatten(),
-                    names=PASSED + FULL_SCHEMA.fieldNames(),
+                    [batch.column(c) for c in _IN_FILE] + result.flatten(),
+                    names=_IN_FILE + FULL_SCHEMA.fieldNames(),
                 )
                 buckets = batch.column("bucket")
                 for b in pc.unique(buckets).to_pylist():

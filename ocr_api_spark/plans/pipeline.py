@@ -29,10 +29,12 @@ Spark job — SURVEY.md §3) with the scale contract of the north_rule:
   table, and runs on disjoint buckets can commit side by side.
   ``run_extraction_chunked`` keeps two bucket groups in flight, each
   on its share of the cores; a kill redoes at most those two groups.
-- **claims join**: left join on url.  ``extraction_plan`` broadcasts
-  the claims (``F.broadcast``) unless told not to; at production scale
-  they are bucketed the same way as the pages and joined without a
-  shuffle.
+- **claims join**: left join on url, through ``F.broadcast``.
+  ``run_extraction`` (and so ``scripts/run_extraction_job.py``) always
+  broadcasts the claims.  Only ``placed_inputs`` and ``extraction_plan``
+  take ``broadcast_claims=False``, which over tables bucketed by url
+  the same way (``bucketBy``, ``n_parts=None``) joins without a shuffle
+  (``tests/test_bucketed_join.py``).
 - **driver set-up**: ``read_parquet`` takes each input's schema from one
   parquet footer, so a run starts no schema-inference job, and the plan
   is built from SQL expressions in few Py4J calls.
@@ -50,7 +52,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType, TimestampType
 
 # CLAIM_COLS is also imported from here (perfbench)
-from ocr_api_spark.operators.extract import CLAIM_COLS, extraction_inputs, with_extraction  # noqa: F401
+from ocr_api_spark.operators.extract import CLAIM_COLS, UDF_INPUTS, extraction_inputs, with_extraction  # noqa: F401
+from ocr_api_spark.plans.bucket_writer import PASSED, BucketWriter
 
 
 # The bucket and salt of a row, as SQL: one parsed expression is one
@@ -236,8 +239,9 @@ def placed_inputs(
     never their content.
 
     ``broadcast_claims``: claims are per-url facts, joined through
-    ``F.broadcast`` by default; at 10^12 scale disable this and
-    co-bucket both tables so the join is shuffle-free."""
+    ``F.broadcast`` by default (``run_extraction`` always broadcasts);
+    ``False`` over pages and claims tables bucketed by url the same way
+    (``bucketBy``) and ``n_parts=None`` makes the join shuffle-free."""
     n_buckets, n_salts = int(n_buckets), int(n_salts)
     ranked = None if buckets is None else sorted({int(b) for b in buckets})
     if ranked == list(range(n_buckets)):
@@ -277,14 +281,12 @@ def extraction_plan(
     """The extracted rows as a Spark plan: ``placed_inputs``, then
     ``with_extraction``: resolve text (HTML branch lazy), extract and
     match in one Arrow stage.  Without claims, ``doc_type`` and every
-    match are null.  The stream and the benchmarks build on it;
-    ``run_extraction`` writes the same rows from its own Arrow stage
-    (``plans.bucket_writer``)."""
+    match are null.  The benchmarks build on it (the stream calls
+    ``with_extraction`` itself); ``run_extraction`` writes the same rows
+    from its own Arrow stage (``plans.bucket_writer``)."""
     placed = placed_inputs(pages, claims, n_buckets, n_salts, n_parts, broadcast_claims, buckets)
-    # FULL_SCHEMA's field order is the output order after doc_type
-    return with_extraction(placed).selectExpr(
-        "url", "warc_ts", "lang", "bucket", "salt", "doc_type", "extraction.*"
-    )
+    # PASSED, then FULL_SCHEMA's fields in their order
+    return with_extraction(placed).selectExpr(*PASSED, "extraction.*")
 
 
 def dedupe_pages(pages: DataFrame) -> DataFrame:
@@ -321,9 +323,11 @@ def _data_files(out_path: str) -> set[str]:
 
 def _bucket_stats(new_files: set[str], wall_s: float) -> list[tuple]:
     """(bucket, rows_out, rows_failed, wall_s) per bucket touched by this
-    run: row counts from parquet footers (no data read); failed counts
-    from row-group ``status`` statistics when they decide (min==max),
-    falling back to a single-column read only for mixed row groups."""
+    run: the bucket from each file's own ``bucket=N`` directory (not
+    one further up its path); row counts from parquet footers (no data
+    read); failed counts from row-group ``status`` statistics when they
+    decide (min==max), falling back to a single-column read only for
+    mixed row groups."""
     import re as _re
     from concurrent.futures import ThreadPoolExecutor
 
@@ -331,7 +335,7 @@ def _bucket_stats(new_files: set[str], wall_s: float) -> list[tuple]:
     import pyarrow.parquet as pq
 
     def one(path: str) -> tuple[int, int, int] | None:
-        mm = _re.search(r"bucket=(\d+)", path)
+        mm = _re.fullmatch(r"bucket=(\d+)", os.path.basename(os.path.dirname(path)))
         if not mm:
             return None
         b = int(mm.group(1))
@@ -446,7 +450,7 @@ def run_extraction(
     # them as ``repartition``.
     n_parts = repartition or spark.sparkContext.defaultParallelism
     placed = placed_inputs(pages, claims, n_buckets, n_salts, n_parts=n_parts, buckets=sorted(todo))
-    inputs = extraction_inputs(placed, ["url", "warc_ts", "lang", "bucket", "salt"])
+    inputs = extraction_inputs(placed, [c for c in PASSED if c not in UDF_INPUTS])
 
     # Metrics ride on the write with ZERO extra Spark jobs over the data:
     # - one global observe() aggregate (rows in, one output row each) —
@@ -464,8 +468,6 @@ def run_extraction(
     import uuid
 
     from pyspark.sql import Observation
-
-    from ocr_api_spark.plans.bucket_writer import BucketWriter
 
     # unique name: two runs in flight on one session (the chunked
     # window) must never share an observation

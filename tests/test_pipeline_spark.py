@@ -353,6 +353,21 @@ def test_bucket_stats_footer_and_mixed_statuses(tmp_path):
     assert stats == [(3, 19, 9, 1.0), (7, 7, 0, 1.0)]
 
 
+def test_bucket_is_the_files_own_directory(session, synth, tmp_path):
+    """A run whose output lies under a directory named ``bucket=N``
+    commits each file to the bucket of its own directory, not to N."""
+    from ocr_api_spark.plans import pipeline
+    from ocr_api_spark.plans.sink import read_manifests
+
+    out = str(tmp_path / "bucket=9" / "out")
+    pipeline.run_extraction(session, synth["pages"], synth["claims"], out, n_buckets=4, n_salts=2)
+    (manifest,) = read_manifests(out)
+    dirs = {int(f.split("/")[0].removeprefix("bucket=")) for f in manifest["files"]}
+    assert dirs == {0, 1, 2, 3}
+    assert sorted(b["bucket"] for b in manifest["buckets"]) == sorted(dirs)
+    assert sum(b["rows_out"] for b in manifest["buckets"]) == 300
+
+
 def test_chunked_run_kill_between_commits_resumes(session, synth, tmp_path, monkeypatch):
     """run_extraction_chunked commits a manifest per bucket group, so a
     crash between commits loses at most the two in-flight groups: a
@@ -739,6 +754,7 @@ def test_run_extraction_rows_equal_extraction_plan(session, every_branch, tmp_pa
     rows; Spark reads the files with the schema its own writer gives
     the plan, and their footers carry Spark's row metadata and version
     and the session's codec."""
+    import duckdb
     import pyarrow.parquet as pq
 
     from ocr_api_spark.plans import pipeline
@@ -760,11 +776,16 @@ def test_run_extraction_rows_equal_extraction_plan(session, every_branch, tmp_pa
     assert "Failed" in {statuses["https://doc.example/dl1"], statuses["https://doc.example/dl2"]}
     assert session.read.parquet(out + "/extracted").schema == session.read.parquet(spark_written).schema
 
-    ours = pq.ParquetFile(pipeline._data_files(out + "/extracted").pop())
+    our_file = pipeline._data_files(out + "/extracted").pop()
+    ours = pq.ParquetFile(our_file)
     theirs = pq.ParquetFile(pipeline._data_files(spark_written).pop())
     key = b"org.apache.spark.sql.parquet.row.metadata"
     assert ours.metadata.metadata[key] == theirs.metadata.metadata[key]
     assert ours.metadata.metadata[b"org.apache.spark.version"] == session.version.encode()
+    assert set(ours.metadata.metadata) == {key, b"org.apache.spark.version"}
+    # DuckDB decodes the footer's thrift with its own code
+    kv = duckdb.execute("SELECT key, value FROM parquet_kv_metadata(?)", [our_file]).fetchall()
+    assert dict(kv) == ours.metadata.metadata
     assert ours.metadata.num_row_groups == 1
     codec = session.conf.get("spark.sql.parquet.compression.codec").upper()
     assert {ours.metadata.row_group(0).column(i).compression for i in range(ours.metadata.num_columns)} == {codec}
