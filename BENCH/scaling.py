@@ -19,6 +19,12 @@ writes the bucket files → publish and commit.  Mode ``compute``
 (``SPARK_GRAFT_SCALE_MODE=compute``) aggregates ``extraction_plan``'s
 rows instead of writing them.
 
+Shared memory is RAM, so nothing stays there after a run: each worker
+gets its own directory under ``/dev/shm`` (Spark's ``spark.local.dir``,
+the warm-up's and the timed job's output), removed once the worker has
+stopped Spark and exited, and the replicated input is removed when
+``main`` exits.  The seeded base input stays cached on disk.
+
 Usage: python BENCH/scaling.py [n_base_rows] [replicate]
 Env: SPARK_GRAFT_SCALE_N (default 4) — compares local[N] vs local[4N].
 """
@@ -31,19 +37,19 @@ import shutil
 import subprocess
 import sys
 import tempfile
+from contextlib import contextmanager
+
+SHM = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
 WORKER = r"""
-import json, os, shutil, sys, tempfile, time
+import json, os, sys, time
 sys.path.insert(0, os.environ["SPARK_GRAFT_REPO"])
 from ocr_api_spark.plans.pipeline import extraction_plan, run_extraction
 from ocr_api_spark.plans.session import build_session
 
-cpus = int(sys.argv[1])
-pages_path = sys.argv[2]
-claims_path = sys.argv[3]
-os.makedirs("/dev/shm/spark_local", exist_ok=True)
+cpus, pages_path, claims_path, work = int(sys.argv[1]), sys.argv[2], sys.argv[3], sys.argv[4]
 spark = build_session(app_name=f"scaling-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus,
-                      extra_conf={"spark.local.dir": "/dev/shm/spark_local"})
+                      extra_conf={"spark.local.dir": work + "/spark_local"})
 spark.sparkContext.setLogLevel("ERROR")
 
 mode = os.environ.get("SPARK_GRAFT_SCALE_MODE", "full")
@@ -62,15 +68,13 @@ def job(out):
     plan.agg(F.sum(F.length("extracted_text")), F.count("status")).collect()
 
 # warmup on a slice: JVM stages + Python worker pool
-warm = tempfile.mkdtemp(prefix="scale_warm_", dir="/dev/shm")
 if mode == "compute":
     pages = spark.read.parquet(pages_path).limit(20000)
     claims = spark.read.parquet(claims_path)
     extraction_plan(pages, claims, 32, 8, n_parts=cpus) \
-        .write.mode("overwrite").partitionBy("bucket").parquet(warm + "/x")
+        .write.mode("overwrite").partitionBy("bucket").parquet(work + "/warm")
 else:  # one bucket of 32
-    run_extraction(spark, pages_path, claims_path, warm, n_buckets=32, n_salts=8, buckets=[0])
-shutil.rmtree(warm, ignore_errors=True)
+    run_extraction(spark, pages_path, claims_path, work + "/warm", n_buckets=32, n_salts=8, buckets=[0])
 
 def cpu_stat():
     with open("/proc/stat") as f:
@@ -78,16 +82,14 @@ def cpu_stat():
     vals = [int(x) for x in parts[1:]]
     return sum(vals), vals[7] if len(vals) > 7 else 0  # total ticks, steal ticks
 
-out = tempfile.mkdtemp(prefix=f"scale_out_{cpus}_", dir="/dev/shm")
 tot0, steal0 = cpu_stat()
 t0 = time.time()
-n = job(out)
+n = job(work + "/out")
 wall = time.time() - t0
 tot1, steal1 = cpu_stat()
 steal_pct = round(100.0 * (steal1 - steal0) / max(tot1 - tot0, 1), 2)
 if mode == "compute":
     n = spark.read.parquet(pages_path).count()
-shutil.rmtree(out, ignore_errors=True)
 print(json.dumps({"cpus": cpus, "rows": n, "wall_s": round(wall, 3),
                   "docs_per_sec": round(n / wall, 2), "host_steal_pct": steal_pct}))
 spark.stop()
@@ -114,14 +116,25 @@ spark.stop()
 """
 
 
-def main() -> None:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+@contextmanager
+def shm_dir(prefix: str):
+    """A new directory under ``/dev/shm``, removed on exit however the
+    work in it ended (a worker that failed or was killed included)."""
+    work = tempfile.mkdtemp(prefix=prefix, dir=SHM)
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+@contextmanager
+def replicated_input(repo: str, n_base: int, replicate: int):
+    """The scaling input under ``/dev/shm``: a seeded base of ``n_base``
+    heavy pages (cached on disk across runs), replicated ``replicate``
+    times with distinct urls.  Yields its directory and removes it on
+    exit."""
     sys.path.insert(0, repo)
     from ocr_api_spark.sources.pages import write_pages
-
-    n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 5000
-    replicate = int(sys.argv[2]) if len(sys.argv) > 2 else 60
-    env = dict(os.environ, SPARK_GRAFT_REPO=repo)
 
     base = os.path.join(tempfile.gettempdir(), f"spark_graft_pages_scalebase_heavy_{n_base}")
     if not os.path.exists(os.path.join(base, "_DONE")):
@@ -129,29 +142,38 @@ def main() -> None:
         write_pages(base, n_rows=n_base, seed=42, web_fraction=0.9, heavy_pages=True)
         open(os.path.join(base, "_DONE"), "w").write("ok")
 
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    big = os.path.join(shm, f"spark_graft_scaling_heavy_{n_base}x{replicate}")
-    if not os.path.exists(os.path.join(big, "_DONE")):
-        shutil.rmtree(big, ignore_errors=True)
+    with shm_dir(f"spark_graft_scaling_heavy_{n_base}x{replicate}_") as big:
         subprocess.run(
             [sys.executable, "-c", BUILD_INPUT, f"{base}/pages.parquet", f"{base}/claims.parquet", big, str(replicate)],
-            env=env,
+            env=dict(os.environ, SPARK_GRAFT_REPO=repo),
             check=True,
         )
-        open(os.path.join(big, "_DONE"), "w").write("ok")
+        yield big
 
+
+def main() -> None:
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 5000
+    replicate = int(sys.argv[2]) if len(sys.argv) > 2 else 60
+    with replicated_input(repo, n_base, replicate) as big:
+        run_levels(repo, big)
+
+
+def run_levels(repo: str, big: str) -> None:
+    env = dict(os.environ, SPARK_GRAFT_REPO=repo)
     n_small = int(os.environ.get("SPARK_GRAFT_SCALE_N", "4"))
     n_trials = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "3"))
     n_big = n_small * 4
 
     def run_level(cpus: int) -> dict:
-        out = subprocess.run(
-            [sys.executable, "-c", WORKER, str(cpus), f"{big}/pages.parquet", f"{big}/claims.parquet"],
-            capture_output=True,
-            text=True,
-            env=env,
-            check=True,
-        )
+        with shm_dir(f"scale_{cpus}_") as work:
+            out = subprocess.run(
+                [sys.executable, "-c", WORKER, str(cpus), f"{big}/pages.parquet", f"{big}/claims.parquet", work],
+                capture_output=True,
+                text=True,
+                env=env,
+                check=True,
+            )
         line = out.stdout.strip().splitlines()[-1]
         print(line)
         return json.loads(line)

@@ -18,6 +18,19 @@ Two topologies (r6):
   N and 4N executors of a real cluster, so it UNDERSTATES real
   scaling (r5 measured 0.715 in this mode vs 0.843 for threads).
 
+The timed job is ``run_extraction`` over 32 buckets and 8 salts with
+``repartition`` set to the plan's partition count: the production
+dataflow, placement shuffle included.  ``SPARK_GRAFT_PREBUCKETED=1``
+times ``extraction_plan(n_parts=None)`` written through Spark's
+``partitionBy`` writer instead, over a bucket-laid-out copy of the
+input: ``run_extraction`` cannot skip its placement shuffle (ROADMAP
+item 13), so only the plan shows the job without one.
+
+The input is ``BENCH/scaling.py``'s, built under ``/dev/shm`` for the
+run and removed when it exits, with the bucket-laid-out copy; each
+worker's ``spark.local.dir`` is its own and removed after
+``spark.stop()``.
+
 Usage: python BENCH/scaling_cluster.py [n_base_rows] [replicate]
 Env: SPARK_GRAFT_CLUSTER_MODE = same-size | grow-exec
      SPARK_GRAFT_SCALE_TRIALS (default 2)
@@ -29,17 +42,18 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
+
+# BENCH/scaling.py: this script's directory is first on sys.path
+from scaling import replicated_input, shm_dir
 
 WORKER = r"""
-import json, os, shutil, sys, tempfile, time
+import json, os, sys, time
 sys.path.insert(0, os.environ["SPARK_GRAFT_REPO"])
 from pyspark.sql import SparkSession
 
 n_exec, exec_cores, exec_mem = int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3])
-pages_path, claims_path, pyzip = sys.argv[4], sys.argv[5], sys.argv[6]
+pages_path, claims_path, pyzip, work = sys.argv[4], sys.argv[5], sys.argv[6], sys.argv[7]
 cores = n_exec * exec_cores
-os.makedirs("/dev/shm/spark_local", exist_ok=True)
 # Partitioning: by default both levels use the SAME partition counts,
 # sized for the 4N level (data-derived partitioning, what a real
 # N->4N migration keeps constant).  Per-level cores*k sizing
@@ -58,7 +72,7 @@ builder = (
     .config("spark.sql.shuffle.partitions", str(shuffle_parts))
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-    .config("spark.local.dir", "/dev/shm/spark_local")
+    .config("spark.local.dir", work + "/spark_local")
     .config("spark.ui.enabled", "false")
     .config("spark.submit.pyFiles", pyzip)
 )
@@ -101,7 +115,7 @@ if os.environ.get("SPARK_GRAFT_APC", "1") == "1":
 spark = builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 spark.sparkContext.addPyFile(pyzip)
-from ocr_api_spark.plans.pipeline import extraction_plan
+from ocr_api_spark.plans.pipeline import extraction_plan, run_extraction
 
 # Pre-bucketed mode (r7): the input is already laid out by url-hash
 # bucket (the production Iceberg PARTITIONED BY (bucket) posture), so
@@ -109,16 +123,20 @@ from ocr_api_spark.plans.pipeline import extraction_plan
 # value as a projection and the job has NO shuffle at all (claims stay
 # broadcast).  Contrast with the default mode isolates how much of the
 # executor-scaling loss is the one-box inter-JVM shuffle transport.
+# It times extraction_plan through Spark's partitionBy writer, not
+# run_extraction: run_extraction always places rows with a shuffle
+# (ROADMAP item 13).
 prebucketed = os.environ.get("SPARK_GRAFT_PREBUCKETED", "0") == "1"
 
-def job(out, pages):
-    claims = spark.read.parquet(claims_path)
-    plan = extraction_plan(pages, claims, 32, 8, n_parts=None if prebucketed else n_parts)
-    plan.write.mode("overwrite").partitionBy("bucket").parquet(out)
-
-warm = tempfile.mkdtemp(prefix="scale_warm_", dir="/dev/shm")
-job(warm + "/x", spark.read.parquet(pages_path).limit(20000))
-shutil.rmtree(warm, ignore_errors=True)
+def job(out, warm=False):
+    if prebucketed:
+        pages = spark.read.parquet(pages_path)
+        plan = extraction_plan(pages.limit(20000) if warm else pages, spark.read.parquet(claims_path), 32, 8,
+                               n_parts=None)
+        plan.write.mode("overwrite").partitionBy("bucket").parquet(out + "/extracted")
+    else:  # the warm-up runs one bucket of 32
+        run_extraction(spark, pages_path, claims_path, out, n_buckets=32, n_salts=8, repartition=n_parts,
+                       buckets=[0] if warm else None)
 
 def cpu_stat():
     with open("/proc/stat") as f:
@@ -154,11 +172,11 @@ def jvm_counters():
             continue
     return out
 
-out = tempfile.mkdtemp(prefix=f"scale_out_{n_exec}_", dir="/dev/shm") + "/extracted"
+job(work + "/warm", warm=True)
 jc0 = jvm_counters()
 tot0, st0 = cpu_stat()
 t0 = time.time()
-job(out, spark.read.parquet(pages_path))
+job(work + "/out")
 wall = time.time() - t0
 tot1, st1 = cpu_stat()
 jc1 = jvm_counters()
@@ -170,8 +188,7 @@ for pid, c in sorted(jc1.items()):
         jvms.append({"jvm_cpu_s": round(d / 100.0, 1), "threads": c["threads"]})
     else:
         py_cpu += d / 100.0
-n = spark.read.parquet(out).count()
-shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+n = spark.read.parquet(work + "/out/extracted").count()
 print(json.dumps({"executors": n_exec, "exec_cores": exec_cores, "rows": n,
                   "wall_s": round(wall, 3),
                   "docs_per_sec": round(n / wall, 2),
@@ -190,6 +207,32 @@ def _md5_probe_work(n: int) -> None:
         h = hashlib.md5(h).digest()
 
 
+def prebucket(pages: str, pre: str) -> str:
+    """Stage the corpus once as bucket-partitioned parquet under ``pre``,
+    spread over (bucket, salt) files so the scan alone provides the UDF
+    stage's parallelism — the sandbox stand-in for an Iceberg table
+    PARTITIONED BY (bucket).  Returns its pages path."""
+    from pyspark.sql import SparkSession
+
+    from ocr_api_spark.plans.pipeline import with_bucket, with_salt
+
+    s = (
+        SparkSession.builder.master("local[8]")
+        .appName("prebucket-stage")
+        .config("spark.driver.memory", "24g")
+        .config("spark.sql.shuffle.partitions", "64")
+        .config("spark.local.dir", os.path.join(pre, "spark_local"))
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    staged = with_salt(with_bucket(s.read.parquet(pages), 32), 8)
+    staged.repartition(64, "bucket", "salt").drop("salt").write.mode(
+        "overwrite"
+    ).partitionBy("bucket").parquet(os.path.join(pre, "pages.parquet"))
+    s.stop()
+    return os.path.join(pre, "pages.parquet")
+
+
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
@@ -198,48 +241,21 @@ def main() -> None:
     pyzip = build_zip(repo)
     n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 5000
     replicate = int(sys.argv[2]) if len(sys.argv) > 2 else 60
-    env = dict(os.environ, SPARK_GRAFT_REPO=repo)
+    with replicated_input(repo, n_base, replicate) as big, shm_dir("spark_graft_prebucketed_") as pre:
+        pages = f"{big}/pages.parquet"
+        if os.environ.get("SPARK_GRAFT_PREBUCKETED", "0") == "1":
+            pages = prebucket(pages, pre)
+        run_levels(repo, pyzip, pages, f"{big}/claims.parquet")
 
+
+def run_levels(repo: str, pyzip: str, pages: str, claims: str) -> None:
+    env = dict(os.environ, SPARK_GRAFT_REPO=repo)
     mode = os.environ.get("SPARK_GRAFT_CLUSTER_MODE", "same-size")
     if mode == "same-size":
         # 1-core executors, 2 GB each: 4 vs 16 JVMs
         levels = [(4, 1, 2048), (16, 1, 2048)]
     else:
         levels = [(1, 4, 8192), (4, 4, 8192)]
-
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    big = os.path.join(shm, f"spark_graft_scaling_heavy_{n_base}x{replicate}")
-    if not os.path.exists(os.path.join(big, "_DONE")):
-        raise SystemExit(f"run BENCH/scaling.py once first to build {big}")
-
-    pages_arg = f"{big}/pages.parquet"
-    if os.environ.get("SPARK_GRAFT_PREBUCKETED", "0") == "1":
-        # stage the corpus once as bucket-partitioned parquet, spread
-        # over (bucket, salt) files so the scan alone provides the UDF
-        # stage's parallelism — the sandbox stand-in for an Iceberg
-        # table PARTITIONED BY (bucket)
-        pre = big + "_prebucketed"
-        if not os.path.exists(os.path.join(pre, "_DONE")):
-            from pyspark.sql import SparkSession
-
-            from ocr_api_spark.plans.pipeline import with_bucket, with_salt
-
-            s = (
-                SparkSession.builder.master("local[8]")
-                .appName("prebucket-stage")
-                .config("spark.driver.memory", "24g")
-                .config("spark.sql.shuffle.partitions", "64")
-                .config("spark.local.dir", "/dev/shm/spark_local")
-                .config("spark.ui.enabled", "false")
-                .getOrCreate()
-            )
-            staged = with_salt(with_bucket(s.read.parquet(pages_arg), 32), 8)
-            staged.repartition(64, "bucket", "salt").drop("salt").write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(os.path.join(pre, "pages.parquet"))
-            s.stop()
-            open(os.path.join(pre, "_DONE"), "w").write("ok")
-        pages_arg = os.path.join(pre, "pages.parquet")
 
     n_trials = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "2"))
     records: dict[int, list[dict]] = {levels[0][0]: [], levels[1][0]: []}
@@ -283,13 +299,13 @@ def main() -> None:
 
     def run_level(n_exec: int, c: int, mem: int, probe_ratio: float) -> dict | None:
         nonlocal rows
-        out = subprocess.run(
-            [sys.executable, "-c", WORKER, str(n_exec), str(c), str(mem),
-             pages_arg, f"{big}/claims.parquet", pyzip],
-            capture_output=True,
-            text=True,
-            env=env,
-        )
+        with shm_dir(f"scale_cluster_{n_exec}_") as work:
+            out = subprocess.run(
+                [sys.executable, "-c", WORKER, str(n_exec), str(c), str(mem), pages, claims, pyzip, work],
+                capture_output=True,
+                text=True,
+                env=env,
+            )
         if out.returncode != 0:
             # a lost executor during an ambient burst kills one
             # trial — drop it, keep the session (median over the

@@ -11,10 +11,16 @@ decoded the UDF's Arrow result into rows, sorted them by bucket for
 ``partitionBy`` and encoded them with parquet-mr, ~0.25 s of every
 ~1.1 s run over ``crawl_table(4000)`` on ``local[4]``.
 
-The files read as Spark's writer's would: each footer carries Spark's
-JSON for the data schema (``org.apache.spark.sql.parquet.row.metadata``)
-and ``org.apache.spark.version``, and the codec is the session's
-``spark.sql.parquet.compression.codec``.
+The files are plain pyarrow parquet: no ``ARROW:schema`` and no Spark
+keys in the footer, so ``spark.read.parquet`` and
+``pipeline.read_parquet`` take their schema from the parquet types, as
+they do for any pyarrow-written input, and read the schema Spark's own
+writer gives these rows.  The codec is the session's
+``spark.sql.parquet.compression.codec``.  With no
+``org.apache.spark.version`` in the footer, Spark applies a session's
+``spark.sql.parquet.datetimeRebaseModeInRead`` of ``LEGACY`` or
+``EXCEPTION`` to timestamps before 1900 in these files, as it does to
+the pyarrow-written inputs.
 
 A task writes ``bucket=N/part-<partition id>-<run id>.parquet`` under a
 hidden temp name and renames it into place when it is complete, so a
@@ -27,11 +33,8 @@ dir.
 from __future__ import annotations
 
 import contextlib
-import json
 import os
 import uuid
-
-from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ocr_api_spark.operators.extract import FULL_SCHEMA, UDF_INPUTS, fused_extract_udf
 
@@ -74,101 +77,21 @@ _DICTIONARY = [
 # more than they could prune.  Bytes of a 16-bucket output (zstd),
 # Spark's writer → statistics on every column → on every column but
 # extracted_text → these: 2,000 mixed pages 624 → 662 → 625 → 570 KB;
-# 20,000 document rows 1,937 → 1,994 → 1,982 → 1,927 KB.
+# 20,000 document rows 1,937 → 1,994 → 1,982 → 1,927 KB.  The pyarrow
+# figures held Spark's footer keys, ~3.9 KB a file; without them the
+# mixed pages take 507 KB.
 _STATISTICS = ["url", "warc_ts", "lang", "salt", "doc_type", "status", "error"]
 # A bucket's rows become one row group, cut at parquet-mr's row-group
 # size (``parquet.block.size``) so a task's memory stays bounded.
 _ROW_GROUP_BYTES = 128 << 20
 
 
-def _nullable(dt: DataType) -> DataType:
-    """``dt`` with every field, element and value nullable, as Spark
-    writes a file source's schema."""
-    if isinstance(dt, StructType):
-        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt])
-    if isinstance(dt, ArrayType):
-        return ArrayType(_nullable(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
-    return dt
-
-
-def spark_row_metadata(schema: StructType) -> str:
-    """Spark's JSON for ``schema`` as its parquet writer puts it in the
-    footer: compact, keys in Scala's order (``jsonValue``'s insertion
-    order; ``StructType.json`` sorts them)."""
-    return json.dumps(_nullable(schema).jsonValue(), separators=(",", ":"))
-
-
-# --- footer key-value metadata ----------------------------------------------
-#
-# pyarrow 16 writes key-value metadata only with ``store_schema``, which
-# adds ``ARROW:schema``: the arrow schema, Spark's JSON inside it, base64
-# encoded, ~9 KB more per file here (pyarrow 18 adds
-# ``ParquetWriter.add_key_value_metadata``).  So the footer is written
-# without it, and the two keys are appended to the footer's thrift
-# ``FileMetaData`` as its field 5, ``key_value_metadata: list<KeyValue>``,
-# in the compact protocol (the parquet format's encoding).  A compact
-# struct may hold its fields in any order, since readers dispatch on the
-# field id, so the field goes after pyarrow's, just before the struct's
-# closing stop byte, with the long-form header that names its id.
-
-_LIST, _STRUCT = 9, 12
-_KEY_VALUE_METADATA = 5
-
-
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while n >= 0x80:
-        out.append(n & 0x7F | 0x80)
-        n >>= 7
-    out.append(n)
-    return bytes(out)
-
-
-def _with_key_value_metadata(footer: bytes, metadata: dict[str, str]) -> bytes:
-    """``footer`` (a thrift ``FileMetaData`` without key-value metadata)
-    with the fewer than 15 entries of ``metadata`` appended as field 5."""
-    if footer[-1:] != b"\x00" or len(metadata) >= 15:
-        raise ValueError("not a footer, or more entries than a short list header holds")
-    # the long-form field header (the type, then the id as a zigzag
-    # varint), then the list header (the size, then the element type)
-    head = bytes([_LIST]) + _varint(_KEY_VALUE_METADATA << 1) + bytes([len(metadata) << 4 | _STRUCT])
-    # a KeyValue: binary fields 1 (key) and 2 (value), each one id past
-    # the last, then the stop byte
-    entries = b"".join(
-        b"\x18" + _varint(len(k)) + k + b"\x18" + _varint(len(v)) + v + b"\x00"
-        for k, v in ((k.encode(), v.encode()) for k, v in metadata.items())
-    )
-    # in place of the footer's stop byte, then the stop byte back
-    return footer[:-1] + head + entries + b"\x00"
-
-
-def add_footer_metadata(path: str, metadata: dict[str, str]) -> None:
-    """Rewrite the footer of the parquet file at ``path`` in place with
-    ``metadata`` as its key-value metadata."""
-    with open(path, "r+b") as f:
-        f.seek(-8, os.SEEK_END)
-        tail = f.read(8)
-        if tail[4:] != b"PAR1":
-            raise ValueError(f"{path} is not a parquet file")
-        length = int.from_bytes(tail[:4], "little")
-        start = f.seek(-8 - length, os.SEEK_END)
-        footer = _with_key_value_metadata(f.read(length), metadata)
-        f.seek(start)
-        f.write(footer + len(footer).to_bytes(4, "little") + b"PAR1")
-        f.truncate()
-
-
-# --- the writer ---------------------------------------------------------------
-
-
 class _BucketFile:
     """One (partition, bucket) file: row groups go to a hidden temp file,
     renamed to ``path`` once complete."""
 
-    def __init__(self, path: str, options: dict, metadata: dict[str, str]):
-        self.path, self.options, self.metadata = path, options, metadata
+    def __init__(self, path: str, options: dict):
+        self.path, self.options = path, options
         self.tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.{uuid.uuid4().hex[:8]}.tmp")
         self.tables, self.nbytes, self.writer = [], 0, None
 
@@ -193,7 +116,6 @@ class _BucketFile:
         if self.tables:
             self._flush()
         self.writer.close()
-        add_footer_metadata(self.tmp, self.metadata)
         os.replace(self.tmp, self.path)
         return self.path
 
@@ -207,12 +129,11 @@ class _BucketFile:
 
 
 class BucketWriter:
-    """The ``mapInArrow`` body of a run: built on the driver from the
-    session and the schema of the frame it maps (``PASSED`` columns
-    and ``UDF_INPUTS``), called per task with its batches.
-    It writes files and yields no rows."""
+    """The ``mapInArrow`` body of a run over a frame of ``PASSED`` columns
+    and ``UDF_INPUTS``: built on the driver from the session, called per
+    task with its batches.  It writes files and yields no rows."""
 
-    def __init__(self, spark, schema: StructType, staging: str, run_id: str):
+    def __init__(self, spark, staging: str, run_id: str):
         conf = spark.conf
         codec = conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
         if codec not in _CODECS:
@@ -224,11 +145,6 @@ class BucketWriter:
             "use_dictionary": _DICTIONARY,
             "write_statistics": _STATISTICS,
             "store_schema": False,
-        }
-        data_schema = StructType([schema[c] for c in _IN_FILE] + list(FULL_SCHEMA.fields))
-        self.metadata = {
-            "org.apache.spark.sql.parquet.row.metadata": spark_row_metadata(data_schema),
-            "org.apache.spark.version": spark.version,
         }
         # as PySpark's worker builds the serializer of a scalar pandas UDF
         self.timezone = conf.get("spark.sql.session.timeZone")
@@ -270,7 +186,7 @@ class BucketWriter:
                 for b in pc.unique(buckets).to_pylist():
                     if b not in files:
                         path = os.path.join(self.staging, f"bucket={b}", name)
-                        files[b] = _BucketFile(path, self.options, self.metadata)
+                        files[b] = _BucketFile(path, self.options)
                     files[b].add(table.filter(pc.equal(buckets, b)))
             return [f.close() for f in files.values()]
         except BaseException:

@@ -20,10 +20,10 @@ Spark job — SURVEY.md §3) with the scale contract of the north_rule:
   it is about to write, making a kill at any point resumable without
   duplicates.
 - **write, then publish**: the fused Arrow stage writes each task's
-  bucket files itself (``plans/bucket_writer.py``: pyarrow, Spark's
-  footer metadata, one file per (partition, bucket), retried attempts
-  overwrite their own), driven by a ``noop`` write, so the extracted
-  rows never return to the JVM.  Each run writes into a private
+  bucket files itself (``plans/bucket_writer.py``: pyarrow, one file
+  per (partition, bucket), retried attempts overwrite their own),
+  driven by a ``noop`` write, so the extracted rows never return to
+  the JVM.  Each run writes into a private
   ``out_dir/_staging/<uuid>/`` and renames its files into
   ``extracted/``, so its new files are known without diffing the
   table, and runs on disjoint buckets can commit side by side.
@@ -413,7 +413,13 @@ def run_extraction(
     ``buckets``: restrict this invocation to the given bucket ids (the
     url-hash bucket is deterministic, so a filtered run commits exactly
     those buckets, the empty ones included).  ``run_extraction_chunked``
-    uses this to bound the blast radius of a mid-flight failure."""
+    uses this to bound the blast radius of a mid-flight failure.  An id
+    outside ``[0, n_buckets)`` raises ``ValueError`` before the run reads
+    a manifest or clears a bucket, since no url hashes to it and
+    committing it would count a bucket that does not exist."""
+    outside = sorted({int(b) for b in buckets or ()} - set(range(n_buckets)))
+    if outside:
+        raise ValueError(f"buckets {outside} are outside [0, {n_buckets})")
     t0 = time.time()
     pages = read_parquet(spark, pages_path)
     claims = read_parquet(spark, claims_path) if claims_path else None
@@ -487,7 +493,7 @@ def run_extraction(
     # PySpark leaves a collect's result socket to the garbage collector
     # (a ResourceWarning in the caller).
     staging = os.path.join(out_dir, "_staging", run_id)
-    writer = BucketWriter(spark, inputs.schema, staging, run_id)
+    writer = BucketWriter(spark, staging, run_id)
     os.makedirs(staging)
     inputs.mapInArrow(writer, "bucket INT").write.format("noop").mode("overwrite").save()
     new_files = _publish(staging, out_path)

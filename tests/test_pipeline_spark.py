@@ -693,7 +693,7 @@ def test_bucket_writer_retry_replaces_its_files(session, synth, tmp_path, monkey
     )
     table = inputs.toArrow()
     staging = tmp_path / "_staging" / "run"
-    writer = BucketWriter(session, inputs.schema, str(staging), "run")
+    writer = BucketWriter(session, str(staging), "run")
 
     first = writer.write(iter(table.to_batches(max_chunksize=64)), 3)
     killed = staging / "bucket=0" / ".part-00003-run.parquet.0badc0de.tmp"
@@ -751,44 +751,70 @@ def every_branch(tmp_path_factory, synth):
 def test_run_extraction_rows_equal_extraction_plan(session, every_branch, tmp_path):
     """The two sinks agree: the rows run_extraction publishes equal
     extraction_plan's, every column, on HTML, %PDF, OCR-text and Failed
-    rows; Spark reads the files with the schema its own writer gives
-    the plan, and their footers carry Spark's row metadata and version
-    and the session's codec."""
+    rows.  The footers hold no key-value metadata, and the files carry
+    the session's codec; Spark's reader and ``read_parquet`` still read
+    the schema Spark's own writer gives the plan, also where
+    ``inferTimestampNTZ`` is off (the setting under which a Spark-written
+    footer's schema JSON, not the parquet type, could decide
+    ``warc_ts``'s type)."""
     import duckdb
     import pyarrow.parquet as pq
 
     from ocr_api_spark.plans import pipeline
 
-    out = str(tmp_path / "out")
-    pipeline.run_extraction(session, every_branch["pages"], every_branch["claims"], out, n_buckets=8, n_salts=4)
-    pages = pipeline.read_parquet(session, every_branch["pages"])
-    claims = pipeline.read_parquet(session, every_branch["claims"])
-    plan = pipeline.extraction_plan(pages, claims, 8, 4, n_parts=4)
-    spark_written = str(tmp_path / "spark_written")
-    plan.write.partitionBy("bucket").parquet(spark_written)
+    infer_ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    default = session.conf.get(infer_ntz)
+    for run, setting in enumerate((default, "false")):
+        session.conf.set(infer_ntz, setting)
+        try:
+            out = str(tmp_path / str(run) / "out")
+            pipeline.run_extraction(session, every_branch["pages"], every_branch["claims"], out, n_buckets=8, n_salts=4)
+            pages = pipeline.read_parquet(session, every_branch["pages"])
+            claims = pipeline.read_parquet(session, every_branch["claims"])
+            plan = pipeline.extraction_plan(pages, claims, 8, 4, n_parts=4)
+            spark_written = str(tmp_path / str(run) / "spark_written")
+            plan.write.partitionBy("bucket").parquet(spark_written)
 
-    published = _sorted_rows(out + "/extracted")
-    expected = _sorted_rows(spark_written)
-    assert published.num_rows == 305
-    assert published.select(expected.column_names).to_pylist() == expected.to_pylist()
-    statuses = dict(zip(published.column("url").to_pylist(), published.column("status").to_pylist()))
-    assert statuses["https://pdf.example/a.pdf"] == statuses["https://pdf.example/b.pdf"] == "Completed"
-    assert "Failed" in {statuses["https://doc.example/dl1"], statuses["https://doc.example/dl2"]}
-    assert session.read.parquet(out + "/extracted").schema == session.read.parquet(spark_written).schema
+            published = _sorted_rows(out + "/extracted")
+            expected = _sorted_rows(spark_written)
+            # Spark writes a zoned timestamp as INT96, which pyarrow reads
+            # as nanoseconds without the zone
+            ts = expected.schema.get_field_index("warc_ts")
+            expected = expected.set_column(ts, "warc_ts", expected["warc_ts"].cast(published["warc_ts"].type))
+            assert published.num_rows == 305
+            assert published.select(expected.column_names).to_pylist() == expected.to_pylist()
+            statuses = dict(zip(published.column("url").to_pylist(), published.column("status").to_pylist()))
+            assert statuses["https://pdf.example/a.pdf"] == statuses["https://pdf.example/b.pdf"] == "Completed"
+            assert "Failed" in {statuses["https://doc.example/dl1"], statuses["https://doc.example/dl2"]}
+            spark_schema = session.read.parquet(spark_written).schema
+            assert session.read.parquet(out + "/extracted").schema == spark_schema
+            assert pipeline.read_parquet(session, out + "/extracted").schema == spark_schema
+        finally:
+            session.conf.set(infer_ntz, default)
 
-    our_file = pipeline._data_files(out + "/extracted").pop()
-    ours = pq.ParquetFile(our_file)
-    theirs = pq.ParquetFile(pipeline._data_files(spark_written).pop())
-    key = b"org.apache.spark.sql.parquet.row.metadata"
-    assert ours.metadata.metadata[key] == theirs.metadata.metadata[key]
-    assert ours.metadata.metadata[b"org.apache.spark.version"] == session.version.encode()
-    assert set(ours.metadata.metadata) == {key, b"org.apache.spark.version"}
-    # DuckDB decodes the footer's thrift with its own code
-    kv = duckdb.execute("SELECT key, value FROM parquet_kv_metadata(?)", [our_file]).fetchall()
-    assert dict(kv) == ours.metadata.metadata
-    assert ours.metadata.num_row_groups == 1
-    codec = session.conf.get("spark.sql.parquet.compression.codec").upper()
-    assert {ours.metadata.row_group(0).column(i).compression for i in range(ours.metadata.num_columns)} == {codec}
+        codec = session.conf.get("spark.sql.parquet.compression.codec").upper()
+        for f in pipeline._data_files(out + "/extracted"):
+            footer = pq.ParquetFile(f).metadata
+            assert footer.metadata is None
+            # DuckDB decodes the footer's thrift with its own code
+            assert duckdb.execute("SELECT key, value FROM parquet_kv_metadata(?)", [f]).fetchall() == []
+            assert footer.num_row_groups == 1
+            assert {footer.row_group(0).column(i).compression for i in range(footer.num_columns)} == {codec}
+
+
+def test_run_extraction_rejects_buckets_outside_the_range(session, synth, tmp_path):
+    """A bucket id no url hashes to is refused before the run reads a
+    manifest or clears a bucket: committed, it would count as a
+    completed bucket that does not exist."""
+    from ocr_api_spark.plans import pipeline
+
+    out = tmp_path / "out"
+    leftover = out / "extracted" / "bucket=3" / "part-left.parquet"
+    leftover.parent.mkdir(parents=True)
+    leftover.write_bytes(b"left by a killed run")
+    with pytest.raises(ValueError, match=r"\[-1, 99\] are outside \[0, 16\)"):
+        pipeline.run_extraction(session, synth["pages"], synth["claims"], str(out), n_buckets=16, buckets=[99, -1, 3])
+    assert not (out / "_snapshots").exists() and leftover.exists()
 
 
 def test_chunked_groups_inherit_the_callers_job_group(session, synth, tmp_path):

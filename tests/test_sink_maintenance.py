@@ -83,6 +83,8 @@ def test_compact_bucket_reduces_files_and_keeps_rows(session, sink):
     urls_before = {
         r["url"] for r in session.read.parquet(os.path.join(base, f"bucket={bucket}")).select("url").collect()
     }
+    table_before = session.read.parquet(base)
+    schema_before, table_rows_before = table_before.schema, table_before.orderBy("url").collect()
 
     res = compact_bucket(session, out, bucket, target_mb=128)
     assert res["compacted"] and res["files_after"] < res["files_before"]
@@ -90,6 +92,11 @@ def test_compact_bucket_reduces_files_and_keeps_rows(session, sink):
     after = session.read.parquet(os.path.join(base, f"bucket={bucket}"))
     assert after.count() == rows_before
     assert {r["url"] for r in after.select("url").collect()} == urls_before
+    # a Spark-written file in this bucket, the run's pyarrow files in
+    # the others: the table reads the same schema and rows, every column
+    table_after = session.read.parquet(base)
+    assert table_after.schema == schema_before
+    assert table_after.orderBy("url").collect() == table_rows_before
     # manifests reconcile: replaced files are no longer "missing"
     v = verify_sink(out)
     assert v["orphans"] == [] and v["missing"] == []
